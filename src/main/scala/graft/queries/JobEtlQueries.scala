@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * against a DuckDB oracle that re-implements the same cascades over the
   * same deterministic fixture (JobsFixture over orders).
   *
-  * Scale shape: every query is scan → one codegen'd projection (the whole
-  * regex cascade folds into a single map stage) → at most one hash
-  * aggregate shuffle. No joins, no windows, no state.
+  * Scale shape: every query is scan → codegen'd projections in a single
+  * map stage (JobEtl projects each salary number once, so the regex
+  * cascade runs once per row) → at most one hash aggregate shuffle. No
+  * joins, no windows, no state.
   */
 object JobEtlQueries {
 

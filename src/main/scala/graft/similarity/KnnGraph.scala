@@ -755,24 +755,21 @@ object KnnGraph {
   }
 
   /** Dedup-aware mergeable top-k: k-bounded buffers of DISTINCT
-    * neighbors ordered by (cos DESC, nbr ASC) under [[nanSafeCompare]]
-    * — exactly the `row_number` window ordering [[tighten]] replaces.
+    * neighbors ordered by [[bestFirst]] (cos DESC under
+    * [[nanSafeCompare]], then nbr ASC) — exactly the `row_number` window
+    * ordering [[tighten]] replaces.
     * Requires (and the tighten pipeline guarantees) that every
     * occurrence of an id within a group carries the same cos. */
   private final class TopKDedup(k: Int) extends
       org.apache.spark.sql.expressions.Aggregator[
         (Long, Double), Seq[(Long, Double)], Seq[(Long, Double)]] {
-    private def before(a: (Long, Double), b: (Long, Double)): Boolean = {
-      val c = nanSafeCompare(b._2, a._2)
-      c < 0 || (c == 0 && a._1 < b._1)
-    }
     private def trim(s: Seq[(Long, Double)]): Seq[(Long, Double)] =
-      s.distinctBy(_._1).sortWith(before).take(k)
+      s.distinctBy(_._1).sorted(bestFirst).take(k)
     override def zero: Seq[(Long, Double)] = Seq.empty
     override def reduce(b: Seq[(Long, Double)],
         a: (Long, Double)): Seq[(Long, Double)] =
       if (b.exists(_._1 == a._1)) b
-      else if (b.size < k || before(a, b.last)) trim(b :+ a)
+      else if (b.size < k || bestFirst.lt(a, b.last)) trim(b :+ a)
       else b
     override def merge(x: Seq[(Long, Double)],
         y: Seq[(Long, Double)]): Seq[(Long, Double)] = trim(x ++ y)
@@ -2983,14 +2980,20 @@ object KnnGraph {
     dot / math.sqrt(nx * ny)
   }
 
-  /** Spark's descending double ordering (NaN greatest → first under
-    * DESC), then ascending node — the row_number tie-break both
-    * distributed loops use. */
-  private def keepTopK(cands: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] =
-    cands.sortWith { case ((na, ca), (nb, cb)) =>
-      val c = java.lang.Double.compare(cb, ca)
-      c < 0 || (c == 0 && na < nb)
-    }.take(k)
+  /** (node, cos) by cos DESC under [[nanSafeCompare]] (NaN greatest →
+    * first, -0.0 == 0.0), then node ASC — the `row_number` ordering
+    * both distributed loops use. */
+  private[graft] val bestFirst: Ordering[(Long, Double)] =
+    new Ordering[(Long, Double)] {
+      def compare(a: (Long, Double), b: (Long, Double)): Int = {
+        val c = nanSafeCompare(b._2, a._2)
+        if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+      }
+    }
+
+  /** The k best candidates under [[bestFirst]]. */
+  private[graft] def keepTopK(cands: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] =
+    cands.sorted(bestFirst).take(k)
 
   /** LOW-LATENCY serving head: the beam state (≤ |Q|·(1+rounds·k)
     * (node, cos) rows) lives on the COORDINATOR; the cluster serves
@@ -3026,17 +3029,18 @@ object KnnGraph {
       // default entries come from the store's own `_graft_entries`
       // sidecar (≤slots rows, erase-aware, every writeVectors store
       // carries one; loud error when absent): each query warm-starts at
-      // its best representative by the same (cosine, -node) rule the
-      // streamed insert uses. The earlier fallback synthesized
-      // floorMod(qid·37+1, n), which assumes DENSE ids 0..n-1 — on a
-      // store with sparse or erased ids the synthesized node may not
-      // exist, and the beam then starts at a phantom: it dedups but
-      // never answers, silently returning few or zero rows
-      // (StoredGraphSpec's sparse-id test pins the fixed behavior).
+      // its best representative under [[bestFirst]] (cosine DESC, then
+      // node ASC) — the rule the streamed insert uses. The earlier
+      // fallback synthesized floorMod(qid·37+1, n), which assumes DENSE
+      // ids 0..n-1 — on a store with sparse or erased ids the
+      // synthesized node may not exist, and the beam then starts at a
+      // phantom: it dedups but never answers, silently returning few or
+      // zero rows (StoredGraphSpec's sparse-id test pins the fixed
+      // behavior).
       val reps = hashEntries(spark, vecPath)
       queries.map { case (qid, qvec) =>
-        qid -> reps.maxBy { case (node, cv) =>
-          (cosineLocal(qvec, cv), -node) }._1
+        qid -> reps.map { case (node, cv) => node -> cosineLocal(qvec, cv) }
+          .min(bestFirst)._1
       }.toMap
     }
     // one relation resolution per request batch for each store; every

@@ -1,7 +1,9 @@
 package graft.etl
 
 import graft.TestSpark
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,6 +28,36 @@ class ParserPropertySpec extends AnyFunSuite {
     if (n >= 1000) n / 1000000.0
     else if (n > 100 && n < 1000) n / 1000.0
     else n.toDouble
+
+  /** Unicode garbage over the cascade's own alphabet. */
+  private val garbage: Gen[String] = Gen.oneOf(
+    Gen.asciiPrintableStr,
+    Gen.listOfN(12, Gen.oneOf('ệ', 'ộ', '-', '$', '9', ' ', 'm', 't', 'r', '.')).map(_.mkString))
+
+  /** Salary texts over every cascade branch: bare ranges, USD, the
+    * "tr/triệu/m" million keywords, '.'/',' separators and decimals,
+    * magnitudes up to 5e7, garbage, and null. */
+  private val salaryText: Gen[Option[String]] = {
+    def grouped(n: Long, sep: Char) = f"$n%,d".replace(',', sep)
+    val forms: Seq[(Long, Long) => String] = Seq(
+      (a, b) => s"$a - $b",
+      (a, b) => s"$a - $b USD",
+      (a, b) => s"$$$a - $$$b",
+      (a, _) => s"Up to $a usd",
+      (a, b) => s"$a - $b triệu",
+      (a, _) => s"Từ $a tr",
+      (a, b) => s"${a}m - ${b}m",
+      (a, b) => s"${grouped(a, '.')} - ${grouped(b, '.')}",
+      (a, b) => s"${grouped(a, ',')} - ${grouped(b, ',')} VND",
+      (a, b) => s"${a % 100},5 - ${b % 100}.5 triệu",
+      (a, b) => s"${a % 100}.${b % 10} - ${b % 100} m")
+    val form: Gen[String] = for {
+      a <- Gen.chooseNum(0L, 50000000L)
+      b <- Gen.chooseNum(0L, 50000000L)
+      f <- Gen.oneOf(forms)
+    } yield f(a, b)
+    Gen.frequency(8 -> form.map(Some(_)), 1 -> garbage.map(Some(_)), 1 -> Gen.const(None))
+  }
 
   test("salary ranges 'A - B' parse to unit-inferred (min,max,avg) for any magnitudes") {
     import spark.implicits._
@@ -78,9 +110,7 @@ class ParserPropertySpec extends AnyFunSuite {
 
   test("the parser never throws on arbitrary unicode garbage") {
     import spark.implicits._
-    val gen = Gen.listOfN(150, Gen.oneOf(
-      Gen.asciiPrintableStr,
-      Gen.listOfN(12, Gen.oneOf('ệ', 'ộ', '-', '$', '9', ' ', 'm', 't', 'r', '.')).map(_.mkString)))
+    val gen = Gen.listOfN(150, garbage)
     val prop = Prop.forAllNoShrink(gen) { texts =>
       val n = texts.toDF("salary")
         .select(
@@ -91,5 +121,58 @@ class ParserPropertySpec extends AnyFunSuite {
       n == texts.length
     }
     check(prop)
+  }
+
+  test("JobEtl.transform's staged salary columns equal the composed SalaryParser columns bit for bit") {
+    val schema = StructType(StructField("row", LongType) +: JobSchema.schema.fields)
+    val names = JobSchema.schema.fieldNames
+    val prop = Prop.forAllNoShrink(Gen.listOfN(300, salaryText)) { texts =>
+      val rows = texts.zipWithIndex.map { case (salary, i) =>
+        val fields = names.map {
+          case "job_title"  => s"Job $i"
+          case "salary"     => salary.orNull
+          case "experience" => "1 - 3 năm"
+          case "event_time" => "2024-03-01 10:00:00"
+          case "salary_min" | "salary_max" => null
+          case _            => "x"
+        }
+        Row.fromSeq(i.toLong +: fields.toSeq)
+      }
+      // an RDD source, not a local relation: the projection runs through
+      // whole-stage codegen instead of being folded at optimization
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      def bits(r: Row, i: Int): Option[Long] =
+        if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+      def byRow(out: DataFrame) =
+        out.collect().map(r => r.getLong(0) -> ((bits(r, 1), bits(r, 2), bits(r, 3)))).toMap
+      val staged = byRow(JobEtl.transform(df, deterministicId = true)
+        .select("row", "salary_min", "salary_max", "salary_avg"))
+      val composed = byRow(df
+        .select(col("row"),
+          SalaryParser.salaryMin(col("salary")).as("mn"),
+          SalaryParser.salaryMax(col("salary")).as("mx"))
+        .withColumn("avg", SalaryParser.salaryAvg(col("mn"), col("mx"))))
+      staged.size == texts.size && staged == composed
+    }
+    check(prop)
+  }
+
+  test("JobEtl.transform's output schema keeps its names, order and types") {
+    val in = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], JobSchema.schema)
+    def nameTypes(deterministicId: Boolean) =
+      JobEtl.transform(in, deterministicId).schema.map(f => f.name -> f.dataType)
+    val want = Seq(
+      "job_title" -> StringType, "job_type" -> StringType,
+      "position_level" -> StringType, "city" -> StringType,
+      "experience" -> StringType, "skills" -> StringType,
+      "job_fields" -> StringType, "salary" -> StringType,
+      "salary_min" -> DoubleType, "salary_max" -> DoubleType,
+      "unit" -> StringType, "event_time" -> TimestampType,
+      "event_type" -> StringType, "salary_avg" -> DoubleType,
+      "exp_min_year" -> DoubleType, "exp_max_year" -> DoubleType,
+      "exp_avg_year" -> DoubleType, "exp_type" -> StringType,
+      "id" -> StringType)
+    assert(nameTypes(deterministicId = true) == want)
+    assert(nameTypes(deterministicId = false) == want)
   }
 }
