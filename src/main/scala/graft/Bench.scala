@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: runs every registered query on SPARK_GRAFT_SF_DIR
   * and prints one JSON line.
@@ -16,20 +15,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // parity with Sessions.local (r17): shuffle files free only when
-      // their RDDs are GC'd — over a 250-query pass dead shuffle state
-      // otherwise accumulates on the one local disk and the tail
-      // queries pay it; same config protects shuffle dirs on a cluster
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Sessions.local("graft-bench", cpus)
     // JVM/codegen warm-up outside the timed region: without this the first
     // query absorbs ~5-8 s of JIT + classloading and the per-query numbers
     // misattribute engine cost
@@ -57,10 +44,8 @@ object Bench {
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // SPARK_GRAFT_ONLY=q01,jq04 limits the run (dev iteration knob)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    SparkEntry.selected(only).foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-audit main: prints the formatted physical plan of selected
@@ -11,22 +10,13 @@ import org.apache.spark.sql.execution.ExplainMode
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
-        println(s"\n========== $name ==========")
-        println(fn(spark, sfDir).queryExecution
-          .explainString(ExplainMode.fromString("formatted")))
-      }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Sessions.local("graft-plan-audit", cpus)
+    SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY")).foreach { case (name, fn) =>
+      println(s"\n========== $name ==========")
+      println(fn(spark, sfDir).queryExecution
+        .explainString(ExplainMode.fromString("formatted")))
+    }
     spark.stop()
   }
 }

@@ -35,6 +35,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     catalogs.map(q => q.name -> q.fn).toMap
 
+  /** The queries a run selects, sorted by name. `only` is the
+    * SPARK_GRAFT_ONLY value — comma-separated name prefixes (e.g.
+    * `q01,jq04`); unset selects every registered query. Bench, Verify
+    * and PlanAudit all select through here. */
+  def selected(only: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val prefixes = only.map(_.split(",").map(_.trim).toSet)
+    queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => prefixes.forall(_.exists(name.startsWith)) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -93,50 +93,3 @@ object CosineSimilarity {
       CosineSimilarity(GraftBridge.expression(a), GraftBridge.expression(b)))
 }
 
-/** Squared L2 norm of a double array — the cheap (single-accumulator)
-  * zero-vector probe CosineSelfSimilarityRule uses to keep its
-  * graft_cosine(x, x) → 1.0 rewrite semantics-preserving (a zero vector
-  * must still yield NaN, exactly as the unrewritten expression would). */
-case class VectorNormSq(child: Expression)
-    extends UnaryExpression with Serializable {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_norm_sq"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<double>, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    var s = 0.0
-    var i = 0
-    while (i < x.numElements()) {
-      val xi = x.getDouble(i)
-      s += xi * xi
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val xi = ctx.freshName("xi")
-      s"""
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  double $xi = $a.getDouble($i);
-         |  $s += $xi * $xi;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): VectorNormSq =
-    copy(child = newChild)
-}

@@ -5,10 +5,11 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions injection point for the engine's native
-  * expressions — enable with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * or call [[GraftExtensions.registerAll]] on an existing session.
-  * After registration the functions are first-class in SQL text:
+  * expressions and planner strategy — the only registration path.
+  * [[graft.Sessions]] sets
+  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`,
+  * so the functions are first-class in SQL text in every graft session
+  * and its `newSession()`s:
   * `SELECT graft_cosine(a.embedding, b.embedding) ...`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -17,7 +18,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.winnowDescriptor)
     ext.injectFunction(GraftExtensions.nfcDescriptor)
     ext.injectFunction(GraftExtensions.deflateDescriptor)
-    ext.injectOptimizerRule(_ => CosineSelfSimilarityRule)
     ext.injectPlannerStrategy(_ => graft.plans.GraftStrategies)
   }
 }
@@ -58,11 +58,4 @@ object GraftExtensions {
       require(children.length == 1, "graft_deflate_len expects exactly 1 argument")
       DeflateLength(children.head)
     })
-
-  /** Register on a live session (tests / REPL). */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
-    Seq(cosineDescriptor, winnowDescriptor, nfcDescriptor, deflateDescriptor)
-      .foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
 }

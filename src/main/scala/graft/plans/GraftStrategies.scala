@@ -1,13 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** Planner strategy turning graft logical nodes into physical operators.
-  * Injected per-session (idempotently) through ExperimentalMethods, or via
-  * GraftExtensions for `spark.sql.extensions`-configured sessions. */
+  * Injected through GraftExtensions, which every [[graft.Sessions]]
+  * session carries. */
 object GraftStrategies extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: AsOfJoinPlan =>
@@ -25,19 +25,10 @@ object GraftStrategies extends SparkStrategy {
   * ASOF JOIN. */
 object AsOfJoinPhysical {
 
-  /** Register the strategy on the session if absent (self-contained so
-    * Verify/Bench sessions need no extensions config). */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val exp = GraftBridge.experimental(spark)
-    if (!exp.extraStrategies.contains(GraftStrategies))
-      exp.extraStrategies = GraftStrategies +: exp.extraStrategies
-  }
-
   def joinAsOf(left: DataFrame, right: DataFrame, key: String,
       leftTime: String, rightTime: String,
       rightPayload: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    ensureStrategy(spark)
     val lPlan = GraftBridge.analyzedPlan(left)
     // Re-key the right side with fresh exprIds: left and right often share
     // a lineage (e.g. two filters of the same events frame), and a custom

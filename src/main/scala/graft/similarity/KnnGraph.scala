@@ -132,8 +132,8 @@ object KnnGraph {
     * round built. This is the r14 scale finding made callable: a FIXED
     * round count is an n-dependent knob wearing a constant's clothes —
     * rounds that saturate a 2k fixture leave a 200k corpus at a
-    * fraction of its reachable recall (ComposedStoreProbe's depth
-    * arms: recall ~doubles per round at 200k, rounds 2/4/6 →
+    * fraction of its reachable recall (COVERAGE.md "The deep arms":
+    * recall ~doubles per round at 200k, rounds 2/4/6 →
     * 0.016/0.055/0.125), and NN-Descent's convergence horizon is
     * ~log n on structure-free data. The change fraction is the paper's
     * own monotone-progress measure; each check costs one index-sized
@@ -147,7 +147,7 @@ object KnnGraph {
     * with one bounded count per round — the round itself (a
     * k²-candidate shuffle + index-sized write) dwarfs the check.
     *
-    * CAVEAT (measured, ComposedStoreProbe's converged arm): this
+    * CAVEAT (measured, COVERAGE.md "The converged arm"): this
     * targets the kNN graph's OWN fixpoint — the right goal for the
     * exact-graph consumers (refine seeds, dedup, sq22-style serving).
     * The α-PRUNED serving artifact is different: at a fixed degree/L
@@ -2088,8 +2088,8 @@ object KnnGraph {
     *
     * The default density is n-DEPENDENT: total entries ≈
     * [[scaledSlots]](n) spread over the cells (perCell = round(√n /
-    * cells), ≥1). The r14 composed-store probe measured why 1-per-cell
-    * is not a constant either: the deep x100 arm's insert-findability
+    * cells), ≥1). The r14 composed-store measurement (COVERAGE.md "The
+    * deep arms") showed why 1-per-cell is not a constant either: the deep x100 arm's insert-findability
     * read 3/4 — a fresh insert links where its entry-seeded beam walked,
     * and one entry per cell leaves the walk's start ~a cell radius from
     * the query at any n. Denser entries shorten the cold start WITHOUT
@@ -2403,10 +2403,11 @@ object KnnGraph {
 
   /** ROW-count bucket sizing — nb ≈ n / targetRowsPerBucket, clamped
     * to [1, maxBuckets]. KEPT for callers that know their row width is
-    * ~constant, but ROWS IS THE WRONG UNIT in general: the r13 probe
-    * sweeps (GraphEraseProbe/GraphServeProbe U-curves) measured that
-    * the governing constraint is BYTES per bucket — past the point
-    * where a bucket amortizes its own listing/file overhead, more
+    * ~constant, but ROWS IS THE WRONG UNIT in general: the r13 erase
+    * and serve U-curves (COVERAGE.md "Graph-erase scaling probe, round
+    * 13") measured that the governing constraint is BYTES per bucket —
+    * past the point where a bucket amortizes its own listing/file
+    * overhead, more
     * buckets only multiply metadata cost (erase wall 5.4→34.8 s as nb
     * grew 32→3125 on KB-sized buckets; serve ms/q 3–4× worse), and a
     * 64-double vector row vs an M-byte code row differ ~60× in
@@ -2546,8 +2547,9 @@ object KnnGraph {
     * size, clamped to [minCells, maxCells] (tiny fixtures need a floor
     * for the layout to mean anything; the cap bounds the broadcast
     * centroid list, the codebook-training cost, and [[clusterOf]]'s
-    * per-row argmin width). ComposedStoreProbe measures the composed
-    * store under this policy at x1 (44 cells) and x100 (256). */
+    * per-row argmin width). COVERAGE.md "Composed-store lifecycle at
+    * 100×" records the composed store under this policy at x1 (44
+    * cells) and x100 (256). */
   def scaledCells(n: Long, minCells: Int = 16, maxCells: Int = 256): Int = {
     require(minCells > 0 && maxCells >= minCells, "bad cell clamp")
     math.min(maxCells, math.max(minCells, math.sqrt(n.toDouble).toInt))
@@ -2555,7 +2557,8 @@ object KnnGraph {
 
   /** ENTRY-density sizing — the [[scaledCells]] move applied to the
     * `_graft_entries` sidecars: ≈ √n entry points, clamped. The r14
-    * composed-store probe measured why a CONSTANT is wrong here: at
+    * composed-store measurement (COVERAGE.md "The deep arms") showed
+    * why a CONSTANT is wrong here: at
     * 200k nodes on the deliberately sparse search-pruned graph, a fresh
     * insert's beam from 64 fixed entries missed the inserted node
     * (findability 3/4 — StreamingGraphInsertSpec's comment named denser
@@ -2902,9 +2905,9 @@ object KnnGraph {
       beamRounds).last._2
     // the exact re-rank's shortlist width is the quantization-error
     // recovery knob (the standard two-stage recipe: ADC ranks, exact
-    // re-ranks the top-W): W = 2k default; the composed-store probe's
-    // ADC sweep (SPARK_GRAFT_ADC_WIDTHS) measures the recall-vs-W
-    // U-curve that justifies it. The query's ENTRY NODES always join
+    // re-ranks the top-W): W = 2k default; the ADC sweep in COVERAGE.md
+    // "ADC ceiling swept" records the recall-vs-W curve that justifies
+    // it. The query's ENTRY NODES always join
     // the exact re-rank (r16, measured on the perturbed-unique x100
     // replica): an entry-published fresh insert was read 0/4 through
     // this head while the exact head read 4/4 — its PQ code collided
@@ -3010,7 +3013,8 @@ object KnnGraph {
     * asserts equality). For |Q| in the thousands the per-round state
     * outgrows a coordinator — use [[serveFromStores]] there; the
     * boundedness contract HERE is the request batch. MEASURED
-    * ([[graft.GraphServeProbe]], same stores, answers equal): on the
+    * (COVERAGE.md "Serving-head crossover probe", same stores, answers
+    * equal): on the
     * 100× corpus this head reads 270/38/50 ms-per-query at
     * |Q|=16/128/1024 vs the distributed loop's 334/61/23 — the wall
     * crossover sits between 128 and 1024 queries, where the per-round

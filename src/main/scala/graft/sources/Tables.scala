@@ -59,13 +59,8 @@ object Tables {
     * graft.Sessions sets `nanosAsLong` at session construction; a
     * set/restore scoped to this method would NOT work because the parquet
     * reader consults the conf again at physical planning, i.e. after this
-    * method returns. For sessions built outside graft.Sessions we set it
-    * here once if absent — a documented session-wide requirement of the
-    * events table, not a silent per-read side effect. The conf is inert
-    * for non-NANOS fixtures. */
+    * method returns. The conf is inert for non-NANOS fixtures. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    if (!spark.conf.getOption(key).contains("true")) spark.conf.set(key, "true")
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     val raw = load(spark, dir, "events")

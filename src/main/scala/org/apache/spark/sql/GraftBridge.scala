@@ -23,8 +23,4 @@ object GraftBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Session ExperimentalMethods (extraStrategies injection point). */
-  def experimental(spark: SparkSession): ExperimentalMethods =
-    spark.asInstanceOf[classic.SparkSession].experimental
 }

@@ -32,20 +32,8 @@ class AllPlansSpec extends AnyFunSuite {
   private val allowManyScans: Set[String] = Set("dq09_dup_clusters")
 
   test("no registered query plans a CartesianProduct or a scan explosion") {
-    val scanNode = "\\(\\d+\\) Scan parquet".r
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution
-          .explainString(ExplainMode.fromString("formatted"))
-        val cartesian = !allowCartesian(name) && plan.contains("CartesianProduct")
-        val scans = scanNode.findAllIn(plan).size
-        val explosion = !allowManyScans(name) && scans > maxScans
-        if (cartesian) Some(s"$name (CartesianProduct)")
-        else if (explosion) Some(s"$name ($scans scans)")
-        else None
-    }
-    assert(offenders.isEmpty,
-      s"queries with degenerate plans: ${offenders.mkString(", ")}")
+    assert(offenders.degenerate.isEmpty,
+      s"queries with degenerate plans: ${offenders.degenerate.mkString(", ")}")
   }
 
   /** A Window with an empty partition spec sorts its ENTIRE input into one
@@ -74,17 +62,35 @@ class AllPlansSpec extends AnyFunSuite {
     "tq18_vocab_growth", "pq06_bpe_shard_packing")
 
   test("no registered query plans an unpartitioned Window over data-sized input") {
+    assert(offenders.globalWindow.isEmpty,
+      s"queries with unpartitioned windows: ${offenders.globalWindow.mkString(", ")}")
+  }
+
+  private case class Offenders(degenerate: Seq[String], globalWindow: Seq[String])
+
+  /** Both tests' offender lists from ONE pass: each query's `fn` runs
+    * once, the formatted-plan checks and the WindowExec check read the
+    * same QueryExecution, and only the offender strings are kept. */
+  private lazy val offenders: Offenders = {
     import org.apache.spark.sql.execution.window.WindowExec
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) if !allowGlobalWindow(name) =>
-        val plan = fn(spark, dir).queryExecution.sparkPlan
-        val global = plan.collect {
-          case w: WindowExec if w.partitionSpec.isEmpty => w
-        }
+    val scanNode = "\\(\\d+\\) Scan parquet".r
+    val perQuery = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val qe = fn(spark, dir).queryExecution
+      val plan = qe.explainString(ExplainMode.fromString("formatted"))
+      val cartesian = !allowCartesian(name) && plan.contains("CartesianProduct")
+      val scans = scanNode.findAllIn(plan).size
+      val explosion = !allowManyScans(name) && scans > maxScans
+      val degenerate =
+        if (cartesian) Some(s"$name (CartesianProduct)")
+        else if (explosion) Some(s"$name ($scans scans)")
+        else None
+      val global =
+        if (allowGlobalWindow(name)) Nil
+        else qe.sparkPlan.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+      val window =
         if (global.nonEmpty) Some(s"$name (${global.size} global Window)") else None
-      case _ => None
+      (degenerate, window)
     }
-    assert(offenders.isEmpty,
-      s"queries with unpartitioned windows: ${offenders.mkString(", ")}")
+    Offenders(perQuery.flatMap(_._1), perQuery.flatMap(_._2))
   }
 }

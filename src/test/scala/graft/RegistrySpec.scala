@@ -25,4 +25,12 @@ class RegistrySpec extends AnyFunSuite {
     val off = names.filterNot(n => family.findPrefixOf(n).isDefined)
     assert(off.isEmpty, s"query names must start with a family prefix + number: $off")
   }
+
+  test("SPARK_GRAFT_ONLY prefixes select exactly the matching queries; unset selects all") {
+    val all = SparkEntry.queries.keySet
+    assert(SparkEntry.selected(None).map(_._1).toSet == all)
+    val picked = SparkEntry.selected(Some("q0, jq")).map(_._1)
+    assert(picked.nonEmpty && picked == picked.sorted)
+    assert(picked.toSet == all.filter(n => n.startsWith("q0") || n.startsWith("jq")))
+  }
 }

@@ -48,7 +48,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("registers into SQL as graft_cosine via extensions") {
-    GraftExtensions.registerAll(spark)
     val row = spark.sql(
       "SELECT graft_cosine(array(1.0d, 2.0d), array(2.0d, 4.0d)) AS c").head()
     assert(math.abs(row.getDouble(0) - 1.0) < 1e-12)

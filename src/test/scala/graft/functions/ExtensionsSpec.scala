@@ -1,38 +1,11 @@
 package graft.functions
 
 import graft.TestSpark
-import graft.similarity.VectorOps
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Optimizer-rule + driver-side stat API coverage. */
+/** Driver-side stat API coverage. */
 class ExtensionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  test("self-similarity rewrites to a null-safe literal") {
-    import spark.implicits._
-    val df = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .select($"vec_id", VectorOps.toDouble($"embedding").as("v"))
-      .select(CosineSimilarity($"v", $"v").as("self"))
-    val before = df.queryExecution.analyzed
-    val after = CosineSelfSimilarityRule(before)
-    assert(before.expressions.exists(_.exists(_.isInstanceOf[CosineSimilarity])))
-    assert(!after.expressions.exists(_.exists(_.isInstanceOf[CosineSimilarity])),
-      s"rule did not fire:\n$after")
-    // and the unrewritten evaluation agrees with the rewrite's claim
-    df.collect().foreach(r => assert(math.abs(r.getDouble(0) - 1.0) < 1e-12))
-  }
-
-  test("rule leaves distinct-argument calls untouched") {
-    import spark.implicits._
-    val df = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .select($"vec_id", VectorOps.toDouble($"embedding").as("v"))
-    val two = df.select($"vec_id".as("ia"), $"v".as("va"))
-      .crossJoin(df.select($"vec_id".as("ib"), $"v".as("vb")))
-      .limit(10)
-      .select(CosineSimilarity($"va", $"vb").as("c"))
-    val after = CosineSelfSimilarityRule(two.queryExecution.analyzed)
-    assert(after.expressions.exists(_.exists(_.isInstanceOf[CosineSimilarity])))
-  }
 
   test("df.stat.approxQuantile (A5: driver-side outlier bounds)") {
     val li = graft.sources.Tables.lineitem(spark, "/root/testdata/sf0.001")

@@ -70,7 +70,6 @@ class WinnowSpec extends AnyFunSuite {
   }
 
   test("graft_winnow is callable from SQL text with literal k/w") {
-    GraftExtensions.registerAll(spark)
     val n = spark.sql(
       "SELECT size(graft_winnow('the quick brown fox jumps over the lazy dog', 8, 16)) AS n")
       .head().getInt(0)

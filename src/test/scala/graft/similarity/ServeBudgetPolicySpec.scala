@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the serve closure), so these tests drive it with a synthetic head
   * whose recall curve is exactly controlled — the contract under test
   * is the policy's, not the head's (the head's own (L, W) behavior is
-  * measured by the composed-store probe's ADC sweep and pinned by
-  * sq24's oracle). */
+  * recorded in COVERAGE.md "ADC ceiling swept" and pinned by sq24's
+  * oracle). */
 class ServeBudgetPolicySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
