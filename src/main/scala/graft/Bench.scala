@@ -78,13 +78,9 @@ object Bench {
     // collapses) or real (stays slow), round over round.
     val baseline: Map[String, Double] = {
       val p = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "bench_baseline.json")
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(p)), "UTF-8")
-        val qblock = txt.split("\"queries\":\\{", 2).lift(1).map(_.takeWhile(_ != '}'))
-        qblock.map("\"([^\"]+)\":([0-9.]+)".r.findAllMatchIn(_)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap).getOrElse(Map.empty)
-      } catch { case _: Throwable => Map.empty }
+      try baselineFor(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(p)), "UTF-8"), sfDir)
+      catch { case _: Throwable => Map.empty }
     }
     def gate(name: String, t: Double): Boolean =
       baseline.get(name).exists(b => t > math.max(1.5 * b, b + 0.5))
@@ -158,4 +154,17 @@ object Bench {
       } catch { case _: Throwable => () }
     spark.stop()
   }
+
+  /** The per-query map of a baseline Bench line, for the regression
+    * gate — only when the baseline ran at THIS run's scale factor (its
+    * `sf` equals `sfDir`, compared as strings): walls from another sf
+    * differ by the data-size ratio, so the gate would flag or hide
+    * every query. Empty on a mismatch and when the baseline names no
+    * `sf`. */
+  private[graft] def baselineFor(json: String, sfDir: String): Map[String, Double] =
+    if (!"\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(json).map(_.group(1)).contains(sfDir))
+      Map.empty
+    else json.split("\"queries\":\\{", 2).lift(1).map(_.takeWhile(_ != '}'))
+      .map("\"([^\"]+)\":([0-9.]+)".r.findAllMatchIn(_)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap).getOrElse(Map.empty)
 }

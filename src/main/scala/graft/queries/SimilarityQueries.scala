@@ -2286,25 +2286,11 @@ object SimilarityQueries {
       .select($"vec_id", toDouble($"embedding").as("v"))
       .cache()
     val graph = nnDescentBuild(vecs, dir, k, buildRounds).last
-    val und = graph.select($"src", $"nbr")
-      .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
-      .localCheckpoint(true)
-    val nn = vecs.agg(count(lit(1)).as("n"))
+    val und = graft.similarity.KnnGraph.undirected(graph).localCheckpoint(true)
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    val bf = broadcast(qv.select($"qid".as("src"), $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k)
-      .select($"src".as("qid"), $"nbr".as("node"))
-      .cache()
+    val bf = graft.similarity.KnnGraph.exactTruth(qv, vecs, k).cache()
     def bsummary(r: Int, pool: org.apache.spark.sql.DataFrame) = {
-      val ans = pool.filter($"node" =!= $"qid")
-        .join(broadcast(qv), Seq("qid"))
-        .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-        .filter($"rn" <= k).select($"qid", $"node")
+      val ans = graft.similarity.KnnGraph.rankPool(vecs, qv, pool, k)
       val hits = ans.join(bf, Seq("qid", "node"), "left_semi")
         .agg(count(lit(1)).as("nhit"))
       pool.agg(count(lit(1)).as("pool_nodes"))
@@ -2312,7 +2298,7 @@ object SimilarityQueries {
         .select(lit(r.toLong).as("round"), $"pool_nodes",
           ($"nhit".cast("double") / (16 * k)).as("recall_at_k"))
     }
-    blindBeamPools(vecs, und, qv, nn, k, beamRounds)
+    blindBeamPools(vecs, und, qv, k, beamRounds)
       .map { case (r, pool) => bsummary(r, pool) }
       .reduce(_ unionByName _).orderBy($"round")
   }
@@ -2325,20 +2311,10 @@ object SimilarityQueries {
   private def blindBeamPools(vecs: org.apache.spark.sql.DataFrame,
       und: org.apache.spark.sql.DataFrame,
       qv: org.apache.spark.sql.DataFrame,
-      nn: org.apache.spark.sql.DataFrame,
       k: Int, beamRounds: Int): Seq[(Int, org.apache.spark.sql.DataFrame)] = {
-    import vecs.sparkSession.implicits._
-    graft.similarity.KnnGraph.beamTrace(
-      qv.crossJoin(broadcast(nn))
-        .select($"qid", pmod($"qid" * 37 + 1, $"n").cast("long").as("node")),
-      frontier => frontier.join(und, frontier("node") === und("src"))
-        .select(frontier("qid"), und("nbr").as("node")).distinct(),
-      fresh => fresh
-        .join(broadcast(qv), Seq("qid"))
-        .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-        .filter($"rn" <= k).select($"qid", $"node"),
+    import graft.similarity.KnnGraph
+    KnnGraph.beamTrace(KnnGraph.ringEntries(vecs, qv),
+      KnnGraph.expandEdges(und), KnnGraph.scoreKeep(_, qv, vecs, k),
       beamRounds)
   }
 
@@ -2384,13 +2360,7 @@ object SimilarityQueries {
     val vecs = Tables.embeddings(spark, dir)
       .select($"vec_id", toDouble($"embedding").as("v")).cache()
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    val bf = broadcast(qv.select($"qid".as("src"), $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k)
-      .select($"src".as("qid"), $"nbr".as("node"))
-      .cache()
+    val bf = graft.similarity.KnnGraph.exactTruth(qv, vecs, k).cache()
     val nq = qv.count()
     val root = graft.util.Scratch.tempDir("graft-sq22b")
     val tBuild0 = System.nanoTime()
@@ -2574,12 +2544,7 @@ object SimilarityQueries {
         vecPath = Some(s"$root/vec")))
     val insMs = (System.nanoTime() - tIns0) / 1e6 / nHold
     val queries = all.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    val bf = broadcast(queries.select($"qid".as("src"), $"v".as("qv")))
-      .join(all.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k).select($"src".as("qid"), $"nbr".as("node"))
-      .cache()
+    val bf = KnnGraph.exactTruth(queries, all, k).cache()
     def recallFrom(path: String,
         entries: Option[org.apache.spark.sql.DataFrame] = None): Double =
       KnnGraph.serveStored(spark, path, all, queries, k, beamRounds, entries)
@@ -2738,7 +2703,7 @@ object SimilarityQueries {
     *
     * 100 TB: the beam loop touches only the graph's edge buckets and
     * an 0.4 GB-per-10^9-vector code sidecar (broadcastable shards or a
-    * bucket-pruned point-read exactly like [[KnnGraph.fetchVectors]]);
+    * bucket-pruned point-read exactly like [[KnnGraph.fetch]]);
     * full vectors stream only through the per-query 2k-row re-rank
     * join. Graph build + PQ train/encode are the amortized index cost,
     * shared with sq21/sq09. */
@@ -2783,36 +2748,24 @@ object SimilarityQueries {
     val adc = (0 until M).map(mi =>
       element_at(col(s"lut$mi"), col(s"c$mi") + 1)).reduce(_ + _)
     val graph = nnDescentBuild(vecs, dir, k, buildRounds).last
-    val und = graph.select($"src", $"nbr")
-      .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
-      .localCheckpoint(true)
-    val nn = vecs.agg(count(lit(1)).as("n"))
-    val bf = broadcast(qv.select($"qid".as("src"), $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k)
-      .select($"src".as("qid"), $"nbr".as("node"))
-      .cache()
-    def adcScored(pairs: org.apache.spark.sql.DataFrame) = pairs
+    val und = graft.similarity.KnnGraph.undirected(graph).localCheckpoint(true)
+    val bf = graft.similarity.KnnGraph.exactTruth(qv, vecs, k).cache()
+    // each query's `keep` best pairs by ADC distance (ties → node ASC)
+    def adcTop(pairs: org.apache.spark.sql.DataFrame, keep: Int) = pairs
       .join(broadcast(qluts), Seq("qid"))
       .join(codes, Seq("node"))
       .withColumn("adist", adc)
       .select($"qid", $"node", $"adist")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy($"qid").orderBy($"adist".asc, $"node")))
+      .filter($"rn" <= keep)
     def qsummary(r: Int, pool: org.apache.spark.sql.DataFrame) = {
-      val shl = adcScored(pool.filter($"node" =!= $"qid"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy($"adist".asc, $"node")))
-        .filter($"rn" <= 2 * k)
+      val shl = adcTop(pool.filter($"node" =!= $"qid"), 2 * k)
       val hitsAdc = shl.filter($"rn" <= k).select($"qid", $"node")
         .join(bf, Seq("qid", "node"), "left_semi")
         .agg(count(lit(1)).as("nhit_adc"))
-      val hits = shl.select($"qid", $"node")
-        .join(broadcast(qv), Seq("qid"))
-        .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-        .withColumn("rr", row_number().over(
-          Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-        .filter($"rr" <= k).select($"qid", $"node")
+      val hits = graft.similarity.KnnGraph
+        .scoreKeep(shl.select($"qid", $"node"), qv, vecs, k)
         .join(bf, Seq("qid", "node"), "left_semi")
         .agg(count(lit(1)).as("nhit"))
       pool.agg(count(lit(1)).as("pool_nodes"))
@@ -2823,15 +2776,10 @@ object SimilarityQueries {
           ($"nhit".cast("double") / (16 * k)).as("recall_at_k"))
     }
     graft.similarity.KnnGraph.beamTrace(
-      qv.crossJoin(broadcast(nn))
-        .select($"qid", pmod($"qid" * 37 + 1, $"n").cast("long").as("node")),
-      frontier => frontier.join(und, frontier("node") === und("src"))
-        .select(frontier("qid"), und("nbr").as("node")).distinct(),
+      graft.similarity.KnnGraph.ringEntries(vecs, qv),
+      graft.similarity.KnnGraph.expandEdges(und),
       // the round's ranking reads 4-byte codes, never vectors
-      fresh => adcScored(fresh)
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy($"adist".asc, $"node")))
-        .filter($"rn" <= k).select($"qid", $"node"),
+      adcTop(_, k).select($"qid", $"node"),
       beamRounds)
       .map { case (r, pool) => qsummary(r, pool) }
       .reduce(_ unionByName _).orderBy($"round")
@@ -2919,19 +2867,10 @@ object SimilarityQueries {
     val vecs = emb.select($"vec_id", toDouble($"embedding").as("v")).cache()
     val lbl = emb.select($"vec_id".as("node"), $"label")
     val graph = nnDescentBuild(vecs, dir, k, buildRounds).last
-    val und = graph.select($"src", $"nbr")
-      .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
-      .localCheckpoint(true)
-    val nn = vecs.agg(count(lit(1)).as("n"))
+    val und = graft.similarity.KnnGraph.undirected(graph).localCheckpoint(true)
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
     val tgt = qv.select($"qid", pmod($"qid", lit(nLabels.toLong)).as("tl"))
-    val bf = broadcast(qv.select($"qid".as("src"), $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k)
-      .select($"src".as("qid"), $"nbr".as("node"))
-      .cache()
+    val bf = graft.similarity.KnnGraph.exactTruth(qv, vecs, k).cache()
     // filtered truth: the label-pruned exact scan (at scale, a
     // label-bucketed layout turns this into a partition-pruned read)
     val fbf = broadcast(qv.join(tgt, Seq("qid")).select($"qid", $"v".as("qv"), $"tl"))
@@ -2943,12 +2882,7 @@ object SimilarityQueries {
       .select($"qid", $"node")
       .cache()
     def fsummary(r: Int, pool: org.apache.spark.sql.DataFrame) = {
-      val ans = pool.filter($"node" =!= $"qid")
-        .join(broadcast(qv), Seq("qid"))
-        .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-        .filter($"rn" <= k).select($"qid", $"node")
+      val ans = graft.similarity.KnnGraph.rankPool(vecs, qv, pool, k)
       val hits = ans.join(bf, Seq("qid", "node"), "left_semi")
         .agg(count(lit(1)).as("nhit"))
       val fp = pool.filter($"node" =!= $"qid")
@@ -2956,12 +2890,7 @@ object SimilarityQueries {
         .join(broadcast(tgt), Seq("qid"))
         .filter($"label" === $"tl")
         .select($"qid", $"node")
-      val fans = fp
-        .join(broadcast(qv), Seq("qid"))
-        .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-        .filter($"rn" <= k).select($"qid", $"node")
+      val fans = graft.similarity.KnnGraph.scoreKeep(fp, qv, vecs, k)
       val fhits = fans.join(fbf, Seq("qid", "node"), "left_semi")
         .agg(count(lit(1)).as("fhit"))
       pool.agg(count(lit(1)).as("pool_nodes"))
@@ -2972,7 +2901,7 @@ object SimilarityQueries {
           ($"nhit".cast("double") / (16 * k)).as("recall_at_k"),
           ($"fhit".cast("double") / (16 * k)).as("recall_filtered"))
     }
-    blindBeamPools(vecs, und, qv, nn, k, beamRounds)
+    blindBeamPools(vecs, und, qv, k, beamRounds)
       .map { case (r, pool) => fsummary(r, pool) }
       .reduce(_ unionByName _).orderBy($"round")
   }
@@ -3093,27 +3022,13 @@ object SimilarityQueries {
     val pruned = graft.similarity.KnnGraph
       .robustPrune(vecs, cand, degree, alpha)
       .select($"src", $"nbr").localCheckpoint(true)
-    val nn = vecs.agg(count(lit(1)).as("n"))
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    val bf = broadcast(qv.select($"qid".as("src"), $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k)
-      .select($"src".as("qid"), $"nbr".as("node"))
-      .cache()
+    val bf = graft.similarity.KnnGraph.exactTruth(qv, vecs, k).cache()
     def closure(g: org.apache.spark.sql.DataFrame) =
-      g.select($"src", $"nbr")
-        .union(g.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
-        .localCheckpoint(true)
+      graft.similarity.KnnGraph.undirected(g).localCheckpoint(true)
     def recallRows(pools: Seq[(Int, org.apache.spark.sql.DataFrame)]) =
       pools.map { case (r, pool) =>
-        val ans = pool.filter($"node" =!= $"qid")
-          .join(broadcast(qv), Seq("qid"))
-          .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-          .filter($"rn" <= k).select($"qid", $"node")
+        val ans = graft.similarity.KnnGraph.rankPool(vecs, qv, pool, k)
         val hits = ans.join(bf, Seq("qid", "node"), "left_semi")
           .agg(count(lit(1)).as("nhit"))
         pool.agg(count(lit(1)).as("pool_nodes"))
@@ -3121,10 +3036,10 @@ object SimilarityQueries {
           .select(lit(r.toLong).as("round"), $"pool_nodes",
             ($"nhit".cast("double") / (16 * k)).as("recall_at_k"))
       }.reduce(_ unionByName _)
-    val a = recallRows(blindBeamPools(vecs, closure(plain), qv, nn, k, beamRounds))
+    val a = recallRows(blindBeamPools(vecs, closure(plain), qv, k, beamRounds))
       .select($"round", $"pool_nodes".as("pool_plain"),
         $"recall_at_k".as("recall_plain"))
-    val b = recallRows(blindBeamPools(vecs, closure(pruned), qv, nn, k, beamRounds))
+    val b = recallRows(blindBeamPools(vecs, closure(pruned), qv, k, beamRounds))
       .select($"round", $"pool_nodes".as("pool_pruned"),
         $"recall_at_k".as("recall_pruned"))
     a.join(b, Seq("round"))
@@ -3236,7 +3151,7 @@ object SimilarityQueries {
     KnnGraph.writeStore(graph, s"$root/hash", KnnGraph.NumBuckets)
     KnnGraph.writeStoreClustered(graph, vecs, s"$root/clus", cents)
     KnnGraph.writeVectors(vecs, s"$root/vec")
-    val nbHash = KnnGraph.bucketsOf(spark, s"$root/hash")
+    val nbHash = KnnGraph.openStore(spark, s"$root/hash").buckets
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
     val nq = qv.count()
     val ring = KnnGraph.ringEntries(vecs, qv).localCheckpoint(true)
@@ -3276,8 +3191,8 @@ object SimilarityQueries {
       .as[(Long, Long)].collect()
     val hashMs = (System.nanoTime() - tH0) / 1e6 / nq
     val tC0 = System.nanoTime()
-    val clusServed = KnnGraph.serveFromStoresClustered(spark, s"$root/clus",
-        s"$root/vec", qv, k, beamRounds, entryVecs = entryVecs)
+    val clusServed = KnnGraph.serveFromStores(spark, s"$root/clus",
+        s"$root/vec", qv, k, beamRounds, entries = Some(entryVecs))
       .as[(Long, Long)].collect()
     val clusMs = (System.nanoTime() - tC0) / 1e6 / nq
     val matches = clusServed.toSet.intersect(hashServed.toSet).size.toLong
@@ -3316,8 +3231,8 @@ object SimilarityQueries {
     *      — wide vector rows and narrow code rows get separate counts
     *      at the same byte budget, the r13-measured constraint);
     *   3. served through the fully store-resident WARM QUANTIZED head
-    *      ([[graft.similarity.KnnGraph.serveFromStoresClusteredPqWarm]]
-    *      — stored entries, clustered expansion, ADC ranking, one
+    *      ([[graft.similarity.KnnGraph.serveFromStoresPq]] on the
+    *      clustered store — stored entries, clustered expansion, ADC ranking, one
     *      exact re-rank), recall + per-query latency in-row;
     *   4. then insert → erase → RE-PRUNE → re-serve → ROLLBACK on the
     *      same artifact: streamed clustered insert WITH code append
@@ -3419,11 +3334,7 @@ object SimilarityQueries {
     val qv = vecs.filter($"vec_id" < 16)
       .select($"vec_id".as("qid"), $"v").cache()
     val nq = qv.count()
-    val bf = broadcast(qv.select($"qid", $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), $"qid" =!= $"node")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy(cosine($"qv", $"cv").desc, $"node")))
-      .filter($"rn" <= k).select($"qid", $"node").cache()
+    val bf = KnnGraph.exactTruth(qv, vecs, k).cache()
     bf.count()
     // SERVE-BUDGET POLICY (r16 verdict #2): build depth already
     // self-tunes (buildToServedRecall above); the quantized head's
@@ -3434,13 +3345,13 @@ object SimilarityQueries {
     // quality the graph delivers. Process-shared + durable like the
     // depth decision (servePolicyCached).
     val tPol0 = System.nanoTime()
-    val exactAns = KnnGraph.serveFromStoresClusteredWarm(spark, pinned(),
+    val exactAns = KnnGraph.serveFromStores(spark, pinned(),
       s"$root/vec", qv, k, beamRounds).localCheckpoint(true)
     val exactRecall = exactAns.join(bf, Seq("qid", "node"), "left_semi")
       .count().toDouble / (nq * k)
     val ((servL, servW), polRecall, polTrace) = KnnGraph.servePolicyCached(
       vecs, dir, k,
-      (l, w) => KnnGraph.serveFromStoresClusteredPqWarm(spark, pinned(),
+      (l, w) => KnnGraph.serveFromStoresPq(spark, pinned(),
         s"$root/codes", s"$root/vec", qv, cb, k, beamRounds,
         rerankWidth = w, beamWidth = l),
       bf, nq, targetRecall = exactRecall, eps = 0.05,
@@ -3448,7 +3359,7 @@ object SimilarityQueries {
     val polS = (System.nanoTime() - tPol0) / 1e9
     def serveRecall(graphPath: String): (Double, Double, Long, Set[(Long, Long)]) = {
       val t0 = System.nanoTime()
-      val ans = KnnGraph.serveFromStoresClusteredPqWarm(spark, graphPath,
+      val ans = KnnGraph.serveFromStoresPq(spark, graphPath,
         s"$root/codes", s"$root/vec", qv, cb, k, beamRounds,
         rerankWidth = servW, beamWidth = servL)
         .localCheckpoint(true)
@@ -3484,7 +3395,7 @@ object SimilarityQueries {
     // the entry + code + vector appends stayed in lockstep
     val probes = arrivals
       .select(($"vec_id" + 4000000L).as("qid"), $"v")
-    val foundIns = KnnGraph.serveFromStoresClusteredPqWarm(spark,
+    val foundIns = KnnGraph.serveFromStoresPq(spark,
         pinned(), s"$root/codes", s"$root/vec", probes, cb, k,
         beamRounds, rerankWidth = servW, beamWidth = servL)
       .filter($"node" === $"qid" - 4000000L).count()
@@ -3497,7 +3408,7 @@ object SimilarityQueries {
       codesPath = Some(s"$root/codes"))
     val eraseS = (System.nanoTime() - tE0) / 1e9
     val (recallPost, serveMsPost, nAnsPost, ansPost) = serveRecall(pinned())
-    val victimsServed = KnnGraph.serveFromStoresClusteredPqWarm(spark,
+    val victimsServed = KnnGraph.serveFromStoresPq(spark,
         pinned(), s"$root/codes", s"$root/vec", probes, cb, k, beamRounds,
         rerankWidth = servW, beamWidth = servL)
       .filter($"node".isin(victims: _*)).count()

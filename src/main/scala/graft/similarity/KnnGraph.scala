@@ -311,12 +311,7 @@ object KnnGraph {
     val nq = qv.count()
     require(nq > 0, s"no probe queries: no vec_id < $nProbes in the corpus")
     // exact ground truth, computed ONCE for every evaluation
-    val bf = broadcast(qv.select($"qid", $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("node"), $"v".as("cv")),
-        $"qid" =!= $"node")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy(cosine($"qv", $"cv").desc, $"node")))
-      .filter($"rn" <= serveK).select($"qid", $"node").localCheckpoint(true)
+    val bf = exactTruth(qv, vecs, serveK).localCheckpoint(true)
     // ENTRY DISCIPLINE IS PART OF THE ARTIFACT (r15 measured): the
     // eval serve AND every eval prune's candidate searches start from
     // `entriesFor` when given — the serving head's own entry rule
@@ -327,13 +322,8 @@ object KnnGraph {
     val entryOf: DataFrame => DataFrame =
       entriesFor.getOrElse(ringEntries(vecs, _))
     def servedRecall(pruned: DataFrame): Double = {
-      val und = pruned.select($"src", $"nbr")
-        .union(pruned.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
-        .localCheckpoint(true)
-      def expand(frontier: DataFrame): DataFrame =
-        frontier.join(und, frontier("node") === und("src"))
-          .select(frontier("qid"), und("nbr").as("node")).distinct()
-      val pool = beamTrace(entryOf(qv), expand,
+      val und = undirected(pruned).localCheckpoint(true)
+      val pool = beamTrace(entryOf(qv), expandEdges(und),
         fresh => rankPool(vecs, qv, fresh.localCheckpoint(true), serveK),
         serveBeamRounds).last._2
       val served = rankPool(vecs, qv, pool, serveK)
@@ -790,10 +780,9 @@ object KnnGraph {
     * (≤ 2kn-row, 16-byte-wide) frame — the cheapest place to dedup. */
   private def candidatePairsDup(e: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
-    val undirected = e.select($"src", $"nbr")
-      .union(e.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
-    undirected.as("a")
-      .join(undirected.as("b"), $"a.nbr" === $"b.src")
+    val und = undirected(e)
+    und.as("a")
+      .join(und.as("b"), $"a.nbr" === $"b.src")
       .select($"a.src".as("src"), $"b.nbr".as("nbr"))
       .filter($"src" =!= $"nbr")
       .union(e.select($"src", $"nbr"))
@@ -863,16 +852,11 @@ object KnnGraph {
     // splices symmetrized rows), so the maintenance rungs were paying
     // an index-sized union+distinct to re-derive what they read (r16
     // verdict #3). Replayed streamed appends may leave duplicate
-    // physical rows; that is safe here — expand() distincts each
+    // physical rows; that is safe here — expandEdges distincts each
     // frontier and the final candidate union distincts edges — dups
     // cost join width, never answers.
     val und = (if (graphIsSymmetric) graph.select($"src", $"nbr")
-      else graph.select($"src", $"nbr")
-        .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct())
-      .localCheckpoint(true)
-    def expand(frontier: DataFrame): DataFrame =
-      frontier.join(und, frontier("node") === und("src"))
-        .select(frontier("qid"), und("nbr").as("node")).distinct()
+      else undirected(graph)).localCheckpoint(true)
     def keep(fresh: DataFrame): DataFrame = fresh
       .join(queries.select($"qid", $"v".as("qv")), Seq("qid"))
       .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
@@ -899,7 +883,7 @@ object KnnGraph {
     val poolOf: DataFrame => DataFrame = qs =>
       beamTrace(entries.map(_.join(qs.select($"qid"), Seq("qid"), "left_semi"))
           .getOrElse(ringEntries(vecs, qs)),
-        expand, keep, beamRounds).last._2
+        expandEdges(und), keep, beamRounds).last._2
     val pool = if (nSlices <= 1) poolOf(queries)
       else {
         // materialize the merged pool ONCE, then free the per-slice
@@ -961,10 +945,10 @@ object KnnGraph {
       pruneWorkDir: Option[String] = None): Unit = {
     import spark.implicits._
     // distinct: streamed appends may hold replayed duplicate rows
-    // (fetchVectors' contract, applied at the maintenance pass too)
-    val vecs = readStore(spark, vecPath)
+    // ([[fetch]]'s contract, applied at the maintenance pass too)
+    val vecs = openStore(spark, vecPath).rel
       .select($"vec_id", $"v").distinct().localCheckpoint(true)
-    val graph = readStore(spark, graphPath).select($"src", $"nbr")
+    val graph = openStore(spark, graphPath).rel.select($"src", $"nbr")
     val cents = centroidsOf(spark, graphPath)
     // entries from the vector store's sidecar, NOT ringEntries: this is
     // the POST-erase/POST-insert rung by definition, so the id space has
@@ -1030,9 +1014,9 @@ object KnnGraph {
       extraCells: Seq[Int] = Nil,
       pruneWorkDir: Option[String] = None): Long = {
     import spark.implicits._
-    val vecs = readStore(spark, vecPath)
+    val vecs = openStore(spark, vecPath).rel
       .select($"vec_id", $"v").distinct().localCheckpoint(true)
-    val stored = readStore(spark, graphPath)
+    val stored = openStore(spark, graphPath).rel
       .select($"src", $"nbr", $"nbr_bucket", $"bucket")
     val cents = centroidsOf(spark, graphPath)
     val churnB = churn.select($"vec_id").distinct().localCheckpoint(true)
@@ -1481,8 +1465,8 @@ object KnnGraph {
   /** The one-pass grouped greedy both [[robustPrune]] paths run: shuffle
     * the vector-attached candidate rows once by src, then replay
     * Vamana's sequential pick-and-cover locally per node. Sort order
-    * ((cos DESC, then nbr ASC) under [[nanSafeCompare]] — NaN greatest,
-    * -0.0 == 0.0, Spark's own double ordering) and the α-cover
+    * ([[bestFirst]]: cos DESC, then nbr ASC, under [[nanSafeCompare]] —
+    * NaN greatest, -0.0 == 0.0, Spark's own double ordering) and the α-cover
     * arithmetic ([[cosineLocal]], the native expression's bit-exact
     * twin, compared with [[nanSafeCompare]] like Spark's `<=`) are
     * EXACTLY the relational rounds' — GraphPruneSpec pins edge-set
@@ -1498,10 +1482,7 @@ object KnnGraph {
       .flatMapGroups { (src, it) =>
         val sorted = it.map { case (_, nbr, cos, cv) =>
           (nbr, cos, cv.toArray) }.toArray
-          .sortWith { case ((na, ca, _), (nb, cb, _)) =>
-            val c = nanSafeCompare(cb, ca)
-            c < 0 || (c == 0 && na < nb)
-          }
+          .sortBy { case (nbr, cos, _) => (nbr, cos) }(bestFirst)
         val kept = scala.collection.mutable.ArrayBuffer
           .empty[(Long, Double, Array[Double])]
         var i = 0
@@ -1562,46 +1543,53 @@ object KnnGraph {
   private[graft] def bucketOf(id: Long, nb: Int): Int =
     Math.floorMod(id, nb.toLong).toInt
 
-  /** JVM-wide parquet schema cache for the store readers, keyed by
-    * path and stamped with the store's top-level listing (entry
-    * name:length:mtime — a rewrite or append mints or touches files, so
-    * content churn re-stamps; dynamic-overwrite bucket rewrites touch
-    * their bucket dirs). An unpinned `spark.read.parquet` runs a
-    * footer-inference JOB per read — ~80 of them in one sq28 pass, each
-    * a plan+job+gap round-trip for metadata the writer already knows
-    * (r17 event logs; guide §1.5/§6). On a stamp hit the cached schema
-    * pins the read (`spark.read.schema(...)`) and no inference job
-    * runs; a miss infers once and replaces the entry (bounded: one
-    * live entry per store path, the centroidsCache discipline). */
-  private val storeSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, org.apache.spark.sql.types.StructType)]()
-
-  /** Read a store with its schema pinned from [[storeSchemaCache]] —
-    * every repeated-read site (serve loops, maintenance rungs) routes
-    * through this instead of bare `spark.read.parquet`. */
-  private[graft] def readStore(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stamp = fs.listStatus(p)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString(",")
-    val schema = storeSchemaCache.compute(path, (_, prev) =>
-      if (prev != null && prev._1 == stamp) prev
-      else (stamp, spark.read.parquet(path).schema))._2
-    spark.read.schema(schema).parquet(path)
+  /** A store RESOLVED once per request: its path, its recorded bucket
+    * count ([[writeBucketMeta]]), the schema-pinned relation, and its
+    * layout — CLUSTERED ([[writeStoreClustered]]: rows carry
+    * `nbr_bucket`) or hash (`bucket = pmod(id, buckets)`). Every serving
+    * walk, fetch, expansion and maintenance rung reads a store through
+    * one of these; the stores are immutable within a request. The
+    * relation is built on first use, so a caller that only needs the
+    * bucket count (an append) never pays the schema inference. */
+  final class Store private[KnnGraph] (val path: String, val buckets: Int,
+      spark: SparkSession, schema: => org.apache.spark.sql.types.StructType) {
+    lazy val rel: DataFrame = spark.read.schema(schema).parquet(path)
+    lazy val clustered: Boolean = schema.fieldNames.contains("nbr_bucket")
   }
 
-  /** The store's recorded bucket count (see [[writeBucketMeta]]). */
-  def bucketsOf(spark: SparkSession, path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(path, "_graft_buckets")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) NumBuckets
-    else {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-      finally in.close()
+  /** A store's cached metadata: the bucket count read from the marker,
+    * and the parquet schema inferred at most once per stamp. */
+  private final class StoreMeta(val buckets: Int,
+      infer: () => org.apache.spark.sql.types.StructType) {
+    lazy val schema: org.apache.spark.sql.types.StructType = infer()
+  }
+
+  /** JVM-wide store metadata, stamped by the store's top-level listing
+    * ([[graft.util.StampedCache.listingStamp]] — a rewrite or append
+    * mints or touches files and bucket dirs, and the listing covers the
+    * `_graft_buckets` marker itself). An unpinned `spark.read.parquet`
+    * runs a footer-inference JOB per read — ~80 of them in one sq28
+    * pass, each a plan+job+gap round-trip for metadata the writer
+    * already knows (r17 event logs; guide §1.5/§6) — and the marker was
+    * one filesystem read per lookup; on a stamp hit neither happens. */
+  private val storeMetaCache = new graft.util.StampedCache[StoreMeta]
+
+  /** Resolve a store: ONE listing; the schema and bucket count come
+    * from [[storeMetaCache]] on a stamp hit. Stores written before the
+    * marker read as [[NumBuckets]]. */
+  def openStore(spark: SparkSession, path: String): Store = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listing = fs.listStatus(p).toSeq
+    val meta = storeMetaCache(path, graft.util.StampedCache.listingStamp(listing)) {
+      val nb = listing.find(_.getPath.getName == "_graft_buckets").fold(NumBuckets) { m =>
+        val in = fs.open(m.getPath)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
+        finally in.close()
+      }
+      new StoreMeta(nb, () => spark.read.parquet(path).schema)
     }
+    new Store(path, meta.buckets, spark, meta.schema)
   }
 
   /** Persist the UNDIRECTED adjacency of a built graph, partitioned by
@@ -1612,17 +1600,16 @@ object KnnGraph {
   def writeStore(graph: DataFrame, path: String,
       numBuckets: Int = AutoBuckets): Unit = {
     import graph.sparkSession.implicits._
-    val closure = graph.select($"src", $"nbr")
-      .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
+    val closure = undirected(graph)
     // auto-sizing reads the frame once for (n, width) and the write
     // reads it again — checkpoint the INDEX-sized (≤2·k·n rows)
     // closure so the caller's lineage and the union+distinct shuffle
     // run exactly once under the default policy (a pinned count skips
     // the sizing job, so there's nothing to share)
-    val undirected =
+    val und =
       if (numBuckets > 0) closure else closure.localCheckpoint(true)
-    val nb = resolveBuckets(undirected, numBuckets)
-    undirected
+    val nb = resolveBuckets(und, numBuckets)
+    und
       .withColumn("bucket", pmod($"src", lit(nb.toLong)).cast("int"))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
     writeBucketMeta(graph.sparkSession, path, nb)
@@ -1657,7 +1644,6 @@ object KnnGraph {
       victims: Seq[Long], vecPath: Option[String] = None,
       codesPath: Option[String] = None): Unit = {
     import spark.implicits._
-    import graft.sources.PartitionedLayout.{withDynamicOverwrite, withStaging}
     require(victims.nonEmpty, "empty victim list")
     // the VECTOR store (and the codes sidecar) erase through a
     // bucket-pruned rewrite: the victims' buckets are ARITHMETIC
@@ -1671,11 +1657,12 @@ object KnnGraph {
     vecPath.foreach(eraseFromIdStore(spark, _, victims))
     codesPath.foreach(eraseFromIdStore(spark, _, victims))
     val victimSet = victims.toSet
-    val nb = bucketsOf(spark, path)
+    val store = openStore(spark, path)
+    val nb = store.buckets
     val victimBuckets = victims.map(bucketOf(_, nb)).distinct
     // the victims' neighbor lists — one pruned scan of the victim
     // buckets; bounded by |victims|·k (the erasure working set)
-    val nbrs = readStore(spark, path)
+    val nbrs = store.rel
       .filter($"bucket".isin(victimBuckets: _*))
       .filter($"src".isin(victims: _*))
       .groupBy($"src").agg(collect_set($"nbr").as("ns"))
@@ -1691,22 +1678,32 @@ object KnnGraph {
     }.flatten.distinct
     val repairDf = repair.toDF("src", "nbr")
       .withColumn("bucket", pmod($"src", lit(nb.toLong)).cast("int"))
+    rewriteBuckets(spark, path, touched, store.rel
+      .filter($"bucket".isin(touched: _*))
+      .filter(!$"src".isin(victims: _*) && !$"nbr".isin(victims: _*))
+      .select($"src", $"nbr", $"bucket")
+      .unionByName(repairDf).distinct())
+  }
+
+  /** Rewrite the `touched` buckets of a bucket-partitioned store with
+    * `slice` — staged, then a dynamic overwrite, so every other bucket
+    * keeps byte-identical files. A touched bucket the slice leaves
+    * empty (every row was a victim) drains: dynamic overwrite never
+    * touches a partition it writes no rows for, so its directory is
+    * removed explicitly (PartitionedLayout's drained-partition blind
+    * spot). The one rewrite every erase path runs. */
+  private def rewriteBuckets(spark: SparkSession, path: String,
+      touched: Seq[Int], slice: => DataFrame): Unit = {
+    import spark.implicits._
+    import graft.sources.PartitionedLayout.{withDynamicOverwrite, withStaging}
     withDynamicOverwrite(spark) {
-      val slice = readStore(spark, path)
-        .filter($"bucket".isin(touched: _*))
-        .filter(!$"src".isin(victims: _*) && !$"nbr".isin(victims: _*))
-        .select($"src", $"nbr", $"bucket")
-        .unionByName(repairDf).distinct()
       withStaging(spark, path, slice) { staged =>
         staged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-        // a bucket whose every row was a victim edge drains — dynamic
-        // overwrite never touches its dir, so remove it explicitly
-        // (PartitionedLayout's drained-partition blind spot)
         val present = staged.select($"bucket").distinct()
           .as[Int].collect().toSet
         val root = new org.apache.hadoop.fs.Path(path)
         val f = root.getFileSystem(spark.sessionState.newHadoopConf())
-        touched.filterNot(b => present.contains(b.toInt)).foreach(b =>
+        touched.filterNot(present.contains).foreach(b =>
           f.delete(new org.apache.hadoop.fs.Path(root, s"bucket=$b"), true))
       }
     }
@@ -1722,23 +1719,11 @@ object KnnGraph {
   private def eraseFromIdStore(spark: SparkSession, path: String,
       victims: Seq[Long]): Unit = {
     import spark.implicits._
-    import graft.sources.PartitionedLayout.{withDynamicOverwrite, withStaging}
-    val nb = bucketsOf(spark, path)
-    val vBuckets = victims.map(bucketOf(_, nb)).distinct
-    withDynamicOverwrite(spark) {
-      val slice = readStore(spark, path)
-        .filter($"bucket".isin(vBuckets: _*))
-        .filter(!$"vec_id".isin(victims: _*))
-      withStaging(spark, path, slice) { staged =>
-        staged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-        val present = staged.select($"bucket").distinct()
-          .as[Int].collect().toSet
-        val root = new org.apache.hadoop.fs.Path(path)
-        val f = root.getFileSystem(spark.sessionState.newHadoopConf())
-        vBuckets.filterNot(b => present.contains(b.toInt)).foreach(b =>
-          f.delete(new org.apache.hadoop.fs.Path(root, s"bucket=$b"), true))
-      }
-    }
+    val store = openStore(spark, path)
+    val vBuckets = victims.map(bucketOf(_, store.buckets)).distinct
+    rewriteBuckets(spark, path, vBuckets, store.rel
+      .filter($"bucket".isin(vBuckets: _*))
+      .filter(!$"vec_id".isin(victims: _*)))
     // a victim can linger as an ENTRY representative
     // ([[writeHashEntries]]) — a stale entry would warm-start every
     // insert search at the victim, so the sidecar drops those rows
@@ -1864,8 +1849,7 @@ object KnnGraph {
     import graph.sparkSession.implicits._
     val assign = vecs.select($"vec_id",
       clusterOf($"v", centroids).as("cb"))
-    graph.select($"src", $"nbr")
-      .union(graph.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
+    undirected(graph)
       .join(assign.select($"vec_id".as("nbr"), $"cb".as("nbr_bucket")), Seq("nbr"))
       .join(assign.select($"vec_id".as("src"), $"cb".as("bucket")), Seq("src"))
       .select($"src", $"nbr", $"nbr_bucket", $"bucket")
@@ -1882,25 +1866,19 @@ object KnnGraph {
     * arithmetic [[graft.similarity.Pq.ivfPqEncode]] uses). */
   def clusterOf(v: org.apache.spark.sql.Column,
       centroids: Seq[Seq[Double]]): org.apache.spark.sql.Column = {
-    val d = transform(typedlit(centroids), c =>
-      aggregate(zip_with(v, c, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
+    val d = transform(typedlit(centroids), Pq.sqd(v, _))
     (array_position(d, array_min(d)) - 1).cast("int")
   }
 
-  /** JVM-wide centroid sidecar cache keyed BY PATH, each entry stamped
-    * with the sidecar's part-file listing (names + lengths — every
-    * write mints fresh UUID-named parts, so a same-path rewrite can
-    * never serve stale centroids) — a serving process holds its index
-    * metadata in memory rather than re-running a collect job per
-    * request batch (r17: one sq28 pass makes ~10 centroidsOf calls
-    * against the same store; each was a full plan+job round-trip for
-    * an 8 KB read). Keying by path alone means a rewrite REPLACES the
-    * entry instead of stranding the predecessor forever (r17 advice:
-    * the (path, stamp)-keyed map grew one dead entry per sidecar
-    * rewrite in a long-lived serving JVM). Values are cells×dim
-    * doubles — KBs, one live entry per store path. */
-  private val centroidsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[Seq[Double]])]()
+  /** JVM-wide centroid sidecar cache ([[graft.util.StampedCache]]'s
+    * rule, stamped by the sidecar's listing — every write mints fresh
+    * UUID-named parts, so a same-path rewrite can never serve stale
+    * centroids): a serving process holds its index metadata in memory
+    * rather than re-running a collect job per request batch (r17: one
+    * sq28 pass makes ~10 centroidsOf calls against the same store; each
+    * was a full plan+job round-trip for an 8 KB read). Values are
+    * cells×dim doubles — KBs, one live entry per store path. */
+  private val centroidsCache = new graft.util.StampedCache[Seq[Seq[Double]]]
 
   /** The centroids a [[writeStoreClustered]] store was routed by. */
   def centroidsOf(spark: SparkSession, path: String): Seq[Seq[Double]] = {
@@ -1908,15 +1886,12 @@ object KnnGraph {
     val dir = new org.apache.hadoop.fs.Path(s"$path/_graft_centroids")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // missing sidecar must stay a loud error, same as the uncached read
-    val stamp = fs.listStatus(dir)
-      .map(s => s"${s.getPath.getName}:${s.getLen}").sorted.mkString(",")
-    centroidsCache.compute(dir.toString, (_, prev) =>
-      if (prev != null && prev._1 == stamp) prev
-      else (stamp, spark.read
+    centroidsCache(dir.toString, graft.util.StampedCache.listingStamp(fs, dir))(
+      spark.read
         .schema("cid INT, centroid ARRAY<DOUBLE>")
         .parquet(s"$path/_graft_centroids")
         .orderBy($"cid").select($"centroid")
-        .as[Seq[Double]].collect().toSeq))._2
+        .as[Seq[Double]].collect().toSeq)
   }
 
   /** Erase victim nodes from a CLUSTERED adjacency store — the
@@ -1938,10 +1913,9 @@ object KnnGraph {
       eraseVectors: Boolean = false,
       codesPath: Option[String] = None): Unit = {
     import spark.implicits._
-    import graft.sources.PartitionedLayout.{withDynamicOverwrite, withStaging}
     require(victims.nonEmpty, "empty victim list")
     val cents = centroidsOf(spark, path)
-    val vicFrame = fetchVectors(spark, vecPath,
+    val vicFrame = fetch(openStore(spark, vecPath),
       victims.toDF("node")).localCheckpoint(true)
     // EVERY victim must resolve a vector — a missing one would silently
     // keep its own bucket (and its dangling edges) out of the rewrite,
@@ -1958,7 +1932,8 @@ object KnnGraph {
     val victimSet = victims.toSet
     // the victims' own rows: one pruned read; each row carries the
     // neighbor AND the bucket its reverse edge lives in
-    val vicRows = readStore(spark, path)
+    val store = openStore(spark, path)
+    val vicRows = store.rel
       .filter($"bucket".isin(vicBuckets: _*))
       .filter($"src".isin(victims: _*))
       .select($"src", $"nbr", $"nbr_bucket")
@@ -1978,22 +1953,11 @@ object KnnGraph {
       } yield Seq((a, b, bb, ab), (b, a, ab, bb))
     }.flatten.distinct
     val repairDf = repair.toDF("src", "nbr", "nbr_bucket", "bucket")
-    withDynamicOverwrite(spark) {
-      val slice = readStore(spark, path)
-        .filter($"bucket".isin(touched: _*))
-        .filter(!$"src".isin(victims: _*) && !$"nbr".isin(victims: _*))
-        .select($"src", $"nbr", $"nbr_bucket", $"bucket")
-        .unionByName(repairDf).distinct()
-      withStaging(spark, path, slice) { staged =>
-        staged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-        val present = staged.select($"bucket").distinct()
-          .as[Int].collect().toSet
-        val root = new org.apache.hadoop.fs.Path(path)
-        val f = root.getFileSystem(spark.sessionState.newHadoopConf())
-        touched.filterNot(present.contains).foreach(b =>
-          f.delete(new org.apache.hadoop.fs.Path(root, s"bucket=$b"), true))
-      }
-    }
+    rewriteBuckets(spark, path, touched, store.rel
+      .filter($"bucket".isin(touched: _*))
+      .filter(!$"src".isin(victims: _*) && !$"nbr".isin(victims: _*))
+      .select($"src", $"nbr", $"nbr_bucket", $"bucket")
+      .unionByName(repairDf).distinct())
     // a victim can linger as a CELL ENTRY ([[writeEntries]]) — a stale
     // entry would re-seed every pool with the victim, so the sidecar
     // drops those rows (the cell then routes to the next-nearest
@@ -2003,77 +1967,25 @@ object KnnGraph {
     codesPath.foreach(eraseFromIdStore(spark, _, victims))
   }
 
-  /** One frontier expansion from the CLUSTERED store: the frontier
-    * carries each node's bucket (`node_bucket` — known from the edge
-    * that discovered it), so the scan prunes to the frontier's
-    * DISTINCT CLUSTER buckets, and the result carries the next
-    * frontier's buckets. Returns (qid, node, node_bucket). */
-  def expandClustered(spark: SparkSession, path: String,
-      frontier: DataFrame): DataFrame =
-    expandClusteredFrom(readStore(spark, path), frontier)
-
-  /** [[expandClustered]] over an already-RESOLVED store relation — the
-    * serve loops resolve the adjacency once per request batch and
-    * expand every beam round from it (the store is immutable within a
-    * serve), instead of re-listing and re-resolving per round. */
-  private def expandClusteredFrom(store: DataFrame,
-      frontier: DataFrame): DataFrame = {
-    import store.sparkSession.implicits._
-    val buckets = frontier.select($"node_bucket").distinct()
-      .as[Int].collect().toSeq
-    val pruned = store.filter($"bucket".isin(buckets: _*))
+  /** One frontier expansion: reads ONLY the frontier's buckets and
+    * returns the distinct (qid, node) pairs it discovers. On a hash
+    * store the buckets are the frontier ids' `pmod` (≤ buckets values,
+    * driver-bounded); on a CLUSTERED store the frontier carries each
+    * node's bucket (`node_bucket` — known from the edge that discovered
+    * it), so the scan prunes to the frontier's DISTINCT CLUSTER buckets
+    * and the result carries the next frontier's buckets. */
+  private[graft] def expand(store: Store, frontier: DataFrame): DataFrame = {
+    import frontier.sparkSession.implicits._
+    val bucketCol =
+      if (store.clustered) $"node_bucket"
+      else pmod($"node", lit(store.buckets.toLong)).cast("int")
+    val buckets = frontier.select(bucketCol).distinct().as[Int].collect().toSeq
+    val pruned = store.rel.filter($"bucket".isin(buckets: _*))
+    val carried =
+      if (store.clustered) Seq(pruned("nbr_bucket").as("node_bucket")) else Nil
     frontier.join(pruned, frontier("node") === pruned("src"))
-      .select(frontier("qid"), pruned("nbr").as("node"),
-        pruned("nbr_bucket").as("node_bucket"))
+      .select(Seq(frontier("qid"), pruned("nbr").as("node")) ++ carried: _*)
       .distinct()
-  }
-
-  /** Store-only beam serving over the CLUSTERED layout — the same
-    * walk as [[serveFromStores]] (one skeleton, [[beamTrace]]) with
-    * bucket-carrying frontiers; answers are IDENTICAL, the scan per
-    * round shrinks from `min(|frontier|, N)` hash buckets to the
-    * frontier's cluster footprint (StoredClusteredSpec asserts both).
-    * Entries resolve their buckets via [[clusterOf]] against the
-    * store's recorded centroids — entries always carry vectors. */
-  def serveFromStoresClustered(spark: SparkSession, graphPath: String,
-      vecPath: String, queries: DataFrame, k: Int, beamRounds: Int,
-      entryVecs: DataFrame, beamWidth: Int = 0): DataFrame = {
-    import spark.implicits._
-    val cents = centroidsOf(spark, graphPath)
-    serveClusteredFrom(spark, graphPath, vecPath, queries, k, beamRounds,
-      entryVecs.select($"qid", $"node", clusterOf($"v", cents).as("node_bucket")),
-      beamWidth)
-  }
-
-  /** The clustered walk with EXPLICIT (qid, node, node_bucket) entries
-    * — what [[storedEntries]] feeds. `beamWidth` is the exact walk's
-    * search-list L (see [[serveFromStores]]); 0 = k. */
-  private def serveClusteredFrom(spark: SparkSession, graphPath: String,
-      vecPath: String, queries: DataFrame, k: Int, beamRounds: Int,
-      entries: DataFrame, beamWidth: Int = 0): DataFrame = {
-    import spark.implicits._
-    val l = if (beamWidth > 0) beamWidth else k
-    // stores are immutable within a serve: resolve each relation ONCE
-    // per request batch and run every round's expansion/fetch from it
-    val adjRel = readStore(spark, graphPath)
-    val vecRel = readStore(spark, vecPath)
-    val vecNb = bucketsOf(spark, vecPath)
-    def scoreKeep(cand: DataFrame, keep: Int) = cand
-      .join(broadcast(queries), Seq("qid"))
-      .join(fetchVectorsFrom(vecRel, vecNb, cand)
-        .select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-      .filter($"rn" <= keep)
-      .select($"qid", $"node", $"node_bucket")
-    val pool = beamTrace(entries,
-      expandClusteredFrom(adjRel, _),
-      fresh => scoreKeep(fresh.localCheckpoint(true), l),
-      beamRounds).last._2
-    // lazy pool union of checkpointed frontiers: cheaper to evaluate
-    // twice than to checkpoint once (see pqServeHead's shortlist)
-    scoreKeep(pool.filter($"node" =!= $"qid"), k)
-      .select($"qid", $"node")
   }
 
   /** Persist per-cell ENTRY POINTS next to a clustered store: for each
@@ -2122,8 +2034,7 @@ object KnnGraph {
   private def entryMembers(vecs: DataFrame, cents: Seq[Seq[Double]],
       per: Int): DataFrame = {
     import vecs.sparkSession.implicits._
-    val d = transform(typedlit(cents), c =>
-      aggregate(zip_with($"v", c, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
+    val d = transform(typedlit(cents), Pq.sqd($"v", _))
     vecs.select($"vec_id", $"v")
       .withColumn("ds", d)
       .withColumn("cid",
@@ -2162,22 +2073,34 @@ object KnnGraph {
     val present = members.select($"cid").distinct()
       .as[Int].collect().sorted.toSeq
     require(present.nonEmpty, "no cell has a member — empty corpus?")
+    // multi-probe parity with storedEntries(probes): a policy that
+    // will SERVE at P cells must evaluate (and prune) at P cells
+    enterCells(_, present, cents, members, probes)
+  }
+
+  /** THE entry rule [[plannedEntries]] and [[storedEntries]] share:
+    * route each query to its `probes` nearest centroids AMONG THE
+    * `present` CELLS (an empty cell has no member to enter at; ties →
+    * smaller index, [[clusterOf]]'s rule at P=1) and enter at every
+    * `members` row (cid, node, carried columns) of those cells. */
+  private def enterCells(queries: DataFrame, present: Seq[Int],
+      cents: Seq[Seq[Double]], members: DataFrame, probes: Int): DataFrame = {
+    import queries.sparkSession.implicits._
     val presentCents = present.map(cents(_))
+    val out = ("qid" +: members.columns.filterNot(_ == "cid")).map(col)
     if (probes <= 1)
-      (queries: DataFrame) => queries
+      queries
         .select($"qid", clusterOf($"v", presentCents).as("pidx"))
         .withColumn("cid", element_at(typedlit(present), $"pidx" + 1))
         .join(broadcast(members), Seq("cid"))
-        .select($"qid", $"node")
+        .select(out: _*)
     else
-      // multi-probe parity with storedEntries(probes): a policy that
-      // will SERVE at P cells must evaluate (and prune) at P cells
-      (queries: DataFrame) => queries
+      queries
         .select($"qid",
           posexplode(nearestCells($"v", presentCents, probes)))
         .withColumn("cid", element_at(typedlit(present), $"col" + 1))
         .join(broadcast(members), Seq("cid"))
-        .select($"qid", $"node")
+        .select(out: _*)
         .distinct()
   }
 
@@ -2197,11 +2120,13 @@ object KnnGraph {
     // the present-cell set and the entry rows derive from it, where a
     // separate distinct-collect plus a scan-backed broadcast paid two
     // plan+job round-trips per serve (r17). r18: the collected rows
-    // are held in the JVM entry cache (the centroidsCache discipline —
-    // path-keyed, part-listing-stamped, one live entry per store), so
+    // are held in the JVM entry cache ([[graft.util.StampedCache]]'s
+    // rule — path-keyed, listing-stamped, one live entry per store), so
     // a warm serve pays NO job here at all: the frame below is a local
     // dataset, and its broadcast builds collect-job-free.
-    val entryRows = clusteredEntriesOf(spark, path)
+    val entryRows = entriesSidecar(spark, path, clusteredEntriesCache,
+        "rerun writeEntries")(
+      _.select($"cid", $"node", $"node_bucket").as[(Int, Long, Int)].collect())
     val entries = spark.createDataset(entryRows.toSeq)
       .toDF("cid", "node", "node_bucket")
     val present = entryRows.map(_._1).distinct.sorted.toSeq
@@ -2211,49 +2136,28 @@ object KnnGraph {
     // `present` would make clusterOf yield a null pidx downstream
     require(present.nonEmpty,
       s"$path/_graft_entries is empty — rerun writeEntries before serving")
-    val presentCents = present.map(cents(_))
-    if (probes <= 1)
-      queries
-        .select($"qid", clusterOf($"v", presentCents).as("pidx"))
-        .withColumn("cid", element_at(typedlit(present), $"pidx" + 1))
-        .join(broadcast(entries), Seq("cid"))
-        .select($"qid", $"node", $"node_bucket")
-    else
-      queries
-        .select($"qid",
-          posexplode(nearestCells($"v", presentCents, probes)))
-        .withColumn("cid", element_at(typedlit(present), $"col" + 1))
-        .join(broadcast(entries), Seq("cid"))
-        .select($"qid", $"node", $"node_bucket")
-        .distinct()
+    enterCells(queries, present, cents, entries, probes)
   }
 
   /** JVM-wide `_graft_entries` sidecar cache for the CLUSTERED layout
-    * (cid, node, node_bucket rows) — path-keyed, part-listing-stamped
-    * (every sidecar swap mints fresh UUID-named parts, so an erase,
-    * append, or refresh re-stamps and replaces the entry; one live
-    * entry per store, the centroidsCache discipline). A serving
+    * (cid, node, node_bucket rows; [[graft.util.StampedCache]]'s rule —
+    * every sidecar swap mints fresh UUID-named parts, so an erase,
+    * append, or refresh re-stamps and replaces the entry). A serving
     * process holds its index metadata in memory; values are ≤
     * cells·slots small rows. */
   private val clusteredEntriesCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, Array[(Int, Long, Int)])]()
+    new graft.util.StampedCache[Array[(Int, Long, Int)]]
 
-  private def clusteredEntriesOf(spark: SparkSession,
-      path: String): Array[(Int, Long, Int)] = {
-    import spark.implicits._
+  /** A store's `_graft_entries` sidecar rows through `cache`, stamped by
+    * the sidecar's listing; a missing sidecar stays a loud error (`hint`
+    * names the writer to rerun), as the uncached read was. */
+  private def entriesSidecar[V](spark: SparkSession, path: String,
+      cache: graft.util.StampedCache[V], hint: String)(read: DataFrame => V): V = {
     val dir = new org.apache.hadoop.fs.Path(path, "_graft_entries")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a missing sidecar stays a loud error, as the uncached read was
-    require(fs.exists(dir),
-      s"$path has no _graft_entries sidecar — rerun writeEntries")
-    val stamp = fs.listStatus(dir)
-      .map(s => s"${s.getPath.getName}:${s.getLen}").sorted.mkString(",")
-    clusteredEntriesCache.compute(dir.toString, (_, prev) =>
-      if (prev != null && prev._1 == stamp) prev
-      else (stamp, spark.read.parquet(dir.toString)
-        .select($"cid", $"node", $"node_bucket")
-        .as[(Int, Long, Int)].collect()))._2
+    require(fs.exists(dir), s"$path has no _graft_entries sidecar — $hint")
+    cache(dir.toString, graft.util.StampedCache.listingStamp(fs, dir))(
+      read(spark.read.parquet(dir.toString)))
   }
 
   /** IVF-style MULTI-PROBE routing: the indices (into `centroids`) of
@@ -2270,8 +2174,7 @@ object KnnGraph {
     * nothing corpus-sized. */
   def nearestCells(v: org.apache.spark.sql.Column,
       centroids: Seq[Seq[Double]], probes: Int): org.apache.spark.sql.Column = {
-    val d = transform(typedlit(centroids), c =>
-      aggregate(zip_with(v, c, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
+    val d = transform(typedlit(centroids), Pq.sqd(v, _))
     // rank by (distance, index): zip each distance with its index,
     // sort the struct array (distance first), take the top-P indices
     val idx = transform(d, (dist, i) => struct(dist.as("d"), i.as("i")))
@@ -2279,36 +2182,20 @@ object KnnGraph {
       math.min(probes, centroids.length))
   }
 
-  /** Clustered serving warm-started from the stored per-cell entries —
-    * the fully store-resident serving head: graph, vectors, centroids,
-    * and entry points all come from the store; a request batch touches
-    * O(beam·k·rounds) vectors, the frontier's cluster buckets, and one
-    * broadcast-sized sidecar. */
-  def serveFromStoresClusteredWarm(spark: SparkSession, graphPath: String,
-      vecPath: String, queries: DataFrame, k: Int,
-      beamRounds: Int, beamWidth: Int = 0, entryProbes: Int = 1): DataFrame =
-    serveClusteredFrom(spark, graphPath, vecPath, queries, k, beamRounds,
-      storedEntries(spark, graphPath, queries, entryProbes), beamWidth)
-
-  /** One frontier expansion from the stored adjacency: reads ONLY the
-    * frontier nodes' buckets (≤ NumBuckets values, driver-bounded) and
-    * returns the distinct (qid, neighbor) pairs. */
-  def expandStored(spark: SparkSession, path: String,
-      frontier: DataFrame): DataFrame =
-    expandStoredFrom(readStore(spark, path), bucketsOf(spark, path), frontier)
-
-  /** [[expandStored]] over an already-resolved store relation (see
-    * [[expandClusteredFrom]] — one resolution per request batch). */
-  private def expandStoredFrom(store: DataFrame, nb: Int,
-      frontier: DataFrame): DataFrame = {
-    import store.sparkSession.implicits._
-    val buckets = frontier
-      .select(pmod($"node", lit(nb.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val pruned = store.filter($"bucket".isin(buckets: _*))
-    frontier.join(pruned, frontier("node") === pruned("src"))
-      .select(frontier("qid"), pruned("nbr").as("node")).distinct()
+  /** The undirected closure of an edge frame: (src, nbr) both ways,
+    * distinct — the adjacency every store and walk expands over. */
+  private[graft] def undirected(g: DataFrame): DataFrame = {
+    import g.sparkSession.implicits._
+    g.select($"src", $"nbr")
+      .union(g.select($"nbr".as("src"), $"src".as("nbr"))).distinct()
   }
+
+  /** One frontier expansion over an in-memory UNDIRECTED edge frame
+    * (src, nbr): the distinct (qid, neighbor) pairs — the corpus-side
+    * walks' twin of the stored [[expand]]. */
+  private[graft] def expandEdges(und: DataFrame)(frontier: DataFrame): DataFrame =
+    frontier.join(und, frontier("node") === und("src"))
+      .select(frontier("qid"), und("nbr").as("node")).distinct()
 
   /** The default RING entry: node (qid·37 + 1) mod n per query — zero
     * extra I/O, but a cold start the beam must walk in from. ASSUMES
@@ -2354,19 +2241,45 @@ object KnnGraph {
       serveStoredTrace(spark, path, vecs, queries, k, beamRounds, entries)
         .last._2, k)
 
-  /** The visited pool's exact-cosine top-`keep` per query — scoring is
-    * an inner join against the corpus, so a node whose VECTOR has been
-    * erased can never be answered even from a stale pool. */
-  private[graft] def rankPool(vecs: DataFrame, queries: DataFrame,
-      pool: DataFrame, keep: Int): DataFrame = {
-    import vecs.sparkSession.implicits._
-    pool
-      .filter($"node" =!= $"qid")
+  /** THE exact score-and-keep every distributed walk shares: each
+    * candidate (qid, node, carried columns) is scored by cosine against
+    * its query (`queries` — (qid, v), broadcast-sized) and the top
+    * `keep` per query by (cosine DESC, node ASC) survive, candidate
+    * columns unchanged. `vecs` is a (vec_id, v) frame — a corpus or a
+    * [[fetch]] — and scoring is an INNER join, so a node whose VECTOR
+    * has been erased can never be kept, even from a stale pool. */
+  private[graft] def scoreKeep(cand: DataFrame, queries: DataFrame,
+      vecs: DataFrame, keep: Int): DataFrame = {
+    import cand.sparkSession.implicits._
+    cand
       .join(broadcast(queries), Seq("qid"))
       .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
       .withColumn("rn", row_number().over(
         Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-      .filter($"rn" <= keep).select($"qid", $"node")
+      .filter($"rn" <= keep).select(cand.columns.map(col): _*)
+  }
+
+  /** The exact top-k truth a served recall is scored against: each
+    * query's k nearest corpus rows by (cosine DESC, id ASC), the query
+    * itself excluded — one broadcast nested-loop pass over the corpus
+    * (|Q|-bounded, never a cartesian). */
+  private[graft] def exactTruth(queries: DataFrame, vecs: DataFrame,
+      k: Int): DataFrame = {
+    import vecs.sparkSession.implicits._
+    broadcast(queries.select($"qid".as("src"), $"v".as("qv")))
+      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
+      .filter($"rn" <= k)
+      .select($"src".as("qid"), $"nbr".as("node"))
+  }
+
+  /** The visited pool's exact-cosine top-`keep` per query, the query
+    * itself excluded — [[scoreKeep]] plus the self filter. */
+  private[graft] def rankPool(vecs: DataFrame, queries: DataFrame,
+      pool: DataFrame, keep: Int): DataFrame = {
+    import vecs.sparkSession.implicits._
+    scoreKeep(pool.filter($"node" =!= $"qid"), queries, vecs, keep)
   }
 
   /** Persist the corpus VECTORS bucket-partitioned by `vec_id` — the
@@ -2374,7 +2287,7 @@ object KnnGraph {
     * loop joins candidates against a provided corpus frame, which at
     * 100 TB means a corpus SCAN per beam round; with this store the
     * scan becomes a partition-pruned, filter-pushed point fetch of the
-    * round's ≤ |Q|·beam·k candidate ids ([[fetchVectors]]). The default
+    * round's ≤ |Q|·beam·k candidate ids ([[fetch]]). The default
     * bucket count is BYTES-driven ([[autoBuckets]] — wide vector rows
     * get proportionally more buckets than narrow code rows at the same
     * n, the r13-measured constraint); pass an explicit count to pin a
@@ -2440,7 +2353,7 @@ object KnnGraph {
     * policy mis-sizes (the r13 metadata-floor pathology: 3125 KB-sized
     * buckets, 6× erase wall). Both clamp ends live HERE, not at call
     * sites. Readers need no code change: every store records its own
-    * count in `_graft_buckets` ([[bucketsOf]]). */
+    * count in `_graft_buckets` ([[openStore]]). */
   def scaledBucketsByBytes(estRowBytes: Long, n: Long,
       targetBytesPerBucket: Long = DefaultBucketBytes): Int = {
     require(estRowBytes > 0, "estRowBytes must be positive")
@@ -2609,7 +2522,7 @@ object KnnGraph {
       .agg(min(struct($"h", $"vec_id")).as("m"))
       .select($"slot", $"m.vec_id".as("node"))
     // dropDuplicates: a streamed-append store may hold replayed
-    // physical duplicates of a vec_id (readers dedup, the fetchVectors
+    // physical duplicates of a vec_id (readers dedup, fetch's
     // contract) — the join would otherwise emit the entry twice
     replaceEntriesSidecar(vecs.sparkSession, path,
       reps.join(vecs.select($"vec_id".as("node"), $"v"), Seq("node"))
@@ -2630,7 +2543,7 @@ object KnnGraph {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p))
       writeHashEntries(
-        readStore(spark, path).select($"vec_id", $"v"), path, slots)
+        openStore(spark, path).rel.select($"vec_id", $"v"), path, slots)
   }
 
   /** The hash store's entry representatives ([[writeHashEntries]]),
@@ -2641,22 +2554,14 @@ object KnnGraph {
   def hashEntries(spark: SparkSession,
       path: String): Seq[(Long, Array[Double])] = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path, "_graft_entries")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"$path has no _graft_entries sidecar — rerun writeHashEntries " +
-        "(stores written by writeVectors carry it automatically)")
-    // JVM sidecar cache, the centroidsCache discipline (path-keyed,
-    // part-listing-stamped, one live entry per store): a warm serve's
-    // entry resolution then costs no job. Callers never mutate the
-    // returned arrays (score-and-pick only).
-    val stamp = fs.listStatus(p)
-      .map(s => s"${s.getPath.getName}:${s.getLen}").sorted.mkString(",")
-    val rows = hashEntriesCache.compute(p.toString, (_, prev) =>
-      if (prev != null && prev._1 == stamp) prev
-      else (stamp, spark.read.parquet(p.toString)
-        .select($"node", $"v").as[(Long, Seq[Double])]
-        .collect().map { case (id, v) => id -> v.toArray }.toSeq))._2
+    // JVM sidecar cache ([[graft.util.StampedCache]]'s rule): a warm
+    // serve's entry resolution then costs no job. Callers never mutate
+    // the returned arrays (score-and-pick only).
+    val rows = entriesSidecar(spark, path, hashEntriesCache,
+        "rerun writeHashEntries (stores written by writeVectors carry it " +
+          "automatically)")(
+      _.select($"node", $"v").as[(Long, Seq[Double])]
+        .collect().map { case (id, v) => id -> v.toArray }.toSeq)
     require(rows.nonEmpty,
       s"$path/_graft_entries is empty — rerun writeHashEntries")
     rows
@@ -2664,8 +2569,7 @@ object KnnGraph {
 
   /** See [[hashEntries]] — values are ≤ slots (id, vector) pairs. */
   private val hashEntriesCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, Seq[(Long, Array[Double])])]()
+    new graft.util.StampedCache[Seq[(Long, Array[Double])]]
 
   /** Sidecar warm entries for the DISTRIBUTED heads — the
     * [[serveCoordinated]] default's one-broadcast-join twin: each query
@@ -2708,74 +2612,59 @@ object KnnGraph {
         (pmod($"qid", lit(nodes.length.toLong)) + 1).cast("int")).as("node"))
   }
 
-  /** Point-fetch the vectors of a BOUNDED id frame from a
-    * [[writeVectors]] store: partition pruning cuts the scan to the
-    * ids' buckets, and the pushed `vec_id IN (...)` filter skips row
-    * groups inside them. `ids` must be serving-bounded (a frontier or
-    * visited pool — ≤ |Q|·(1+rounds·k) ids by construction; the
-    * driver-side list is the same boundedness [[expandStored]]'s
-    * bucket collect already relies on). */
-  def fetchVectors(spark: SparkSession, path: String,
-      ids: DataFrame): DataFrame =
-    fetchVectorsFrom(readStore(spark, path), bucketsOf(spark, path), ids)
-
-  /** [[fetchVectors]] over an already-resolved store relation (see
-    * [[expandClusteredFrom]] — one resolution per request batch). */
-  private def fetchVectorsFrom(store: DataFrame, numBuckets: Int,
-      ids: DataFrame): DataFrame = {
-    import store.sparkSession.implicits._
+  /** Point-fetch the rows of a BOUNDED id frame (`node`) from a
+    * `vec_id`-bucketed store ([[writeVectors]], [[writeCodes]]):
+    * partition pruning cuts the scan to the ids' buckets, and the pushed
+    * `vec_id IN (...)` filter skips row groups inside them. Returns the
+    * store's rows without `bucket`. `ids` must be serving-bounded (a
+    * frontier or visited pool — ≤ |Q|·(1+rounds·k) ids by construction;
+    * the driver-side list is the same boundedness [[expand]]'s bucket
+    * collect already relies on). */
+  private[graft] def fetch(store: Store, ids: DataFrame): DataFrame = {
+    import ids.sparkSession.implicits._
     val idList = ids.select($"node").distinct().as[Long].collect()
-    val buckets = idList.map(bucketOf(_, numBuckets)).distinct.toSeq
+    val buckets = idList.map(bucketOf(_, store.buckets)).distinct.toSeq
     // distinct: streamed appends are retry-safe at the ANSWER level —
     // a replayed micro-batch may leave duplicate physical rows, and
     // without the dedup one node could occupy several top-k slots
-    store
+    store.rel
       .filter($"bucket".isin(buckets: _*) && $"vec_id".isin(idList.toSeq: _*))
-      .select($"vec_id", $"v").distinct()
+      .drop("bucket").distinct()
   }
 
-  /** Beam-search serve where BOTH sides are stores: edges from the
-    * [[writeStore]] adjacency (pruned expansion), vectors from the
-    * [[writeVectors]] store (pruned point fetch) — no corpus frame
-    * anywhere in the loop, so one serve touches O(beam·k·steps)
-    * vectors and ≤ beam buckets of each store regardless of corpus
-    * size. Answers are EXACTLY [[serveStored]]'s (StoredGraphSpec
-    * asserts equality and the pruned plans). */
+  /** Beam-search serve where every side is a store: edges from the
+    * [[writeStore]] or [[writeStoreClustered]] adjacency (pruned
+    * [[expand]]), vectors from the [[writeVectors]] store (pruned
+    * [[fetch]]) — no corpus frame anywhere in the loop, so one serve
+    * touches O(beam·k·steps) vectors and ≤ beam buckets of each store
+    * regardless of corpus size. Answers are EXACTLY [[serveStored]]'s
+    * (StoredGraphSpec asserts equality and the pruned plans), and a
+    * clustered store answers what the hash store of the same edges
+    * answers from the same entries, while a round's scan shrinks from
+    * `min(|frontier|, N)` hash buckets to the frontier's cluster
+    * footprint (StoredClusteredSpec asserts both).
+    *
+    * Entries default to [[ringEntries]] on a hash store and to the
+    * stored per-cell entries ([[storedEntries]] over `entryProbes`
+    * cells) on a clustered one — the fully store-resident head: graph,
+    * vectors, centroids, and entry points all come from the store.
+    * Explicit entries are (qid, node) on a hash store; on a clustered
+    * store they carry the node's vector `v` and are routed by
+    * [[clusterOf]] against the store's recorded centroids. `beamWidth`
+    * is DiskANN's search-list L applied to the EXACT walk — the
+    * per-round keep that sets the pool's ceiling (the quantized head
+    * has carried the same knob since r16). 0 = k, the historical
+    * budget, so every oracle-pinned walk hash is untouched; the final
+    * answer is always top-k regardless of L. */
   def serveFromStores(spark: SparkSession, graphPath: String,
       vecPath: String, queries: DataFrame, k: Int, beamRounds: Int,
-      entries: Option[DataFrame] = None, beamWidth: Int = 0): DataFrame = {
-    import spark.implicits._
-    // beamWidth is DiskANN's search-list L applied to the EXACT walk —
-    // the per-round keep that sets the pool's ceiling (the quantized
-    // head has carried the same knob since r16). 0 = k, the historical
-    // budget, so every oracle-pinned walk hash is untouched; the final
-    // answer is always top-k regardless of L.
-    val l = if (beamWidth > 0) beamWidth else k
-    // one relation resolution per request batch (stores are immutable
-    // within a serve), shared by every round's expansion and fetch
-    val adjRel = readStore(spark, graphPath)
-    val adjNb = bucketsOf(spark, graphPath)
-    val vecRel = readStore(spark, vecPath)
-    val vecNb = bucketsOf(spark, vecPath)
-    def scoreKeep(cand: DataFrame, keep: Int) = cand
-      .join(broadcast(queries), Seq("qid"))
-      .join(fetchVectorsFrom(vecRel, vecNb, cand)
-        .select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-      .filter($"rn" <= keep).select($"qid", $"node")
-    val pool = beamTrace(
-      entries.getOrElse(ringEntries(vecRel, queries)),
-      expandStoredFrom(adjRel, adjNb, _),
-      // checkpoint the candidate set ONCE: scoreKeep evaluates its
-      // input twice (the driver-side id collect for the pruned fetch,
-      // then the scoring join) — without this the pruned store scan
-      // and anti-join would re-run per evaluation
-      fresh => scoreKeep(fresh.localCheckpoint(true), l),
-      beamRounds).last._2
-    // lazy pool union of checkpointed frontiers: cheaper to evaluate
-    // twice than to checkpoint once (see pqServeHead's shortlist)
-    scoreKeep(pool.filter($"node" =!= $"qid"), k)
+      entries: Option[DataFrame] = None, beamWidth: Int = 0,
+      entryProbes: Int = 1): DataFrame = {
+    val vec = openStore(spark, vecPath)
+    storeWalk(spark, graphPath, vec, queries, k, beamRounds, entries,
+      beamWidth, entryProbes)(
+      (cand, keep) => scoreKeep(cand, queries, fetch(vec, cand), keep),
+      (pool, _) => scoreKeep(pool, queries, fetch(vec, pool), k))
   }
 
   /** Persist flat-PQ CODES bucket-partitioned by `vec_id` — the
@@ -2799,40 +2688,25 @@ object KnnGraph {
     writeBucketMeta(codes.sparkSession, path, nb)
   }
 
-  /** Point-fetch the CODES of a bounded id frame from a [[writeCodes]]
-    * store — [[fetchVectors]]'s shape (bucket pruning + pushed id
-    * filter + retry-dedup), returning `node` + the code columns. */
-  def fetchCodes(spark: SparkSession, path: String,
-      ids: DataFrame): DataFrame =
-    fetchCodesFrom(readStore(spark, path), bucketsOf(spark, path), ids)
-
-  /** [[fetchCodes]] over an already-resolved store relation (see
-    * [[expandClusteredFrom]] — one resolution per request batch). */
-  private def fetchCodesFrom(store: DataFrame, numBuckets: Int,
-      ids: DataFrame): DataFrame = {
-    import store.sparkSession.implicits._
-    val idList = ids.select($"node").distinct().as[Long].collect()
-    val buckets = idList.map(bucketOf(_, numBuckets)).distinct.toSeq
-    store
-      .filter($"bucket".isin(buckets: _*) && $"vec_id".isin(idList.toSeq: _*))
-      .drop("bucket").distinct()
-      .withColumnRenamed("vec_id", "node")
-  }
-
   /** PQ-GUIDED stored serving — sq24's algorithm lifted onto the
-    * stored layout: every beam round ranks fresh candidates by ADC
+    * stored layouts: every beam round ranks fresh candidates by ADC
     * distance over codes POINT-FETCHED from the [[writeCodes]] store
     * (M bytes per candidate; the vector store is untouched inside the
-    * loop), and only the final answer re-ranks the pool's ADC-top-2k
+    * loop), and only the final answer re-ranks the pool's ADC-top-W
     * shortlist by exact cosine from the [[writeVectors]] store. The
     * codebook (`cb`, a few KB) rides in the query LUT broadcast —
     * serving deployments hold it in memory like sq14's quantizers.
     * Compared to [[serveFromStores]], each round's fetch shrinks by
     * d·8/M (128× at d=64, M=8) at the measured recall cost sq24
     * reports (the walk follows quantized distances); the exact final
-    * re-rank touches ≤ 2k vectors per query.
-    * StoredPqServeSpec replays the whole loop driver-side with
-    * bit-identical arithmetic and asserts the answers equal exactly.
+    * re-rank touches ≤ W vectors per query. Layout and entries follow
+    * [[serveFromStores]] (the ring default is over the CODES store);
+    * on a clustered store with its stored entries this is the COMPOSED
+    * production head (sq28 — the DiskANN/Vamana deployment shape), and
+    * its answers over the same edges and entries EQUAL the hash
+    * layout's (ComposedGraphStoreSpec). StoredPqServeSpec replays the
+    * whole loop driver-side with bit-identical arithmetic and asserts
+    * the answers equal exactly.
     *
     * CONTRACT: the codes store must cover every servable graph node —
     * the ADC rank inner-joins it, so a node with a vector but no code
@@ -2842,132 +2716,112 @@ object KnnGraph {
     * the sidecar in lockstep: streamed inserts append codes via
     * [[graft.streaming.StreamingGraphIngest.insertBatch]]'s `codes`
     * option, and erasure removes them via [[eraseStored]]'s
-    * `codesPath`. */
+    * `codesPath`.
+    *
+    * 100 TB: a request batch touches the entries, the frontier's
+    * buckets of the k·n edge list, M-byte code rows for
+    * O(beam·k·rounds) candidates, and ≤ W full vectors per query at the
+    * end — nothing corpus-sized anywhere. */
   def serveFromStoresPq(spark: SparkSession, graphPath: String,
       codesPath: String, vecPath: String, queries: DataFrame,
       cb: Seq[Seq[Seq[Double]]], k: Int, beamRounds: Int,
       entries: Option[DataFrame] = None, rerankWidth: Int = 0,
-      beamWidth: Int = 0): DataFrame = {
-    val adjRel = readStore(spark, graphPath)
-    val adjNb = bucketsOf(spark, graphPath)
-    pqServeHead(spark, codesPath, vecPath, queries, cb, k, beamRounds,
-      entries.getOrElse(ringEntries(readStore(spark, codesPath), queries)),
-      expandStoredFrom(adjRel, adjNb, _), carry = Nil,
-      rerankWidth = rerankWidth, beamWidth = beamWidth)
-  }
-
-  /** THE quantized serving walk both PQ heads share — [[beamTrace]]'s
-    * skeleton with the ADC scorer ([[serveFromStoresPq]] on the hash
-    * layout, [[serveFromStoresClusteredPqWarm]] on the clustered one,
-    * which carries `node_bucket` through `carry`). One walk, one
-    * shortlist rule, one exact re-rank: the two heads' answers are
-    * equality-proven over the same edges (ComposedGraphStoreSpec), and
-    * keeping one scorer is what keeps them in lockstep — a tie-break
-    * or shortlist fix lands once. */
-  private def pqServeHead(spark: SparkSession, codesPath: String,
-      vecPath: String, queries: DataFrame, cb: Seq[Seq[Seq[Double]]],
-      k: Int, beamRounds: Int, entries: DataFrame,
-      expand: DataFrame => DataFrame, carry: Seq[String],
-      rerankWidth: Int = 0, beamWidth: Int = 0): DataFrame = {
+      beamWidth: Int = 0, entryProbes: Int = 1): DataFrame = {
     import spark.implicits._
     val m = cb.length
     val sub = cb.head.head.length
-    // one relation resolution per request batch (stores are immutable
-    // within a serve): every round's code fetch and the final vector
-    // re-rank run from these
-    val codesRel = readStore(spark, codesPath)
-    val codesNb = bucketsOf(spark, codesPath)
-    val vecRel = readStore(spark, vecPath)
-    val vecNb = bucketsOf(spark, vecPath)
+    val codes = openStore(spark, codesPath)
+    val vec = openStore(spark, vecPath)
     val qluts = (0 until m).foldLeft(queries.toDF()) { (df, mi) =>
       df.withColumn(s"lut$mi", Pq.lutCol($"v", cb, sub, mi))
     }.drop("v")
     val adc = (0 until m).map(mi =>
       element_at(col(s"lut$mi"), col(s"c$mi") + 1)).reduce(_ + _)
-    // `carry` columns ride through the keep unchanged — the clustered
+    // candidate columns ride through the keep unchanged — the clustered
     // walk needs each kept candidate's bucket (the edge that discovered
     // a node names where its adjacency lives)
-    val keepCols = (Seq("qid", "node") ++ carry).map(col)
     def adcKeep(cand: DataFrame, keep: Int) = cand
       .join(broadcast(qluts), Seq("qid"))
-      .join(fetchCodesFrom(codesRel, codesNb, cand), Seq("node"))
+      .join(fetch(codes, cand).withColumnRenamed("vec_id", "node"), Seq("node"))
       .withColumn("adist", adc)
       .withColumn("rn", row_number().over(
         Window.partitionBy($"qid").orderBy($"adist".asc, $"node")))
-      .filter($"rn" <= keep).select(keepCols: _*)
+      .filter($"rn" <= keep).select(cand.columns.map(col): _*)
     // `beamWidth` (DiskANN's L) widens the per-round ADC keep past k:
     // the pool a query can ever re-rank is ≈ entries + rounds·L rows,
     // so past the shortlist knob the WALK's coverage is the other
     // recall ceiling — the probe sweep measures both
-    val pool = beamTrace(entries, expand,
-      fresh => adcKeep(fresh.localCheckpoint(true),
-        if (beamWidth > 0) beamWidth else k),
-      beamRounds).last._2
-    // the exact re-rank's shortlist width is the quantization-error
-    // recovery knob (the standard two-stage recipe: ADC ranks, exact
-    // re-ranks the top-W): W = 2k default; the ADC sweep in COVERAGE.md
-    // "ADC ceiling swept" records the recall-vs-W curve that justifies
-    // it. The query's ENTRY NODES always join
-    // the exact re-rank (r16, measured on the perturbed-unique x100
-    // replica): an entry-published fresh insert was read 0/4 through
-    // this head while the exact head read 4/4 — its PQ code collided
-    // with enough near-duplicates that the ADC top-W's ascending-id
-    // tie-break never admitted the (largest-id) arrival. Ranking by
-    // code resolution systematically disadvantages exactly the rows
-    // freshness publishes, so the freshness contract ("entry-published
-    // ⇒ servable", StreamingGraphIngest) must not pass through ADC:
-    // entries are ≤slots-per-cell rows per query, already resolved,
-    // and the exact re-rank is the authority — unioning them costs a
-    // few extra vector fetches and makes the guarantee head-invariant.
-    // the pool is a lazy union of already-checkpointed frontiers, so
-    // the two evaluations adcKeep makes of it (the code-fetch id
-    // collect, then the scoring join) each cost a scan of a handful of
-    // local blocks — cheaper than the eager checkpoint job+plan this
-    // used to pay per serve (r17)
-    val shortlist = adcKeep(
-        pool.filter($"node" =!= $"qid"),
-        if (rerankWidth > 0) rerankWidth else 2 * k)
-      .select($"qid", $"node")
-      .union(entries.select($"qid", $"node").filter($"node" =!= $"qid"))
-      .distinct().localCheckpoint(true)
-    // the loop's ONLY full-precision reads: ≤ max(2k, W) + entry rows
-    // of vectors per query
-    shortlist
-      .join(broadcast(queries), Seq("qid"))
-      .join(fetchVectorsFrom(vecRel, vecNb, shortlist)
-        .select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-      .filter($"rn" <= k).select($"qid", $"node")
+    storeWalk(spark, graphPath, codes, queries, k, beamRounds, entries,
+      beamWidth, entryProbes)(adcKeep, { (pool, start) =>
+      // the exact re-rank's shortlist width is the quantization-error
+      // recovery knob (the standard two-stage recipe: ADC ranks, exact
+      // re-ranks the top-W): W = 2k default; the ADC sweep in COVERAGE.md
+      // "ADC ceiling swept" records the recall-vs-W curve that justifies
+      // it. The query's ENTRY NODES always join
+      // the exact re-rank (r16, measured on the perturbed-unique x100
+      // replica): an entry-published fresh insert was read 0/4 through
+      // this head while the exact head read 4/4 — its PQ code collided
+      // with enough near-duplicates that the ADC top-W's ascending-id
+      // tie-break never admitted the (largest-id) arrival. Ranking by
+      // code resolution systematically disadvantages exactly the rows
+      // freshness publishes, so the freshness contract ("entry-published
+      // ⇒ servable", StreamingGraphIngest) must not pass through ADC:
+      // entries are ≤slots-per-cell rows per query, already resolved,
+      // and the exact re-rank is the authority — unioning them costs a
+      // few extra vector fetches and makes the guarantee head-invariant.
+      // the pool is a lazy union of already-checkpointed frontiers, so
+      // the two evaluations adcKeep makes of it (the code-fetch id
+      // collect, then the scoring join) each cost a scan of a handful of
+      // local blocks — cheaper than the eager checkpoint job+plan this
+      // used to pay per serve (r17)
+      val shortlist = adcKeep(pool, if (rerankWidth > 0) rerankWidth else 2 * k)
+        .select($"qid", $"node")
+        .union(start.select($"qid", $"node").filter($"node" =!= $"qid"))
+        .distinct().localCheckpoint(true)
+      // the loop's ONLY full-precision reads: ≤ max(2k, W) + entry rows
+      // of vectors per query
+      scoreKeep(shortlist, queries, fetch(vec, shortlist), k)
+    })
   }
 
-  /** The COMPOSED production serving head (sq28 — the DiskANN/Vamana
-    * deployment shape, every store-resident piece in ONE loop): entry
-    * points from the `_graft_entries` sidecar (zero corpus I/O,
-    * [[storedEntries]]), expansion over the CLUSTERED α-pruned
-    * adjacency (locality-pruned scans with carried buckets,
-    * [[expandClustered]]), beam ranking by ADC over the PQ codes
-    * sidecar (M bytes per candidate, [[fetchCodes]]), and ONE exact
-    * re-rank of the ADC top-2k from the [[writeVectors]] store. The
-    * walk is [[beamTrace]]'s skeleton with [[serveFromStoresPq]]'s
-    * scorer on [[expandClustered]]'s frontiers — answers over the same
-    * edges and entries EQUAL the hash-layout quantized head's
-    * (ComposedGraphStoreSpec): composition changes where edges live
-    * and what a round reads, never which candidates are ranked.
-    *
-    * 100 TB: a request batch touches the |cells|-row entries sidecar,
-    * the frontier's cluster buckets of the k·n edge list, M-byte code
-    * rows for O(beam·k·rounds) candidates, and ≤ 2k full vectors per
-    * query at the end — nothing corpus-sized anywhere. */
-  def serveFromStoresClusteredPqWarm(spark: SparkSession, graphPath: String,
-      codesPath: String, vecPath: String, queries: DataFrame,
-      cb: Seq[Seq[Seq[Double]]], k: Int, beamRounds: Int,
-      rerankWidth: Int = 0, beamWidth: Int = 0, entryProbes: Int = 1): DataFrame = {
-    val adjRel = readStore(spark, graphPath)
-    pqServeHead(spark, codesPath, vecPath, queries, cb, k, beamRounds,
-      storedEntries(spark, graphPath, queries, entryProbes),
-      expandClusteredFrom(adjRel, _), carry = Seq("node_bucket"),
-      rerankWidth = rerankWidth, beamWidth = beamWidth)
+  /** THE store-served beam walk both heads run — [[beamTrace]]'s
+    * skeleton over a graph store resolved once per request, with the
+    * head's scorer: `keep` ranks a round's fresh candidates down to the
+    * next frontier (carried columns unchanged), and `answer` turns the
+    * visited pool (self excluded) and the resolved entries into the
+    * final (qid, node) top-k. `scored` is the store the scorer reads
+    * per round — the ring default's node count comes from it. One walk,
+    * one entry rule, one layout switch: a walk fix lands once for every
+    * head, and the heads' answers stay equality-provable over the same
+    * edges. */
+  private def storeWalk(spark: SparkSession, graphPath: String,
+      scored: Store, queries: DataFrame, k: Int, beamRounds: Int,
+      entries: Option[DataFrame], beamWidth: Int, entryProbes: Int)(
+      keep: (DataFrame, Int) => DataFrame,
+      answer: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    import spark.implicits._
+    val graph = openStore(spark, graphPath)
+    require(graph.clustered || entryProbes == 1,
+      s"entryProbes = $entryProbes routes by cell, but $graphPath is a " +
+        "hash-layout store")
+    val start = (entries, graph.clustered) match {
+      case (None, false) => ringEntries(scored.rel, queries)
+      case (None, true) => storedEntries(spark, graphPath, queries, entryProbes)
+      case (Some(e), false) => e
+      case (Some(e), true) => e.select($"qid", $"node",
+        clusterOf($"v", centroidsOf(spark, graphPath)).as("node_bucket"))
+    }
+    val pool = beamTrace(start, expand(graph, _),
+      // checkpoint the candidate set ONCE: a keep evaluates its input
+      // twice (the driver-side id collect for the pruned fetch, then
+      // the scoring join) — without this the pruned store scan and
+      // anti-join would re-run per evaluation
+      fresh => keep(fresh.localCheckpoint(true),
+        if (beamWidth > 0) beamWidth else k),
+      beamRounds).last._2
+    // the pool is a lazy union of checkpointed frontiers: cheaper to
+    // evaluate twice than to checkpoint once
+    answer(pool.filter($"node" =!= $"qid"), start).select($"qid", $"node")
   }
 
   /** Driver-side replica of [[graft.functions.CosineSimilarity]]'s
@@ -3026,9 +2880,11 @@ object KnnGraph {
       beamRounds: Int,
       entries: Option[Map[Long, Long]] = None): Seq[(Long, Long)] = {
     import spark.implicits._
-    // each store carries its own recorded bucket count
-    val graphNb = bucketsOf(spark, graphPath)
-    val vecNb = bucketsOf(spark, vecPath)
+    // one resolution per request batch for each store (each carries
+    // its own recorded bucket count); every round's point-reads run
+    // from these — the stores are immutable within a serve
+    val graph = openStore(spark, graphPath)
+    val vec = openStore(spark, vecPath)
     val entry: Map[Long, Long] = entries.getOrElse {
       // default entries come from the store's own `_graft_entries`
       // sidecar (≤slots rows, erase-aware, every writeVectors store
@@ -3047,16 +2903,11 @@ object KnnGraph {
           .min(bestFirst)._1
       }.toMap
     }
-    // one relation resolution per request batch for each store; every
-    // round's point-reads run from these (the stores are immutable
-    // within a serve)
-    val vecRel = readStore(spark, vecPath)
-    val adjRel = readStore(spark, graphPath)
     def fetchVecs(ids: Set[Long]): Map[Long, Array[Double]] =
       if (ids.isEmpty) Map.empty
       else {
-        val bs = ids.map(bucketOf(_, vecNb)).toSeq
-        vecRel
+        val bs = ids.map(bucketOf(_, vec.buckets)).toSeq
+        vec.rel
           .filter($"bucket".isin(bs: _*) && $"vec_id".isin(ids.toSeq: _*))
           .select($"vec_id", $"v").as[(Long, Seq[Double])]
           .collect().map { case (id, v) => id -> v.toArray }.toMap
@@ -3078,9 +2929,9 @@ object KnnGraph {
       queries.map { case (qid, _) => qid -> Seq(entry(qid)) }.toMap
     for (_ <- 1 to beamRounds if frontier.valuesIterator.exists(_.nonEmpty)) {
       val fNodes = frontier.valuesIterator.flatten.toSet
-      val fBuckets = fNodes.map(bucketOf(_, graphNb)).toSeq
+      val fBuckets = fNodes.map(bucketOf(_, graph.buckets)).toSeq
       // pruned adjacency point-read: one job for the whole batch
-      val adj = adjRel
+      val adj = graph.rel
         .filter($"bucket".isin(fBuckets: _*) && $"src".isin(fNodes.toSeq: _*))
         .select($"src", $"nbr").as[(Long, Long)].collect()
         .groupBy(_._1).map { case (s, a) => s -> a.map(_._2).toSeq }
@@ -3115,18 +2966,11 @@ object KnnGraph {
   def serveStoredTrace(spark: SparkSession, path: String, vecs: DataFrame,
       queries: DataFrame, k: Int, beamRounds: Int,
       entries: Option[DataFrame] = None): Seq[(Int, DataFrame)] = {
-    import spark.implicits._
-    val adjRel = readStore(spark, path)
-    val adjNb = bucketsOf(spark, path)
+    val adj = openStore(spark, path)
     beamTrace(
       entries.getOrElse(ringEntries(vecs, queries)),
-      expandStoredFrom(adjRel, adjNb, _),
-      fresh => fresh
-        .join(broadcast(queries), Seq("qid"))
-        .join(vecs.select($"vec_id".as("node"), $"v".as("cv")), Seq("node"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy(cosine($"v", $"cv").desc, $"node")))
-        .filter($"rn" <= k).select($"qid", $"node"),
+      expand(adj, _),
+      scoreKeep(_, queries, vecs, k),
       beamRounds)
   }
 
@@ -3143,8 +2987,9 @@ object KnnGraph {
     * candidate frame down to the next frontier (checkpointing its
     * input first if it evaluates it more than once). One skeleton, four
     * scorers: exact-from-corpus ([[serveStoredTrace]]), exact-from-store
-    * ([[serveFromStores]]), ADC-from-codes ([[serveFromStoresPq]]), and
-    * the in-memory query loops (sq22/sq24/sq25) — a walk fix lands once. */
+    * ([[serveFromStores]]) and ADC-from-codes ([[serveFromStoresPq]]) —
+    * the store heads through [[storeWalk]] — and the in-memory query
+    * loops (sq22/sq24/sq25) — a walk fix lands once. */
   private[graft] def beamTrace(entries: DataFrame,
       expand: DataFrame => DataFrame,
       keep: DataFrame => DataFrame,

@@ -70,9 +70,10 @@ object Pq {
   /** Squared distance as the left-associated zip_with/aggregate fold —
     * the ONE definition of the arithmetic every DuckDB oracle replays
     * with explicit j-ordered sums ([[lutCol]], [[ivfPqEncode]]'s coarse
-    * routing, and through lutCol every encode/LUT path). Keep them in
+    * routing, and through lutCol every encode/LUT path; the stored
+    * layouts' cell routing, [[KnnGraph.clusterOf]]). Keep them in
     * lockstep: a fold-order change here changes hashes everywhere. */
-  private def sqd(a: Column, b: Column): Column =
+  private[similarity] def sqd(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
 
   /** OPQ rotation for the RESIDUAL space (Ge et al. 2014 applied inside

@@ -63,9 +63,9 @@ object StoredIndex {
       .toDF("qid", "list_id", "luts")
     // literal IN over the partition column → PartitionFilters: only the
     // probed lists' directories are ever read; the schema-pinned read
-    // (KnnGraph.readStore) skips the per-request footer-inference job —
+    // (KnnGraph.openStore) skips the per-request footer-inference job —
     // a serving node knows its index's schema (r18, guide §1.5/§6)
-    val pruned = KnnGraph.readStore(spark, codesDir)
+    val pruned = KnnGraph.openStore(spark, codesDir).rel
       .filter($"list_id".isin(lists: _*))
     val adc = cb.indices.map(mi =>
       element_at(element_at($"luts", mi + 1), col(s"c$mi") + 1)).reduce(_ + _)
@@ -97,7 +97,7 @@ object StoredIndex {
     }
     val lutDf = lutRows.toDF("qid", "list_id", "luts")
     val allLists = lutRows.map(_._2).distinct.sorted
-    val pruned = KnnGraph.readStore(spark, codesDir)
+    val pruned = KnnGraph.openStore(spark, codesDir).rel
       .filter($"list_id".isin(allLists: _*))
     val adc = cb.indices.map(mi =>
       element_at(element_at($"luts", mi + 1), col(s"c$mi") + 1)).reduce(_ + _)

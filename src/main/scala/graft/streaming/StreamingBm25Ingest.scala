@@ -124,7 +124,7 @@ object StreamingBm25Ingest {
     val buckets = qb.select($"bkt").distinct().as[Long].collect().sorted
     // dedupe-on-read over the PRUNED scan only (|query terms|/64 of the
     // index): a replayed foreachBatch append becomes invisible here
-    val post = graft.similarity.KnnGraph.readStore(spark, root + "/postings")
+    val post = graft.similarity.KnnGraph.openStore(spark, root + "/postings").rel
       .filter(col("bkt").isin(buckets: _*))
       .dropDuplicates("batch_id", "term", "doc_id")
     val dfreq = IncrementalAgg.read(spark, root + "/df", "term")

@@ -73,9 +73,9 @@ object StreamingGraphIngest {
       * hard-wiring bucket 0 would silently lose arrivals. An empty
       * store is a loud error, never a dropped batch. */
     def sampleBucket(path: String): DataFrame = {
-      val nb = KnnGraph.bucketsOf(spark, path)
-      (0 until nb).iterator
-        .map(b => KnnGraph.readStore(spark, path).filter($"bucket" === b))
+      val store = KnnGraph.openStore(spark, path)
+      (0 until store.buckets).iterator
+        .map(b => store.rel.filter($"bucket" === b))
         .find(!_.isEmpty)
         .getOrElse(throw new IllegalStateException(
           s"no entry candidates: every bucket of $path is empty"))
@@ -130,19 +130,9 @@ object StreamingGraphIngest {
     // the answer level — storage-level exactly-once belongs to a
     // snapshot-backed store. Appends follow each store's RECORDED
     // bucket count (a modulus mismatch would silently mis-prune).
-    nbrPairs.toDF("src", "nbr")
-      .union(nbrPairs.map(_.swap).toDF("src", "nbr"))
-      .withColumn("bucket",
-        pmod($"src",
-          lit(KnnGraph.bucketsOf(spark, storePath).toLong)).cast("int"))
-      .write.mode("append").partitionBy("bucket").parquet(storePath)
-    vecPath.foreach { vp =>
-      batch.select($"vec_id", $"v")
-        .withColumn("bucket",
-          pmod($"vec_id",
-            lit(KnnGraph.bucketsOf(spark, vp).toLong)).cast("int"))
-        .write.mode("append").partitionBy("bucket").parquet(vp)
-    }
+    appendHashed(nbrPairs.toDF("src", "nbr")
+      .union(nbrPairs.map(_.swap).toDF("src", "nbr")), "src", storePath)
+    vecPath.foreach(appendHashed(batch.select($"vec_id", $"v"), "vec_id", _))
     // the PQ codes sidecar appends LAST: a crash window leaves a node
     // with a vector but no code — invisible to the quantized head's
     // ADC rank (recall-only degradation the next refine/rebuild
@@ -157,19 +147,24 @@ object StreamingGraphIngest {
     * one definition keeps the hash and clustered paths in lockstep). */
   private def appendCodes(batch: DataFrame, codesPath: String,
       cb: Seq[Seq[Seq[Double]]]): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    graft.similarity.Pq
-      .pqEncode(batch.select($"vec_id", $"v"), cb, cb.head.head.length)
-      .withColumn("bucket",
-        pmod($"vec_id",
-          lit(KnnGraph.bucketsOf(spark, codesPath).toLong)).cast("int"))
-      .write.mode("append").partitionBy("bucket").parquet(codesPath)
+    import batch.sparkSession.implicits._
+    appendHashed(graft.similarity.Pq
+      .pqEncode(batch.select($"vec_id", $"v"), cb, cb.head.head.length),
+      "vec_id", codesPath)
   }
+
+  /** Append rows to a hash-layout store under its RECORDED bucket count
+    * (`bucket = pmod(key, buckets)`) — a writer/reader modulus mismatch
+    * would silently mis-prune. */
+  private def appendHashed(rows: DataFrame, key: String, path: String): Unit =
+    rows.withColumn("bucket", pmod(col(key),
+        lit(KnnGraph.openStore(rows.sparkSession, path).buckets.toLong)).cast("int"))
+      .write.mode("append").partitionBy("bucket").parquet(path)
 
   /** [[insertBatch]] for the CLUSTERED layout
     * ([[KnnGraph.writeStoreClustered]]): arrivals search the current
-    * store through the fully store-resident warm head (stored entry
+    * store through [[KnnGraph.serveFromStores]]'s clustered default —
+    * the fully store-resident warm head (stored entry
     * points — no corpus frame, no entry sampling scan), link mutually,
     * and append with CARRIED buckets — each new edge row records its
     * source's routing cell as the partition and its neighbor's cell in
@@ -192,13 +187,13 @@ object StreamingGraphIngest {
     if (batch.isEmpty) return
     val cents = KnnGraph.centroidsOf(spark, storePath)
     val queries = batch.select($"vec_id".as("qid"), $"v")
-    val found = KnnGraph.serveFromStoresClusteredWarm(spark, storePath,
+    val found = KnnGraph.serveFromStores(spark, storePath,
         vecPath, queries, k, beamRounds)
       .as[(Long, Long)].collect()
     val newCell = batch
       .select($"vec_id", KnnGraph.clusterOf($"v", cents).as("c"))
       .as[(Long, Int)].collect().toMap
-    val nbrCell = KnnGraph.fetchVectors(spark, vecPath,
+    val nbrCell = KnnGraph.fetch(KnnGraph.openStore(spark, vecPath),
         found.map(_._2).distinct.toSeq.toDF("node"))
       .select($"vec_id", KnnGraph.clusterOf($"v", cents).as("c"))
       .as[(Long, Int)].collect().toMap
@@ -208,11 +203,7 @@ object StreamingGraphIngest {
     }.distinct.toSeq
     rows.toDF("src", "nbr", "nbr_bucket", "bucket")
       .write.mode("append").partitionBy("bucket").parquet(storePath)
-    batch.select($"vec_id", $"v")
-      .withColumn("bucket",
-        pmod($"vec_id",
-          lit(KnnGraph.bucketsOf(spark, vecPath).toLong)).cast("int"))
-      .write.mode("append").partitionBy("bucket").parquet(vecPath)
+    appendHashed(batch.select($"vec_id", $"v"), "vec_id", vecPath)
     codes.foreach { case (cp, cb) => appendCodes(batch, cp, cb) }
     // FRESH ARRIVALS PUBLISH AS ENTRIES of their own cell (r15 — the
     // FreshDiskANN freshness idea applied at the sidecar layer): a

@@ -33,4 +33,13 @@ class RegistrySpec extends AnyFunSuite {
     assert(picked.nonEmpty && picked == picked.sorted)
     assert(picked.toSet == all.filter(n => n.startsWith("q0") || n.startsWith("jq")))
   }
+
+  test("the bench regression gate reads a baseline only at the run's own scale factor") {
+    val line = """{"metric":"total","queries":{"jq01_salary_parse":0.596,"q01_pricing":1.250},"errors":{},"sf":"/data/sf0.1"}"""
+    assert(Bench.baselineFor(line, "/data/sf0.1") ==
+      Map("jq01_salary_parse" -> 0.596, "q01_pricing" -> 1.25))
+    assert(Bench.baselineFor(line, "/data/sf0.001").isEmpty, "mismatched sf must not gate")
+    val noSf = """{"metric":"total","queries":{"jq01_salary_parse":0.596}}"""
+    assert(Bench.baselineFor(noSf, "/data/sf0.1").isEmpty, "a baseline without sf must not gate")
+  }
 }

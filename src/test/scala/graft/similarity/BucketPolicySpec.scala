@@ -93,7 +93,7 @@ class BucketPolicySpec extends AnyFunSuite {
       s"writeStore evaluated the input lineage ${acc.value / 1024.0}× " +
         "(expected exactly once: 512 rows × 2 union branches)")
     // and the store it wrote is the policy-sized one
-    assert(KnnGraph.bucketsOf(spark, s"$root/g") >= 1)
+    assert(KnnGraph.openStore(spark, s"$root/g").buckets >= 1)
   }
 
   test("autoBuckets sizes a wide and a narrow store differently at the same byte budget") {
@@ -111,10 +111,10 @@ class BucketPolicySpec extends AnyFunSuite {
     KnnGraph.writeVectors(vecs, s"$root/vec")
     val expected = KnnGraph.scaledBucketsByBytes(
       KnnGraph.estRowBytes(vecs.select($"vec_id", $"v")), 4096)
-    assert(KnnGraph.bucketsOf(spark, s"$root/vec") == expected)
+    assert(KnnGraph.openStore(spark, s"$root/vec").buckets == expected)
     // point-fetch works against the recorded count (reader/writer share
     // the store-recorded modulus, whatever the policy picked)
-    val fetched = KnnGraph.fetchVectors(spark, s"$root/vec",
+    val fetched = KnnGraph.fetch(KnnGraph.openStore(spark, s"$root/vec"),
       Seq(5L, 77L, 4000L).toDF("node"))
     assert(fetched.select($"vec_id").as[Long].collect().toSet ==
       Set(5L, 77L, 4000L))

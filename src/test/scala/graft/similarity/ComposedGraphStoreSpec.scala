@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The COMPOSED production graph store (sq28): α-pruned adjacency in
   * the clustered layout + entries/centroids sidecars + PQ codes +
   * bucketed vectors, served through [[KnnGraph
-  * .serveFromStoresClusteredPqWarm]]. Two anchors: the composed head's
+  * .serveFromStoresPq]] on a clustered store. Two anchors: the composed head's
   * answers EQUAL the hash-layout quantized head's over the same edges
   * and entries (composition changes where edges live and what a round
   * reads, never which candidates are ranked), and the full lifecycle —
@@ -70,7 +70,7 @@ class ComposedGraphStoreSpec extends AnyFunSuite {
     // the SAME pruned edges in the plain hash layout
     KnnGraph.writeStore(pruned, s"$root/ghash")
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    val composed = answers(KnnGraph.serveFromStoresClusteredPqWarm(spark,
+    val composed = answers(KnnGraph.serveFromStoresPq(spark,
       s"$root/g", s"$root/codes", s"$root/vec", qv, cb, K, Beam))
     // hash head warm-started at the SAME stored entry nodes
     val entries = KnnGraph.storedEntries(spark, s"$root/g", qv)
@@ -109,7 +109,7 @@ class ComposedGraphStoreSpec extends AnyFunSuite {
       .filter($"node" === newId).count() == 1,
       "fresh arrival not published as a cell entry")
     val probe = Seq((5000007L, srcVec)).toDF("qid", "v")
-    val found = answers(KnnGraph.serveFromStoresClusteredPqWarm(spark,
+    val found = answers(KnnGraph.serveFromStoresPq(spark,
       s"$root/g", s"$root/codes", s"$root/vec", probe, cb, K, Beam))
     assert(found.exists(_._2 == newId),
       s"quantized head did not find the inserted node; got $found")
@@ -127,7 +127,7 @@ class ComposedGraphStoreSpec extends AnyFunSuite {
       .filter($"vec_id" === newId).count() == 0, "code row survived")
     assert(spark.read.parquet(s"$root/g/_graft_entries")
       .filter($"node" === newId).count() == 0, "entry row survived")
-    val postErase = answers(KnnGraph.serveFromStoresClusteredPqWarm(spark,
+    val postErase = answers(KnnGraph.serveFromStoresPq(spark,
       s"$root/g", s"$root/codes", s"$root/vec", probe, cb, K, Beam))
     assert(!postErase.exists(_._2 == newId), "erased node was answered")
     // REFINE: one tightening round from the store's current edges,
@@ -139,7 +139,7 @@ class ComposedGraphStoreSpec extends AnyFunSuite {
     KnnGraph.writeStoreClustered(refined.select($"src", $"nbr"), vecs,
       s"$root/g2", cents)
     KnnGraph.writeEntries(vecs, s"$root/g2")
-    val v2 = answers(KnnGraph.serveFromStoresClusteredPqWarm(spark,
+    val v2 = answers(KnnGraph.serveFromStoresPq(spark,
       s"$root/g2", s"$root/codes", s"$root/vec", probe, cb, K, Beam))
     assert(v2.nonEmpty, "refined v2 store served no answers")
     assert(!v2.exists(_._2 == newId), "v2 answered the erased node")

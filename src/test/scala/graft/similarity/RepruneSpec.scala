@@ -45,7 +45,7 @@ class RepruneSpec extends AnyFunSuite {
       .isEmpty, "an erased node survived into the repruned version")
     // v2 serves full answers through the warm clustered head, never a victim
     val queries = vecs.filter($"vec_id" < 8).select($"vec_id".as("qid"), $"v")
-    val served = KnnGraph.serveFromStoresClusteredWarm(
+    val served = KnnGraph.serveFromStores(
       spark, s"$root/g2", s"$root/vec", queries, K, beamRounds = 4)
       .as[(Long, Long)].collect()
     assert(served.length == 8 * K, s"expected ${8 * K} answers, got ${served.length}")
@@ -143,7 +143,7 @@ class RepruneSpec extends AnyFunSuite {
     // new version (entries refreshed, edges repaired)
     val probe = arrivals.filter($"vec_id" === 5000L)
       .select(($"vec_id" + 1000L).as("qid"), $"v")
-    val found = KnnGraph.serveFromStoresClusteredWarm(spark, s"$root/g2",
+    val found = KnnGraph.serveFromStores(spark, s"$root/g2",
         s"$root/vec", probe, K, beamRounds = 4)
       .filter($"node" === 5000L).count()
     assert(found == 1, "surviving arrival unfindable after incremental reprune")

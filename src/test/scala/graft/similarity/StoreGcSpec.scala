@@ -57,7 +57,7 @@ class StoreGcSpec extends AnyFunSuite {
       s"retention picked ${eligible.map(_.model_id)}, expected only g-v1")
     val queries = vecs.filter($"vec_id" < 8).select($"vec_id".as("qid"), $"v")
     def served(path: String): Set[(Long, Long)] =
-      KnnGraph.serveFromStoresClusteredWarm(spark, path, s"$root/vec",
+      KnnGraph.serveFromStores(spark, path, s"$root/vec",
         queries, K, beamRounds = 4).as[(Long, Long)].collect().toSet
     val beforeV3 = served(s"$root/v3")
     val beforeV2 = served(s"$root/v2")

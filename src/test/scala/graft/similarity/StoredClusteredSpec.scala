@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[KnnGraph.writeStoreClustered]] / [[KnnGraph.serveFromStoresClustered]]
+/** [[KnnGraph.writeStoreClustered]] / [[KnnGraph.serveFromStores]]
   * — the locality-bucketed adjacency layout. Three contracts: the
   * layout changes WHERE edges live, never which edges exist (clustered
   * serving answers EQUAL the hash store's on the same graph and
@@ -60,8 +60,8 @@ class StoredClusteredSpec extends AnyFunSuite {
     val hashServed = KnnGraph.serveFromStores(spark, s"$root/hash",
         s"$root/vec", queries, K, beamRounds = 3, entries = Some(ring))
       .as[(Long, Long)].collect().toSet
-    val clusServed = KnnGraph.serveFromStoresClustered(spark, s"$root/clus",
-        s"$root/vec", queries, K, beamRounds = 3, entryVecs = entryVecs)
+    val clusServed = KnnGraph.serveFromStores(spark, s"$root/clus",
+        s"$root/vec", queries, K, beamRounds = 3, entries = Some(entryVecs))
       .as[(Long, Long)].collect().toSet
     assert(clusServed == hashServed,
       "clustered serving diverged from the hash store's answers")
@@ -73,7 +73,7 @@ class StoredClusteredSpec extends AnyFunSuite {
       .select($"src".as("node"), $"bucket".as("node_bucket"))
       .distinct().limit(8).withColumn("qid", lit(0L))
       .select($"qid", $"node", $"node_bucket")
-    val expanded = KnnGraph.expandClustered(spark, s"$root/clus", oneCell)
+    val expanded = KnnGraph.expand(KnnGraph.openStore(spark, s"$root/clus"), oneCell)
     val scans = expanded.queryExecution.sparkPlan.collect {
       case f: FileSourceScanExec if f.relation.location.rootPaths
         .exists(_.toString.contains("graft-clus")) => f
@@ -122,8 +122,8 @@ class StoredClusteredSpec extends AnyFunSuite {
     val hashAfter = KnnGraph.serveFromStores(spark, s"$root/hash",
         s"$root/vec", queries, K, beamRounds = 3, entries = Some(ring))
       .as[(Long, Long)].collect().toSet
-    val clusAfter = KnnGraph.serveFromStoresClustered(spark, s"$root/clus",
-        s"$root/vec", queries, K, beamRounds = 3, entryVecs = entryVecs)
+    val clusAfter = KnnGraph.serveFromStores(spark, s"$root/clus",
+        s"$root/vec", queries, K, beamRounds = 3, entries = Some(entryVecs))
       .as[(Long, Long)].collect().toSet
     assert(clusAfter == hashAfter,
       "post-erase serving diverged between layouts")
@@ -158,9 +158,9 @@ class StoredClusteredSpec extends AnyFunSuite {
     def hashAt(l: Int) = KnnGraph.serveFromStores(spark, s"$root/hash",
         s"$root/vec", queries, K, beamRounds = 3, entries = Some(ring),
         beamWidth = l).as[(Long, Long)].collect().toSet
-    def clusAt(l: Int) = KnnGraph.serveFromStoresClustered(spark,
+    def clusAt(l: Int) = KnnGraph.serveFromStores(spark,
         s"$root/clus", s"$root/vec", queries, K, beamRounds = 3,
-        entryVecs = entryVecs, beamWidth = l)
+        entries = Some(entryVecs), beamWidth = l)
       .as[(Long, Long)].collect().toSet
     // default (0) IS L = k — the oracle-pinned historical walk
     assert(hashAt(0) == hashAt(K), "hash head: L=k diverged from default")
@@ -229,7 +229,7 @@ class StoredClusteredSpec extends AnyFunSuite {
       s"some query entered more than P=4 distinct cells: $cellsPerQ")
     // serving at P keeps the top-k answer shape, and on this fixture
     // entry diversity never hurts recall (pin, not a theorem)
-    def serveAt(p: Int) = KnnGraph.serveFromStoresClusteredWarm(spark,
+    def serveAt(p: Int) = KnnGraph.serveFromStores(spark,
         s"$root/clus", s"$root/vec", queries, K, beamRounds = 3,
         entryProbes = p).as[(Long, Long)].collect().toSet
     val a1 = serveAt(1); val a4 = serveAt(4)
@@ -314,7 +314,7 @@ class StoredClusteredSpec extends AnyFunSuite {
       "probe did not route to its cell's stored entry")
 
     // the fully store-resident warm serve finds the target
-    val served = KnnGraph.serveFromStoresClusteredWarm(spark, s"$root/clus",
+    val served = KnnGraph.serveFromStores(spark, s"$root/clus",
         s"$root/vec", probe, K, beamRounds = 3)
       .as[(Long, Long)].collect()
     assert(served.exists(_._2 == target._1),
@@ -385,7 +385,7 @@ class StoredClusteredSpec extends AnyFunSuite {
     }
     // findable through the fully store-resident warm head
     val probe = Seq((newId + 1000000L, newVec)).toDF("qid", "v")
-    val served = KnnGraph.serveFromStoresClusteredWarm(spark, s"$root/clus",
+    val served = KnnGraph.serveFromStores(spark, s"$root/clus",
         s"$root/vec", probe, K, beamRounds = 4)
       .as[(Long, Long)].collect()
     assert(served.exists(_._2 == newId),

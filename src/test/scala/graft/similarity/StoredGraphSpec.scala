@@ -33,7 +33,7 @@ class StoredGraphSpec extends AnyFunSuite {
     KnnGraph.writeStore(graph, store, KnnGraph.NumBuckets)
     // two frontier nodes → at most two distinct buckets may be read
     val frontier = Seq((0L, 5L), (1L, 7L)).toDF("qid", "node")
-    val expanded = KnnGraph.expandStored(spark, store, frontier)
+    val expanded = KnnGraph.expand(KnnGraph.openStore(spark, store), frontier)
     val expectedBuckets = Set(5L % KnnGraph.NumBuckets, 7L % KnnGraph.NumBuckets)
     val scans = expanded.queryExecution.sparkPlan.collect {
       case f: FileSourceScanExec if f.relation.location.rootPaths
@@ -66,7 +66,7 @@ class StoredGraphSpec extends AnyFunSuite {
     // the pruned point-fetch: 3 ids spanning 2 buckets may read at most
     // 2 bucket dirs, with the id filter pushed to the scan
     val ids = Seq(5L, 37L, 70L).toDF("node") // buckets {5, 6}: 5%32 = 37%32 = 5, 70%32 = 6
-    val fetched = KnnGraph.fetchVectors(spark, s"$root/vec", ids)
+    val fetched = KnnGraph.fetch(KnnGraph.openStore(spark, s"$root/vec"), ids)
     val expectBuckets = Set(5L % 32, 37L % 32, 70L % 32)
     val scans = fetched.queryExecution.sparkPlan.collect {
       case f: FileSourceScanExec if f.relation.location.rootPaths
@@ -119,8 +119,8 @@ class StoredGraphSpec extends AnyFunSuite {
     KnnGraph.writeVectors(vecs, s"$r32/vec", numBuckets = 32)
     KnnGraph.writeStore(graph, s"$r64/g", numBuckets = 64)
     KnnGraph.writeVectors(vecs, s"$r64/vec", numBuckets = 64)
-    assert(KnnGraph.bucketsOf(spark, s"$r64/g") == 64 &&
-      KnnGraph.bucketsOf(spark, s"$r32/g") == 32)
+    assert(KnnGraph.openStore(spark, s"$r64/g").buckets == 64 &&
+      KnnGraph.openStore(spark, s"$r32/g").buckets == 32)
     val queries = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
     def serve(root: String) = KnnGraph.serveFromStores(
       spark, s"$root/g", s"$root/vec", queries, K, beamRounds = 2)

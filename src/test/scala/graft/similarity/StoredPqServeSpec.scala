@@ -41,7 +41,8 @@ class StoredPqServeSpec extends AnyFunSuite {
     // (1) pruning: a 3-id fetch spanning 2 buckets reads ≤ 2 bucket
     // dirs with the id filter pushed
     val ids = Seq(5L, 37L, 70L).toDF("node")
-    val fetched = KnnGraph.fetchCodes(spark, s"$root/codes", ids)
+    val fetched = KnnGraph.fetch(KnnGraph.openStore(spark, s"$root/codes"), ids)
+      .withColumnRenamed("vec_id", "node")
     val scans = fetched.queryExecution.sparkPlan.collect {
       case f: FileSourceScanExec if f.relation.location.rootPaths
         .exists(_.toString.contains("graft-pqserve")) => f
@@ -107,7 +108,7 @@ class StoredPqServeSpec extends AnyFunSuite {
       }
       // ADC top-2k ∪ the entry node (r16: entries always join the
       // exact re-rank — the freshness contract must not pass through
-      // ADC's resolution; see pqServeHead)
+      // ADC's resolution; see serveFromStoresPq)
       val shortlist = (keepAsc((pool - qid).toSeq.flatMap(c =>
         codeLocal.get(c).map(code => c -> adist(q, code))), 2 * K).map(_._1) ++
         Seq(entry).filter(_ != qid)).distinct
@@ -148,7 +149,7 @@ class StoredPqServeSpec extends AnyFunSuite {
       .filter($"vec_id" === newId)
     assert(codeRow.count() == 1, "insert must append exactly one code row")
     assert(codeRow.select($"bucket").as[Int].head() ==
-      (newId % KnnGraph.bucketsOf(spark, s"$root/codes")).toInt,
+      (newId % KnnGraph.openStore(spark, s"$root/codes").buckets).toInt,
       "code row landed outside the store's recorded bucket arithmetic")
     // the appended code equals the frozen-codebook encode of the vector
     val appended = codeRow
