@@ -2330,9 +2330,10 @@ object SimilarityQueries {
     * [[KnnGraph.serveFromStores]] — the 100 TB batch shape where
     * vectors come from a pruned point-fetch, never a corpus scan), and
     * through the COORDINATED head (`serve_ms_coordinated`,
-    * [[KnnGraph.serveCoordinated]] — beam state on the driver, two
-    * pruned point-reads per round for the whole batch: the online-
-    * endpoint shape, answers provably identical), and through the
+    * [[KnnGraph.serveCoordinated]] — beam state on the driver: the
+    * online-endpoint shape, answers provably identical; this row serves
+    * each store version once, so it times the COLD path, two pruned
+    * point-reads per round, never the resident one), and through the
     * QUANTIZED store head (`serve_ms_pq_store`,
     * [[KnnGraph.serveFromStoresPq]] — rounds fetch M-byte codes, the
     * vector store only serves the final re-rank; `recall_pq_final`
@@ -2404,9 +2405,12 @@ object SimilarityQueries {
     val storeServed = KnnGraph.serveFromStores(
       spark, s"$root/g", s"$root/vec", qv, k, beamRounds).collect()
     val storeOnlyMs = (System.nanoTime() - tStores0) / 1e6 / nq
-    // the coordinated head: beam state on the driver, two pruned
-    // point-reads per round for the whole batch — the online-endpoint
-    // shape; answers provably identical (StoredGraphSpec). The explicit
+    // the coordinated head: beam state on the driver — the online-
+    // endpoint shape; answers provably identical (StoredGraphSpec).
+    // This is the store version's FIRST request, so it times the cold
+    // path (two pruned point-reads per round for the whole batch); a
+    // warm endpoint's later requests serve from resident buckets with
+    // no Spark job, which this row does not measure. The explicit
     // ring map mirrors ringEntries (this corpus is dense ids 0..n-1) so
     // the three heads compare over the SAME walk — the head's own
     // no-entries default is the sidecar warm start, a different entry

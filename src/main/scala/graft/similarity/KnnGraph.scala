@@ -1550,18 +1550,138 @@ object KnnGraph {
     * walk, fetch, expansion and maintenance rung reads a store through
     * one of these; the stores are immutable within a request. The
     * relation is built on first use, so a caller that only needs the
-    * bucket count (an append) never pays the schema inference. */
-  final class Store private[KnnGraph] (val path: String, val buckets: Int,
-      spark: SparkSession, schema: => org.apache.spark.sql.types.StructType) {
-    lazy val rel: DataFrame = spark.read.schema(schema).parquet(path)
-    lazy val clustered: Boolean = schema.fieldNames.contains("nbr_bucket")
+    * bucket count (an append) never pays the schema inference.
+    *
+    * The driver-side reads ([[vectors]], [[neighbours]]) answer from
+    * the version's RESIDENT buckets, held by its [[StoreMeta]] and
+    * keyed by bucket number, and read the rest in one job. Residency is
+    * valid for exactly the stamp [[openStore]] computes — the top-level
+    * `name:len:mtime` listing, which covers every `bucket=b/`
+    * directory, `_SUCCESS` and `_graft_buckets` — so a rewrite, erase
+    * or append mints a new version with nothing resident, and nothing
+    * is invalidated in place. The cache holds store DATA, not just a
+    * schema: on a filesystem whose directory mtimes do not move when
+    * their contents change (object stores), an in-place rewrite that
+    * keeps every top-level name and length would be served stale — a
+    * known limit of listing stamps, open in ROADMAP.md. */
+  final class Store private[graft] (val path: String, spark: SparkSession,
+      meta: StoreMeta) {
+    val buckets: Int = meta.buckets
+    lazy val rel: DataFrame = spark.read.schema(meta.schema).parquet(path)
+    lazy val clustered: Boolean = meta.schema.fieldNames.contains("nbr_bucket")
+
+    /** Marks one coordinated request on this version: false for the
+      * version's first, which reads points only (a streamed insert
+      * re-stamps the store every micro-batch and a probe serves a store
+      * once, so neither pays for whole buckets it never reuses), true
+      * from the second on, when missing buckets may be admitted. */
+    private[graft] def admitting(): Boolean = meta.served.getAndSet(true)
+
+    /** `vec_id` → `v` for the ids present in a [[writeVectors]] store;
+      * an absent id has no entry. */
+    private[graft] def vectors(ids: Set[Long],
+        admit: Boolean): Map[Long, Array[Double]] =
+      read(meta.vectors, "vec_id", "v", ids, admit)(
+        _.map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap)
+
+    /** `src` → its neighbour ids for the sources present in a hash
+      * [[writeStore]] store. */
+    private[graft] def neighbours(srcs: Set[Long],
+        admit: Boolean): Map[Long, Array[Long]] =
+      read(meta.adjacency, "src", "nbr", srcs, admit)(
+        _.groupMap(_.getLong(0))(_.getLong(1)))
+
+    /** How many of this version's buckets are resident. */
+    private[graft] def residentBuckets: Int =
+      meta.vectors.size + meta.adjacency.size
+
+    /** The `key` rows for `ids`, in at most ONE job: resident buckets
+      * answer locally; the missing ones are read by one filter —
+      * whole for buckets [[StoreMeta.admit]] takes now, the pruned
+      * `bucket IN … AND key IN …` point read for the rest (a version's
+      * first request, or buckets over the budget). */
+    private def read[V](held: java.util.concurrent.ConcurrentHashMap[Int, Map[Long, V]],
+        key: String, value: String, ids: Set[Long], admit: Boolean)(
+        decode: Array[org.apache.spark.sql.Row] => Map[Long, V]): Map[Long, V] = {
+      // buckets are only ever added to `held`, so a hit stays a hit
+      val (resident, missing) = ids.groupBy(bucketOf(_, buckets))
+        .partition { case (b, _) => held.containsKey(b) }
+      val out = Map.newBuilder[Long, V]
+      resident.foreach { case (b, bIds) =>
+        val m = held.get(b)
+        bIds.foreach(id => m.get(id).foreach(v => out += id -> v))
+      }
+      if (missing.nonEmpty) {
+        val whole = if (admit) meta.admit(missing.keys, bucketBytes) else Set.empty[Int]
+        val points = missing.collect { case (b, bIds) if !whole(b) => bIds }.flatten.toSeq
+        val bucket = col("bucket")
+        val pruned = bucket.isin(missing.keys.toSeq: _*)
+        val filter =
+          if (whole.isEmpty) pruned && col(key).isin(points: _*)
+          else if (points.isEmpty) bucket.isin(whole.toSeq: _*)
+          else pruned && (bucket.isin(whole.toSeq: _*) || col(key).isin(points: _*))
+        val got = try decode(rel.filter(filter).select(col(key), col(value)).collect())
+          catch { case e: Throwable => meta.release(whole); throw e }
+        if (whole.nonEmpty) {
+          val byBucket = got.groupBy { case (id, _) => bucketOf(id, buckets) }
+          whole.foreach(b => held.put(b, byBucket.getOrElse(b, Map.empty)))
+        }
+        out ++= got.filter { case (id, _) => ids.contains(id) }
+      }
+      out.result()
+    }
+
+    /** A bucket's on-disk bytes: the sum of its directory's file
+      * lengths; a drained or never-written bucket is 0. */
+    private def bucketBytes(b: Int): Long = {
+      val dir = new org.apache.hadoop.fs.Path(path, s"bucket=$b")
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      try fs.listStatus(dir).iterator.map(_.getLen).sum
+      catch { case _: java.io.FileNotFoundException => 0L }
+    }
   }
 
-  /** A store's cached metadata: the bucket count read from the marker,
-    * and the parquet schema inferred at most once per stamp. */
-  private final class StoreMeta(val buckets: Int,
-      infer: () => org.apache.spark.sql.types.StructType) {
+  /** Driver-resident store bytes allowed per store version, in on-disk
+    * bytes. A corpus that outgrows it keeps point-reading the buckets
+    * that do not fit, at the cold path's cost. */
+  private val ResidentBudget: Long = Runtime.getRuntime.maxMemory / 16
+
+  /** One store VERSION's cached state: the bucket count read from the
+    * marker, the parquet schema inferred at most once, whether a
+    * coordinated request has served it yet, and the resident buckets —
+    * vector rows or adjacency lists, whichever the store holds —
+    * admitted while their on-disk bytes fit `budget`. A new stamp is a
+    * new StoreMeta ([[storeMetaCache]] replaces the entry), so nothing
+    * here is ever invalidated in place. */
+  private[graft] final class StoreMeta(val buckets: Int,
+      infer: () => org.apache.spark.sql.types.StructType,
+      budget: Long = ResidentBudget) {
     lazy val schema: org.apache.spark.sql.types.StructType = infer()
+    /** Set by the version's first coordinated request. */
+    val served = new java.util.concurrent.atomic.AtomicBoolean
+    val vectors = new java.util.concurrent.ConcurrentHashMap[Int, Map[Long, Array[Double]]]
+    val adjacency = new java.util.concurrent.ConcurrentHashMap[Int, Map[Long, Array[Long]]]
+    /** Every bucket considered for admission, with its on-disk bytes:
+      * each is listed once per version, and one that did not fit never
+      * fits later (the spent bytes only grow). */
+    private val sized = scala.collection.mutable.Map.empty[Int, Long]
+    private var spent = 0L
+
+    /** The `candidates` to read whole now, charged to the budget. */
+    def admit(candidates: Iterable[Int], bytes: Int => Long): Set[Int] = synchronized {
+      candidates.filter { b =>
+        !sized.contains(b) && {
+          val n = bytes(b)
+          sized(b) = n
+          n <= budget - spent && { spent += n; true }
+        }
+      }.toSet
+    }
+
+    /** Undo [[admit]] for buckets whose read failed. */
+    def release(bs: Set[Int]): Unit = synchronized {
+      bs.foreach(b => sized.remove(b).foreach(spent -= _))
+    }
   }
 
   /** JVM-wide store metadata, stamped by the store's top-level listing
@@ -1589,7 +1709,7 @@ object KnnGraph {
       }
       new StoreMeta(nb, () => spark.read.parquet(path).schema)
     }
-    new Store(path, meta.buckets, spark, meta.schema)
+    new Store(path, spark, meta)
   }
 
   /** Persist the UNDIRECTED adjacency of a built graph, partitioned by
@@ -2155,8 +2275,12 @@ object KnnGraph {
       cache: graft.util.StampedCache[V], hint: String)(read: DataFrame => V): V = {
     val dir = new org.apache.hadoop.fs.Path(path, "_graft_entries")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(dir), s"$path has no _graft_entries sidecar — $hint")
-    cache(dir.toString, graft.util.StampedCache.listingStamp(fs, dir))(
+    // one filesystem call on the hot path: the listing is the stamp, and
+    // its absence is the missing sidecar
+    val listing = try Some(fs.listStatus(dir).toSeq)
+      catch { case _: java.io.FileNotFoundException => None }
+    require(listing.isDefined, s"$path has no _graft_entries sidecar — $hint")
+    cache(dir.toString, graft.util.StampedCache.listingStamp(listing.get))(
       read(spark.read.parquet(dir.toString)))
   }
 
@@ -2853,23 +2977,39 @@ object KnnGraph {
     cands.sorted(bestFirst).take(k)
 
   /** LOW-LATENCY serving head: the beam state (≤ |Q|·(1+rounds·k)
-    * (node, cos) rows) lives on the COORDINATOR; the cluster serves
-    * only two pruned point-reads per round — frontier adjacency from
-    * the [[writeStore]] layout and candidate vectors from the
-    * [[writeVectors]] store. Each beam round therefore costs TWO scan
-    * jobs for the whole request batch instead of the distributed
-    * loop's join/window/checkpoint chain — the graph analogue of
+    * (node, cos) rows) lives on the COORDINATOR, and the stores answer
+    * through two driver-side reads — frontier adjacency from the
+    * [[writeStore]] layout ([[Store.neighbours]]) and candidate vectors
+    * from the [[writeVectors]] store ([[Store.vectors]]). Cost per
+    * request batch, by what the store VERSION ([[openStore]]'s stamp)
+    * has already served:
+    *  - COLD, the version's first request: one pruned point read for
+    *    the entry vectors, then TWO per round (adjacency, vectors) —
+    *    1 + 2·rounds scan jobs instead of the distributed loop's
+    *    join/window/checkpoint chain;
+    *  - ADMITTING, from its second request on: still at most one job
+    *    per store per round, but that job reads each missing bucket
+    *    WHOLE and keeps it on the driver while its on-disk bytes fit
+    *    the version's budget ([[ResidentBudget]], a share of the driver
+    *    heap); buckets that do not fit keep the point read in the same
+    *    job;
+    *  - RESIDENT: once every bucket a request touches is held, it runs
+    *    NO Spark job — three small listings (the two stores' stamps and
+    *    the entry sidecar's) and the beam's local cosines.
+    * A corpus that outgrows the budget degrades to the cold cost rather
+    * than failing. Only store bytes are held; answers, frontiers and
+    * pools are computed per request. This is the graph analogue of
     * sq14's batched stored-index serving, and the shape an online
-    * serving endpoint runs (coordinator holds beams, storage nodes
-    * answer pruned gets). Answers are EXACTLY [[serveFromStores]]'s:
-    * same entries, same candidate sets, and [[cosineLocal]] replays
-    * the native expression's arithmetic bit for bit (StoredGraphSpec
-    * asserts equality). For |Q| in the thousands the per-round state
-    * outgrows a coordinator — use [[serveFromStores]] there; the
-    * boundedness contract HERE is the request batch. MEASURED
-    * (COVERAGE.md "Serving-head crossover probe", same stores, answers
-    * equal): on the
-    * 100× corpus this head reads 270/38/50 ms-per-query at
+    * serving endpoint runs (coordinator holds beams, storage answers
+    * pruned gets). Answers are EXACTLY [[serveFromStores]]'s: same
+    * entries, same candidate sets, and [[cosineLocal]] replays the
+    * native expression's arithmetic bit for bit (StoredGraphSpec and
+    * CoordinatedResidencySpec assert equality, cold and resident). For
+    * |Q| in the thousands the per-round state outgrows a coordinator —
+    * use [[serveFromStores]] there; the boundedness contract HERE is
+    * the request batch. MEASURED on the cold path (COVERAGE.md
+    * "Serving-head crossover probe", same stores, answers equal): on
+    * the 100× corpus this head reads 270/38/50 ms-per-query at
     * |Q|=16/128/1024 vs the distributed loop's 334/61/23 — the wall
     * crossover sits between 128 and 1024 queries, where the per-round
     * `isin` candidate filters and driver collects outgrow the
@@ -2879,10 +3019,9 @@ object KnnGraph {
       vecPath: String, queries: Seq[(Long, Array[Double])], k: Int,
       beamRounds: Int,
       entries: Option[Map[Long, Long]] = None): Seq[(Long, Long)] = {
-    import spark.implicits._
     // one resolution per request batch for each store (each carries
-    // its own recorded bucket count); every round's point-reads run
-    // from these — the stores are immutable within a serve
+    // its own recorded bucket count and resident buckets); the stores
+    // are immutable within a serve
     val graph = openStore(spark, graphPath)
     val vec = openStore(spark, vecPath)
     val entry: Map[Long, Long] = entries.getOrElse {
@@ -2903,21 +3042,23 @@ object KnnGraph {
           .min(bestFirst)._1
       }.toMap
     }
-    def fetchVecs(ids: Set[Long]): Map[Long, Array[Double]] =
-      if (ids.isEmpty) Map.empty
-      else {
-        val bs = ids.map(bucketOf(_, vec.buckets)).toSeq
-        vec.rel
-          .filter($"bucket".isin(bs: _*) && $"vec_id".isin(ids.toSeq: _*))
-          .select($"vec_id", $"v").as[(Long, Seq[Double])]
-          .collect().map { case (id, v) => id -> v.toArray }.toMap
-      }
+    coordinatedWalk(graph, vec, queries, k, beamRounds, entry)
+  }
+
+  /** [[serveCoordinated]]'s beam over resolved stores from resolved
+    * entries — every store byte it reads goes through the two [[Store]]
+    * reads. */
+  private[graft] def coordinatedWalk(graph: Store, vec: Store,
+      queries: Seq[(Long, Array[Double])], k: Int, beamRounds: Int,
+      entry: Map[Long, Long]): Seq[(Long, Long)] = {
+    val admitAdj = graph.admitting()
+    val admitVec = vec.admitting()
     val qv = queries.toMap
     // visited = the distributed loop's pool frame (dedup semantics);
     // scores = what the final scoring join would see — a visited node
     // whose vector is absent (e.g. erased) dedups but never answers,
     // exactly like the inner join drops it
-    val entryVecs = fetchVecs(entry.values.toSet)
+    val entryVecs = vec.vectors(entry.values.toSet, admitVec)
     val visited = scala.collection.mutable.Map(queries.map { case (qid, _) =>
       qid -> scala.collection.mutable.LinkedHashSet(entry(qid)) }: _*)
     val scores = scala.collection.mutable.Map(queries.map { case (qid, _) =>
@@ -2928,19 +3069,12 @@ object KnnGraph {
     var frontier: Map[Long, Seq[Long]] =
       queries.map { case (qid, _) => qid -> Seq(entry(qid)) }.toMap
     for (_ <- 1 to beamRounds if frontier.valuesIterator.exists(_.nonEmpty)) {
-      val fNodes = frontier.valuesIterator.flatten.toSet
-      val fBuckets = fNodes.map(bucketOf(_, graph.buckets)).toSeq
-      // pruned adjacency point-read: one job for the whole batch
-      val adj = graph.rel
-        .filter($"bucket".isin(fBuckets: _*) && $"src".isin(fNodes.toSeq: _*))
-        .select($"src", $"nbr").as[(Long, Long)].collect()
-        .groupBy(_._1).map { case (s, a) => s -> a.map(_._2).toSeq }
+      val adj = graph.neighbours(frontier.valuesIterator.flatten.toSet, admitAdj)
       val cands: Map[Long, Seq[Long]] = frontier.map { case (qid, fs) =>
-        qid -> fs.flatMap(adj.getOrElse(_, Seq.empty)).distinct
+        qid -> fs.flatMap(adj.getOrElse(_, Array.emptyLongArray)).distinct
           .filterNot(visited(qid).contains)
       }
-      // pruned vector point-read: the round's other job
-      val vecs = fetchVecs(cands.valuesIterator.flatten.toSet)
+      val vecs = vec.vectors(cands.valuesIterator.flatten.toSet, admitVec)
       frontier = cands.map { case (qid, cs) =>
         val kept = keepTopK(
           cs.flatMap(c => vecs.get(c).map(v => c -> cosineLocal(qv(qid), v))), k)
