@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import graft.util.SparkOrdering.bestFirst
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -22,22 +23,27 @@ import org.apache.spark.sql.functions._
   */
 object TopKPerGroup {
 
-  /** (score desc, tiebreak id asc) ordering, K-bounded buffer. */
-  final class TopK(k: Int)
-      extends Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {
-    private def trim(s: Seq[(Double, Long)]): Seq[(Double, Long)] =
-      s.sortBy { case (score, id) => (-score, id) }.take(k)
-    override def zero: Seq[(Double, Long)] = Seq.empty
-    override def reduce(b: Seq[(Double, Long)], a: (Double, Long)): Seq[(Double, Long)] =
-      if (b.size < k || a._1 > b.last._1 || (a._1 == b.last._1 && a._2 < b.last._2))
-        trim(b :+ a)
+  /** K-bounded buffer of (id, score) pairs in
+    * [[graft.util.SparkOrdering.bestFirst]] order — score DESC under
+    * Spark's double ordering (NaN first, -0.0 tied with 0.0), then id
+    * ASC — exactly the `row_number` window it replaces. With `distinct`
+    * it keeps each id once; that requires every occurrence of an id
+    * within a group to carry the same score. */
+  final class TopK(k: Int, distinct: Boolean = false)
+      extends Aggregator[(Long, Double), Seq[(Long, Double)], Seq[(Long, Double)]] {
+    private def trim(s: Seq[(Long, Double)]): Seq[(Long, Double)] =
+      (if (distinct) s.distinctBy(_._1) else s).sorted(bestFirst).take(k)
+    override def zero: Seq[(Long, Double)] = Seq.empty
+    override def reduce(b: Seq[(Long, Double)], a: (Long, Double)): Seq[(Long, Double)] =
+      if (distinct && b.exists(_._1 == a._1)) b
+      else if (b.size < k || bestFirst.lt(a, b.last)) trim(b :+ a)
       else b
-    override def merge(x: Seq[(Double, Long)], y: Seq[(Double, Long)]): Seq[(Double, Long)] =
+    override def merge(x: Seq[(Long, Double)], y: Seq[(Long, Double)]): Seq[(Long, Double)] =
       trim(x ++ y)
-    override def finish(r: Seq[(Double, Long)]): Seq[(Double, Long)] = r
-    override def bufferEncoder: Encoder[Seq[(Double, Long)]] =
+    override def finish(r: Seq[(Long, Double)]): Seq[(Long, Double)] = r
+    override def bufferEncoder: Encoder[Seq[(Long, Double)]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    override def outputEncoder: Encoder[Seq[(Double, Long)]] = bufferEncoder
+    override def outputEncoder: Encoder[Seq[(Long, Double)]] = bufferEncoder
   }
 
   /** Top-K orders per customer: returns (o_custkey, o_orderkey,
@@ -46,13 +52,13 @@ object TopKPerGroup {
     import spark.implicits._
     val agg = new TopK(k)
     orders
-      .select($"o_custkey".as[Long], struct($"o_totalprice", $"o_orderkey")
-        .as[(Double, Long)])
+      .select($"o_custkey".as[Long], struct($"o_orderkey", $"o_totalprice")
+        .as[(Long, Double)])
       .groupByKey(_._1)
       .mapValues(_._2)
       .agg(agg.toColumn.name("top"))
       .flatMap { case (cust, top) =>
-        top.iterator.zipWithIndex.map { case ((price, okey), i) =>
+        top.iterator.zipWithIndex.map { case ((okey, price), i) =>
           (cust, okey, price, i + 1)
         }
       }
@@ -69,12 +75,12 @@ object TopKPerGroup {
     import spark.implicits._
     val agg = new TopK(k)
     df.select(col(group).cast("long").as[Long],
-        struct(col(score).cast("double"), col(id).cast("long")).as[(Double, Long)])
+        struct(col(id).cast("long"), col(score).cast("double")).as[(Long, Double)])
       .groupByKey(_._1)
       .mapValues(_._2)
       .agg(agg.toColumn.name("top"))
       .flatMap { case (g, top) =>
-        top.iterator.zipWithIndex.map { case ((s, i), r) =>
+        top.iterator.zipWithIndex.map { case ((i, s), r) =>
           (g, i, s, (r + 1).toLong)
         }
       }

@@ -2,9 +2,11 @@ package graft.queries
 
 import graft.QueryDef
 import graft.QueryDef.{rowsOnly, sqlChecked}
+import graft.similarity.{KnnGraph, Pq}
 import graft.similarity.VectorOps._
 import graft.sources.Tables
 import graft.util.Num._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,6 +22,37 @@ import org.apache.spark.sql.functions._
   * only within buckets.
   */
 object SimilarityQueries {
+
+  /** The first `nq` corpus rows of `emb` (vec_id, v) as queries (qid, v). */
+  private def queriesOf(emb: DataFrame, nq: Int): DataFrame =
+    emb.filter(col("vec_id") < nq).select(col("vec_id").as("qid"), col("v"))
+
+  /** Brute-force baseline: the exact cosine top-5 (qid, cid) of the
+    * first `nq` rows — [[KnnGraph.exactTruth]], the one truth every
+    * recall row is scored against. */
+  private def truth5(emb: DataFrame, nq: Int): DataFrame =
+    KnnGraph.exactTruth(queriesOf(emb, nq), emb, 5).withColumnRenamed("node", "cid")
+
+  /** Exact re-rank of a (qid, cid) candidate frame to each query's
+    * cosine top-5 over `emb`'s raw vectors — [[KnnGraph.scoreKeep]]. */
+  private def rerank5(cand: DataFrame, emb: DataFrame, nq: Int): DataFrame =
+    KnnGraph.scoreKeep(cand.withColumnRenamed("cid", "node"), queriesOf(emb, nq),
+      emb, 5).withColumnRenamed("node", "cid")
+
+  /** sq09's flat-PQ pipeline, which sq17 runs once per arm: encode
+    * `frame` (vec_id, v) under `cb`, ADC-rank every other row against
+    * the first 20 rows' LUTs into a 50-deep shortlist, then re-rank the
+    * shortlist by exact cosine over `emb`'s RAW vectors to (qid, cid)
+    * top-5 — so every arm shares the raw-cosine ground truth. */
+  private def pqTop5(emb: DataFrame, frame: DataFrame,
+      cb: Seq[Seq[Seq[Double]]], sub: Int): DataFrame = {
+    val codes = Pq.pqEncode(frame, cb, sub).withColumnRenamed("vec_id", "cid")
+    val luts = queriesOf(frame, 20)
+      .select(col("qid"), Pq.lutsCol(col("v"), cb, sub).as("luts"))
+    val shortlist = Pq.adcTop(broadcast(luts).join(codes, col("qid") =!= col("cid")),
+      cb.length, "cid", 50)
+    rerank5(shortlist.select("qid", "cid"), emb, 20)
+  }
 
   /** Brute-force cosine top-5 for a bounded query set: broadcast 5 query
     * vectors against the corpus, rank per query. Oracle-checked (ranks are
@@ -82,24 +115,9 @@ object SimilarityQueries {
       .select($"qid", $"cid").distinct()
     // rerank gather: broadcast the 20 query vectors, equi-join corpus
     // vectors back on cid (the standard ANN rerank shape)
-    val wAnn = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = candidates
-      .join(broadcast(emb0.filter($"vec_id" < 20)
-        .select($"vec_id".as("qid"), $"v".as("qv"))), Seq("qid"))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wAnn))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val ann = rerank5(candidates, emb0, 20)
     // baseline: exact top-5 for the same queries (unexploded frames)
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb0.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val bf = truth5(emb0, 20)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     val annCounts = ann.groupBy($"qid").agg(count(lit(1)).as("n_ann"))
     bf.groupBy($"qid").agg(count(lit(1)).as("n_bf"))
@@ -161,28 +179,14 @@ object SimilarityQueries {
     val wProbe = Window.partitionBy($"qid").orderBy($"cdist".asc, $"list_id")
     val probes = emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv"))
       .crossJoin(broadcast(centroids))
-      .withColumn("cdist",
-        aggregate(zip_with($"qv", $"centroid", (x, y) => (x - y) * (x - y)),
-          lit(0.0), _ + _))
+      .withColumn("cdist", Pq.sqd($"qv", $"centroid"))
       .withColumn("prank", row_number().over(wProbe))
       .filter($"prank" <= 4)
-      .select($"qid", $"qv", $"list_id")
-    val wAnn = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = probes
-      .join(assigned.select($"vec_id".as("cid"), $"v".as("cv"), $"list_id"), Seq("list_id"))
-      .filter($"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wAnn))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+      .select($"qid", $"list_id")
+    val ann = rerank5(probes
+      .join(assigned.select($"vec_id".as("cid"), $"list_id"), Seq("list_id"))
+      .filter($"qid" =!= $"cid").select($"qid", $"cid"), emb, 20)
+    val bf = truth5(emb, 20)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     bf.groupBy($"qid").agg(count(lit(1)).as("n_bf"))
       .join(hits, Seq("qid"), "left")
@@ -321,60 +325,15 @@ object SimilarityQueries {
     // per-partition top-K + driver merge, never a global sort
     val sample = emb.select($"vec_id", $"v").orderBy($"vec_id").limit(20000)
       .collect().map(_.getSeq[Double](1).toArray).toIndexedSeq
-    val cb: Seq[Seq[Seq[Double]]] = graft.similarity.Pq
-      .trainSubspaces(sample, M, sub, K)
+    val cb: Seq[Seq[Seq[Double]]] = Pq.trainSubspaces(sample, M, sub, K)
     // encode: nearest centroid per subspace as PURE column expressions
-    // over the codebook literal — distances via transform/zip_with,
-    // argmin via array_position(d, array_min(d)); fully codegen, no UDFs.
-    // The distance array materializes ONCE per subspace in its own
-    // projection — inlining it into both array_position and array_min
-    // would double the K×subdim arithmetic per corpus row
-    def subDist(vCol: org.apache.spark.sql.Column, m: Int) =
-      transform(typedlit(cb(m)), c =>
-        aggregate(zip_with(slice(vCol, m * sub + 1, sub), c,
-          (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
-    val codes = (0 until M).foldLeft(emb.toDF()) { (df, m) =>
-        df.withColumn(s"d$m", subDist($"v", m))
-          .withColumn(s"c$m",
-            (array_position(col(s"d$m"), array_min(col(s"d$m"))) - 1).cast("int"))
-          .drop(s"d$m")
-      }
-      .select(($"vec_id".as("cid") +: (0 until M).map(m => col(s"c$m"))): _*)
-    // queries precompute per-subspace LUTs of partial squared distances
-    val queries = (0 until M).foldLeft(
-      emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv"))) {
-      (df, m) =>
-        df.withColumn(s"lut$m",
-          transform(typedlit(cb(m)), c =>
-            aggregate(zip_with(slice($"qv", m * sub + 1, sub), c,
-              (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)))
-    }
-    // ADC: distance estimate = Σ_m lut_m[code_m] — lookups, no vectors
-    val adc = (0 until M).map(m =>
-      element_at(col(s"lut$m"), col(s"c$m") + 1)).reduce(_ + _)
-    val wAdc = Window.partitionBy($"qid").orderBy($"adc".asc, $"cid")
-    val shortlist = broadcast(queries.drop("qv")).join(codes, $"qid" =!= $"cid")
-      .withColumn("adc", adc)
-      .withColumn("srank", row_number().over(wAdc))
-      .filter($"srank" <= 50)
-      .select($"qid", $"cid")
-    // exact rerank touches raw vectors ONLY for the 50-deep shortlist
-    val wRr = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = shortlist
-      .join(emb.select($"vec_id".as("qid"), $"v".as("qv")), Seq("qid"))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wRr))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    // over the codebook literal, fully codegen, no UDFs; queries
+    // precompute per-subspace LUTs of partial squared distances; ADC
+    // (distance estimate = Σ_m lut_m[code_m] — lookups, no vectors)
+    // keeps a 50-deep shortlist, and the exact rerank touches raw
+    // vectors ONLY for it
+    val ann = pqTop5(emb, emb, cb, sub)
+    val bf = truth5(emb, 20)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     bf.groupBy($"qid").agg(count(lit(1)).as("n_bf"))
       .join(hits, Seq("qid"), "left")
@@ -429,56 +388,30 @@ object SimilarityQueries {
     // (sq09's FAISS recipe + its orderBy-before-limit determinism note)
     val sample = emb.select($"vec_id", $"v").orderBy($"vec_id").limit(20000)
       .collect().map(_.getSeq[Double](1).toArray).toIndexedSeq
-    val coarse = graft.similarity.Pq.trainCodebook(sample, L, seed = 101L)
-    def nearestCoarse(p: Array[Double]): Int = {
-      var best = 0; var bd = Double.MaxValue; var c = 0
-      while (c < L) {
-        var s = 0.0; var i = 0
-        while (i < p.length) { val d = p(i) - coarse(c)(i); s += d * d; i += 1 }
-        if (s < bd) { bd = s; best = c }
-        c += 1
-      }
-      best
-    }
+    val coarse = Pq.trainCodebook(sample, L, seed = 101L)
     val resSample = sample.map { p =>
-      val cc = coarse(nearestCoarse(p))
+      val cc = coarse(Pq.nearest(p, coarse))
       Array.tabulate(p.length)(i => p(i) - cc(i))
     }
     // OPQ arm: rotate residuals before the subspace split (Ge et al.
     // 2014 inside IVF — the FAISS OPQ..,IVF..,PQ.. chain); coarse
     // routing stays on raw vectors, so scan fraction is IDENTICAL in
     // both arms. Codebooks per arm train on that arm's residual space.
-    val rot = graft.similarity.Pq.trainOpqRotation(resSample, M, sub)
-    val cbPlain: Seq[Seq[Seq[Double]]] =
-      graft.similarity.Pq.trainSubspaces(resSample, M, sub, K)
-    val cbRot: Seq[Seq[Seq[Double]]] = graft.similarity.Pq.trainSubspaces(
-      resSample.map(graft.similarity.Pq.rotateVec(_, rot)), M, sub, K)
-    def sqd(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-      .cache()
+    val rot = Pq.trainOpqRotation(resSample, M, sub)
+    val cbPlain: Seq[Seq[Seq[Double]]] = Pq.trainSubspaces(resSample, M, sub, K)
+    val cbRot: Seq[Seq[Seq[Double]]] =
+      Pq.trainSubspaces(resSample.map(Pq.rotateVec(_, rot)), M, sub, K)
+    val bf = truth5(emb, 20).cache()
     // one arm = sq10's full encode→probe→LUT→ADC→rerank pipeline under a
     // given (codebooks, optional rotation); both arms share bf
     def armHits(cb: Seq[Seq[Seq[Double]]],
-        rotOpt: Option[Seq[Seq[Double]]]): org.apache.spark.sql.DataFrame = {
+        rotOpt: Option[Seq[Seq[Double]]]): DataFrame = {
       // corpus: coarse-assign + residual (+ rotation) + per-subspace
       // encode — the SHARED frozen-quantizer projection
       // (similarity/Pq.ivfPqEncode), identical on the batch index build
       // here and the streaming maintenance path (StreamingIndexIngest)
-      val codes = graft.similarity.Pq
-        .ivfPqEncode(emb, coarse.map(_.toSeq).toSeq, cb, sub, rotOpt)
+      val codes = Pq.ivfPqEncode(emb, coarse.map(_.toSeq).toSeq, cb, sub, rotOpt)
         .select(($"vec_id".as("cid") +: $"list_id" +: (0 until M).map(m => col(s"c$m"))): _*)
-      def subDist(vCol: org.apache.spark.sql.Column, m: Int) =
-        transform(typedlit(cb(m)), c =>
-          aggregate(zip_with(slice(vCol, m * sub + 1, sub), c,
-            (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
       // queries: NPROBE nearest lists, then one LUT per (query, list)
       // from the query residual w.r.t. that list's centroid — rotated
       // exactly like the stored residuals when the arm rotates
@@ -488,34 +421,16 @@ object SimilarityQueries {
       val rawQres = zip_with($"qv", $"centroid", (x, y) => x - y)
       val probes = emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv"))
         .crossJoin(broadcast(centroidsDf))
-        .withColumn("cdist", sqd($"qv", $"centroid"))
+        .withColumn("cdist", Pq.sqd($"qv", $"centroid"))
         .withColumn("prank", row_number().over(wProbe))
         .filter($"prank" <= NPROBE)
-        .withColumn("qres",
-          rotOpt.fold(rawQres)(r => graft.similarity.Pq.rotateCol(rawQres, r)))
-        .select($"qid", $"list_id", $"qres")
-      val luts = (0 until M).foldLeft(probes) { (df, m) =>
-        df.withColumn(s"lut$m", subDist($"qres", m))
-      }.drop("qres")
-      val adc = (0 until M).map(m =>
-        element_at(col(s"lut$m"), col(s"c$m") + 1)).reduce(_ + _)
+        .withColumn("qres", rotOpt.fold(rawQres)(r => Pq.rotateCol(rawQres, r)))
+        .select($"qid", $"list_id", Pq.lutsCol($"qres", cb, sub).as("luts"))
       // equi-join ON list_id: only probed lists' codes are touched
-      val wAdc = Window.partitionBy($"qid").orderBy($"adc".asc, $"cid")
-      val shortlist = broadcast(luts).join(codes, Seq("list_id"))
-        .filter($"qid" =!= $"cid")
-        .withColumn("adc", adc)
-        .withColumn("srank", row_number().over(wAdc))
-        .filter($"srank" <= 50)
+      val shortlist = Pq.adcTop(broadcast(probes).join(codes, Seq("list_id"))
+          .filter($"qid" =!= $"cid"), M, "cid", 50)
         .select($"qid", $"cid")
-      val wRr = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      shortlist
-        .join(emb.select($"vec_id".as("qid"), $"v".as("qv")), Seq("qid"))
-        .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-        .withColumn("cos", cosine($"qv", $"cv"))
-        .withColumn("rank", row_number().over(wRr))
-        .filter($"rank" <= 5)
-        .select($"qid", $"cid")
-        .intersect(bf)
+      rerank5(shortlist, emb, 20).intersect(bf)
     }
     val hitsOpq = armHits(cbRot, Some(rot))
       .groupBy($"qid").agg(count(lit(1)).as("n_hit"))
@@ -746,7 +661,7 @@ object SimilarityQueries {
     * appends IVF-PQ codes partitioned by list_id and claims that layout
     * makes search a partition-pruned scan; this query demonstrates it:
     * the corpus is streamed through the maintenance path (same frozen
-    * quantizers and seeds as sq10, same [[graft.similarity.Pq.ivfPqEncode]]
+    * quantizers and seeds as sq10, same [[Pq.ivfPqEncode]]
     * arithmetic), then 5 serving requests run against the STORED table
     * via [[graft.similarity.StoredIndex.serve]] — each a literal
     * `list_id IN (nprobe lists)` read, so each request opens 10/32 of
@@ -776,18 +691,17 @@ object SimilarityQueries {
     // stored index equals sq10's in-memory build code-for-code
     val sample = emb.orderBy($"vec_id").limit(20000)
       .collect().map(_.getSeq[Double](1).toArray).toIndexedSeq
-    val coarse = graft.similarity.Pq.trainCodebook(sample, L, seed = 101L)
+    val coarse = Pq.trainCodebook(sample, L, seed = 101L)
     val coarseSeq: Seq[Seq[Double]] = coarse.map(_.toSeq).toSeq
     val resSample = sample.map { p =>
-      val cc = coarse(graft.similarity.StoredIndex.probeLists(p, coarseSeq, 1).head)
+      val cc = coarse(Pq.nearest(p, coarse))
       Array.tabulate(p.length)(i => p(i) - cc(i))
     }
     // sq10's OPQ arm applied to the STORED path: rotate residuals before
     // the subspace split at encode time AND in every serving LUT —
     // coarse routing (and so partition pruning) is untouched
-    val rot = graft.similarity.Pq.trainOpqRotation(resSample, M, sub)
-    val cb = graft.similarity.Pq.trainSubspaces(
-      resSample.map(graft.similarity.Pq.rotateVec(_, rot)), M, sub, K)
+    val rot = Pq.trainOpqRotation(resSample, M, sub)
+    val cb = Pq.trainSubspaces(resSample.map(Pq.rotateVec(_, rot)), M, sub, K)
     // 1. build the stored table THROUGH the maintenance stream: vectors
     // arrive as a file stream; codes land under root/codes, one
     // directory per list_id
@@ -825,22 +739,8 @@ object SimilarityQueries {
     val batchMs = (System.nanoTime() - tBatch0) / 1e6 / reqs.length
     val shortlist = shortlists.reduce(_ unionByName _)
     // 3. exact rerank + recall vs brute force (sq10's closing shape)
-    val wRr = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = shortlist
-      .join(emb.select($"vec_id".as("qid"), $"v".as("qv")), Seq("qid"))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wRr))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb.filter($"vec_id" < 8).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val ann = rerank5(shortlist, emb, 8)
+    val bf = truth5(emb, 8)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     bf.groupBy($"qid").agg(count(lit(1)).as("n_bf"))
       .join(hits, Seq("qid"), "left")
@@ -1188,23 +1088,8 @@ object SimilarityQueries {
       .join(emb.select($"vec_id".as("cid"), $"tbl", $"bits"), Seq("tbl", "bits"))
       .filter($"qid" =!= $"cid")
       .select($"qid", $"cid").distinct()
-    val wAnn = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = cand
-      .join(broadcast(emb0.filter($"vec_id" < 16)
-        .select($"vec_id".as("qid"), $"v".as("qv"))), Seq("qid"))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wAnn))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val ann = rerank5(cand, emb0, 16)
+    val bf = truth5(emb0, 16)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     val nc = cand.groupBy($"qid").agg(count(lit(1)).as("n_cand"))
     emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"))
@@ -1324,15 +1209,7 @@ object SimilarityQueries {
         .map("%02x".format(_)).mkString
       if (hex.charAt(0) <= '7') 1 else -1
     }
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-      .cache()
+    val bf = truth5(emb0, 16).cache()
     // The sign of plane p depends only on (p, i) — md5-parity, not the
     // (bits, tables) setting — so the three arms' plane sets are NESTED
     // PREFIXES of 0 until max(b·t): compute ALL projections once per
@@ -1363,15 +1240,7 @@ object SimilarityQueries {
           Seq("tbl", "bucket"))
         .filter($"qid" =!= $"cid")
         .select($"qid", $"cid").distinct()
-      val wAnn = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      val ann = cand
-        .join(broadcast(emb0.filter($"vec_id" < 16)
-          .select($"vec_id".as("qid"), $"v".as("qv"))), Seq("qid"))
-        .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-        .withColumn("cos", cosine($"qv", $"cv"))
-        .withColumn("rank", row_number().over(wAnn))
-        .filter($"rank" <= 5)
-        .select($"qid", $"cid")
+      val ann = rerank5(cand, emb0, 16)
       val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
       val nc = cand.groupBy($"qid").agg(count(lit(1)).as("n_cand"))
       emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"))
@@ -1521,23 +1390,8 @@ object SimilarityQueries {
         Seq("tbl", "bucket"))
       .filter($"qid" =!= $"cid")
       .select($"qid", $"cid").distinct()
-    val wAnn = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = cand
-      .join(broadcast(emb0.filter($"vec_id" < 16)
-        .select($"vec_id".as("qid"), $"v".as("qv"))), Seq("qid"))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wAnn))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val ann = rerank5(cand, emb0, 16)
+    val bf = truth5(emb0, 16)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     val nc = cand.groupBy($"qid").agg(count(lit(1)).as("n_cand"))
     emb0.filter($"vec_id" < 16).select($"vec_id".as("qid"))
@@ -1703,23 +1557,8 @@ object SimilarityQueries {
     val cand = probes.join(aF.select($"vec_id".as("cid"), $"k"), Seq("k"))
       .filter($"qid" =!= $"cid")
       .select($"qid", $"cid")
-    val wAnn = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val ann = cand
-      .join(broadcast(emb0.filter($"vec_id" < 20)
-        .select($"vec_id".as("qid"), $"v".as("qv"))), Seq("qid"))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wAnn))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb0.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb0.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
+    val ann = rerank5(cand, emb0, 20)
+    val bf = truth5(emb0, 20)
     val hits = ann.intersect(bf).groupBy($"qid").agg(count(lit(1)).as("n_hit"))
     val nc = cand.groupBy($"qid").agg(count(lit(1)).as("n_cand"))
     val nl = aF.agg(countDistinct($"k").as("n_lists"))
@@ -1797,76 +1636,22 @@ object SimilarityQueries {
     val (evals, evecs) = graft.similarity.Eig.jacobiSym(cov)
     val alloc = graft.similarity.Eig.eigenAllocation(evals, M, sub)
     val R: Seq[Seq[Double]] = alloc.map(i => evecs(i).toSeq)
-    val meanLit = typedlit(mean.toSeq)
     // x' = R(x − mean): one codegen'd dense matvec per row — L2 distances
     // are translation+rotation invariant, so ADC in the rotated space
     // ranks exactly the geometry the raw space has
-    def rotate(vCol: org.apache.spark.sql.Column) =
-      transform(typedlit(R), r =>
-        aggregate(zip_with(r, zip_with(vCol, meanLit, (x, mu) => x - mu),
-          (ri, xi) => ri * xi), lit(0.0), _ + _))
-    val embRot = emb.select($"vec_id", rotate($"v").as("v")).cache()
-    def rotDriver(p: Array[Double]): Array[Double] = {
-      val cvec = Array.tabulate(d)(i => p(i) - mean(i))
-      Array.tabulate(d) { i =>
-        var s2 = 0.0; var j = 0; val r = R(i)
-        while (j < d) { s2 += r(j) * cvec(j); j += 1 }; s2
-      }
-    }
-    val cbPlain = graft.similarity.Pq.trainSubspaces(sample, M, sub, K)
-    val cbRot = graft.similarity.Pq.trainSubspaces(sample.map(rotDriver), M, sub, K)
-    // sq09's encode/LUT/ADC/rerank, parameterized by (frame, codebooks);
-    // the exact rerank always gathers RAW vectors — both arms share the
-    // raw-cosine ground truth
-    def armTop5(frame: org.apache.spark.sql.DataFrame,
-        cb: Seq[Seq[Seq[Double]]]): org.apache.spark.sql.DataFrame = {
-      def subDist(vCol: org.apache.spark.sql.Column, m: Int) =
-        transform(typedlit(cb(m)), c =>
-          aggregate(zip_with(slice(vCol, m * sub + 1, sub), c,
-            (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
-      val codes = (0 until M).foldLeft(frame.toDF()) { (df, m) =>
-          df.withColumn(s"d$m", subDist($"v", m))
-            .withColumn(s"c$m",
-              (array_position(col(s"d$m"), array_min(col(s"d$m"))) - 1).cast("int"))
-            .drop(s"d$m")
-        }
-        .select(($"vec_id".as("cid") +: (0 until M).map(m => col(s"c$m"))): _*)
-      val queries = (0 until M).foldLeft(
-        frame.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv"))) {
-        (df, m) =>
-          df.withColumn(s"lut$m",
-            transform(typedlit(cb(m)), c =>
-              aggregate(zip_with(slice($"qv", m * sub + 1, sub), c,
-                (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)))
-      }
-      val adcE = (0 until M).map(m =>
-        element_at(col(s"lut$m"), col(s"c$m") + 1)).reduce(_ + _)
-      val wAdc = Window.partitionBy($"qid").orderBy($"adc".asc, $"cid")
-      val shortlist = broadcast(queries.drop("qv")).join(codes, $"qid" =!= $"cid")
-        .withColumn("adc", adcE)
-        .withColumn("srank", row_number().over(wAdc))
-        .filter($"srank" <= 50)
-        .select($"qid", $"cid")
-      val wRr = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      shortlist
-        .join(emb.select($"vec_id".as("qid"), $"v".as("qv")), Seq("qid"))
-        .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), Seq("cid"))
-        .withColumn("cos", cosine($"qv", $"cv"))
-        .withColumn("rank", row_number().over(wRr))
-        .filter($"rank" <= 5)
-        .select($"qid", $"cid")
-    }
-    val wBf = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-    val bf = broadcast(
-        emb.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"v".as("qv")))
-      .join(emb.select($"vec_id".as("cid"), $"v".as("cv")), $"qid" =!= $"cid")
-      .withColumn("cos", cosine($"qv", $"cv"))
-      .withColumn("rank", row_number().over(wBf))
-      .filter($"rank" <= 5)
-      .select($"qid", $"cid")
-    val hitsP = armTop5(emb, cbPlain).intersect(bf)
+    val meanLit = typedlit(mean.toSeq)
+    val embRot = emb.select($"vec_id",
+      Pq.rotateCol(zip_with($"v", meanLit, (x, mu) => x - mu), R).as("v")).cache()
+    def rotDriver(p: Array[Double]): Array[Double] =
+      Pq.rotateVec(Array.tabulate(d)(i => p(i) - mean(i)), R)
+    val cbPlain = Pq.trainSubspaces(sample, M, sub, K)
+    val cbRot = Pq.trainSubspaces(sample.map(rotDriver), M, sub, K)
+    val bf = truth5(emb, 20)
+    // sq09's pipeline per arm; the exact rerank always gathers RAW
+    // vectors, so both arms share the raw-cosine ground truth
+    val hitsP = pqTop5(emb, emb, cbPlain, sub).intersect(bf)
       .groupBy($"qid").agg(count(lit(1)).as("n_p"))
-    val hitsO = armTop5(embRot, cbRot).intersect(bf)
+    val hitsO = pqTop5(emb, embRot, cbRot, sub).intersect(bf)
       .groupBy($"qid").agg(count(lit(1)).as("n_o"))
     // balance diagnostic: per-bucket Σ log(variance) spread for the
     // natural contiguous split vs the eigen-allocated split — the
@@ -2164,14 +1949,9 @@ object SimilarityQueries {
       .select($"vec_id", toDouble($"embedding").as("v"))
       .cache()
     // |Q|-bounded truth: broadcast the 16 queries, stream the corpus
-    // (BroadcastNestedLoopJoin, never a cartesian — sq02b's bf shape)
-    val bf = broadcast(vecs.filter($"vec_id" < 16)
-        .select($"vec_id".as("src"), $"v".as("qv")))
-      .join(vecs.select($"vec_id".as("nbr"), $"v".as("cv")), $"src" =!= $"nbr")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy(cosine($"qv", $"cv").desc, $"nbr")))
-      .filter($"rn" <= k).select($"src", $"nbr")
-      .cache()
+    // (BroadcastNestedLoopJoin, never a cartesian)
+    val bf = KnnGraph.exactTruth(queriesOf(vecs, 16), vecs, k)
+      .select($"qid".as("src"), $"node".as("nbr")).cache()
     def summary(r: Int, e: org.apache.spark.sql.DataFrame) = {
       val hits = e.filter($"src" < 16).select($"src", $"nbr")
         .join(bf, Seq("src", "nbr"), "left_semi")
@@ -2187,7 +1967,7 @@ object SimilarityQueries {
     // sq21 IS the construction query: it always builds fresh (its
     // bench/probe number means "what a build costs"); the serving
     // queries share the cached build instead (nnDescentBuild)
-    val es = graft.similarity.KnnGraph.build(vecs, k, rounds)
+    val es = KnnGraph.build(vecs, k, rounds)
     es.zipWithIndex.map { case (e, r) => summary(r, e) }
       .reduce(_ unionByName _).orderBy($"round")
   }
@@ -2195,16 +1975,16 @@ object SimilarityQueries {
   /** The NN-Descent build rounds shared by sq21 (construction metrics)
     * and every full-corpus serving query over the final graph
     * (sq22/sq24/sq25/sq26) — the real implementation lives in
-    * [[graft.similarity.KnnGraph.build]] next to the stored layout and
+    * [[KnnGraph.build]] next to the stored layout and
     * serving loop, and the rounds are PROCESS-SHARED through
-    * [[graft.similarity.KnnGraph.buildCached]]: the first query pays
+    * [[KnnGraph.buildCached]]: the first query pays
     * the build, the rest reload its persisted rounds (bit-identical by
     * the durable-resume proof — build once, serve many, exactly like a
     * deployment). Queries over a MODIFIED corpus (sq23's held-out
     * slices) or that TIME the build (sq22b) keep their own workDirs. */
   private def nnDescentBuild(vecs: org.apache.spark.sql.DataFrame,
       dir: String, k: Int, rounds: Int): Seq[org.apache.spark.sql.DataFrame] =
-    graft.similarity.KnnGraph.buildCached(vecs, dir, k, rounds)
+    KnnGraph.buildCached(vecs, dir, k, rounds)
 
   /** DuckDB CTEs for `rounds` greedy BEAM-SEARCH steps over the graph
     * CTE `graph(src, nbr)`: deterministic entry node per query, each
@@ -2286,11 +2066,11 @@ object SimilarityQueries {
       .select($"vec_id", toDouble($"embedding").as("v"))
       .cache()
     val graph = nnDescentBuild(vecs, dir, k, buildRounds).last
-    val und = graft.similarity.KnnGraph.undirected(graph).localCheckpoint(true)
+    val und = KnnGraph.undirected(graph).localCheckpoint(true)
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    val bf = graft.similarity.KnnGraph.exactTruth(qv, vecs, k).cache()
+    val bf = KnnGraph.exactTruth(qv, vecs, k).cache()
     def bsummary(r: Int, pool: org.apache.spark.sql.DataFrame) = {
-      val ans = graft.similarity.KnnGraph.rankPool(vecs, qv, pool, k)
+      val ans = KnnGraph.rankPool(vecs, qv, pool, k)
       val hits = ans.join(bf, Seq("qid", "node"), "left_semi")
         .agg(count(lit(1)).as("nhit"))
       pool.agg(count(lit(1)).as("pool_nodes"))
@@ -2312,7 +2092,6 @@ object SimilarityQueries {
       und: org.apache.spark.sql.DataFrame,
       qv: org.apache.spark.sql.DataFrame,
       k: Int, beamRounds: Int): Seq[(Int, org.apache.spark.sql.DataFrame)] = {
-    import graft.similarity.KnnGraph
     KnnGraph.beamTrace(KnnGraph.ringEntries(vecs, qv),
       KnnGraph.expandEdges(und), KnnGraph.scoreKeep(_, qv, vecs, k),
       beamRounds)
@@ -2345,7 +2124,7 @@ object SimilarityQueries {
     *
     * Entry A/B in the same frame: the deterministic RING entry
     * (qid·37+1 mod n, zero extra I/O) vs a WARM entry from
-    * [[graft.similarity.KnnGraph.sampledEntries]] (best of every 8th
+    * [[KnnGraph.sampledEntries]] (best of every 8th
     * node — a |Q|·n/8 broadcast pass), compared as
     * rounds-to-recall@8 ≥ 0.5: a warm start should buy the beam one or
     * more rounds, and the frame records whether it does.
@@ -2356,12 +2135,11 @@ object SimilarityQueries {
     * split this row records. */
   val sq22bGraphServingLatency: QueryDef = rowsOnly("sq22b_graph_serving_latency") { (spark, dir) =>
     import spark.implicits._
-    import graft.similarity.KnnGraph
     val k = 8; val buildRounds = 4; val beamRounds = 4
     val vecs = Tables.embeddings(spark, dir)
       .select($"vec_id", toDouble($"embedding").as("v")).cache()
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    val bf = graft.similarity.KnnGraph.exactTruth(qv, vecs, k).cache()
+    val bf = KnnGraph.exactTruth(qv, vecs, k).cache()
     val nq = qv.count()
     val root = graft.util.Scratch.tempDir("graft-sq22b")
     val tBuild0 = System.nanoTime()
@@ -2433,9 +2211,9 @@ object SimilarityQueries {
     // 128×-smaller-read path, timed after its one-off train/encode
     val sample = vecs.select($"vec_id", $"v").orderBy($"vec_id")
       .limit(20000).collect().map(_.getSeq[Double](1).toArray).toIndexedSeq
-    val cbq = graft.similarity.Pq.trainSubspaces(sample, 8, 8, 16)
+    val cbq = Pq.trainSubspaces(sample, 8, 8, 16)
     KnnGraph.writeCodes(
-      graft.similarity.Pq.pqEncode(vecs, cbq, 8), s"$root/codes")
+      Pq.pqEncode(vecs, cbq, 8), s"$root/codes")
     val bfSet = bf.as[(Long, Long)].collect().toSet
     // serve-budget policy for the quantized head (r16 verdict #2):
     // target = the exact stored head's recall on the same store —
@@ -2522,7 +2300,6 @@ object SimilarityQueries {
     * compared against is the once-in-a-while durable build. */
   val sq23GraphInsertDrift: QueryDef = rowsOnly("sq23_graph_insert_drift") { (spark, dir) =>
     import spark.implicits._
-    import graft.similarity.KnnGraph
     val k = 8; val buildRounds = 3; val beamRounds = 3
     val all = Tables.embeddings(spark, dir)
       .select($"vec_id", toDouble($"embedding").as("v")).cache()
@@ -2544,8 +2321,7 @@ object SimilarityQueries {
       held.filter($"vec_id" % 2 =!= 0))
     val tIns0 = System.nanoTime()
     batches.foreach(b => graft.streaming.StreamingGraphIngest
-      .insertBatch(b, s"$root/grown", all, k, beamRounds,
-        vecPath = Some(s"$root/vec")))
+      .insertBatch(b, s"$root/grown", s"$root/vec", k, beamRounds))
     val insMs = (System.nanoTime() - tIns0) / 1e6 / nHold
     val queries = all.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
     val bf = KnnGraph.exactTruth(queries, all, k).cache()
@@ -2732,37 +2508,25 @@ object SimilarityQueries {
     // ordered sample (sq09's recipe), persisted for the oracle replay
     val sample = vecs.select($"vec_id", $"v").orderBy($"vec_id").limit(20000)
       .collect().map(_.getSeq[Double](1).toArray).toIndexedSeq
-    val cb: Seq[Seq[Seq[Double]]] = graft.similarity.Pq
-      .trainSubspaces(sample, M, sub, K)
+    val cb: Seq[Seq[Seq[Double]]] = Pq.trainSubspaces(sample, M, sub, K)
     cb.zipWithIndex.flatMap { case (entries, mi) =>
       entries.zipWithIndex.map { case (vec, ki) => (mi, ki, vec) }
     }.toDF("mi", "ki", "vec")
       .coalesce(1).write.mode("overwrite").parquet(sq24Store)
     // 4-bit codes: the beam's entire per-candidate working set
-    // (graft.similarity.Pq.pqEncode — one implementation shared with
+    // (Pq.pqEncode — one implementation shared with
     // the stored-codes serving path, KnnGraph.serveFromStoresPq)
-    val codes = graft.similarity.Pq.pqEncode(vecs, cb, sub)
+    val codes = Pq.pqEncode(vecs, cb, sub)
       .withColumnRenamed("vec_id", "node")
       .localCheckpoint(true)
-    val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
+    val qv = queriesOf(vecs, 16)
     // per-query M×K LUTs of partial squared distances (sq09's shape)
-    val qluts = (0 until M).foldLeft(qv.toDF()) { (df, mi) =>
-      df.withColumn(s"lut$mi", graft.similarity.Pq.lutCol($"v", cb, sub, mi))
-    }.drop("v")
-    val adc = (0 until M).map(mi =>
-      element_at(col(s"lut$mi"), col(s"c$mi") + 1)).reduce(_ + _)
+    val qluts = qv.select($"qid", Pq.lutsCol($"v", cb, sub).as("luts"))
     val graph = nnDescentBuild(vecs, dir, k, buildRounds).last
-    val und = graft.similarity.KnnGraph.undirected(graph).localCheckpoint(true)
-    val bf = graft.similarity.KnnGraph.exactTruth(qv, vecs, k).cache()
+    val und = KnnGraph.undirected(graph).localCheckpoint(true)
+    val bf = KnnGraph.exactTruth(qv, vecs, k).cache()
     // each query's `keep` best pairs by ADC distance (ties → node ASC)
-    def adcTop(pairs: org.apache.spark.sql.DataFrame, keep: Int) = pairs
-      .join(broadcast(qluts), Seq("qid"))
-      .join(codes, Seq("node"))
-      .withColumn("adist", adc)
-      .select($"qid", $"node", $"adist")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"adist".asc, $"node")))
-      .filter($"rn" <= keep)
+    def adcTop(pairs: DataFrame, keep: Int) = Pq.adcKeep(pairs, qluts, codes, M, keep)
     def qsummary(r: Int, pool: org.apache.spark.sql.DataFrame) = {
       val shl = adcTop(pool.filter($"node" =!= $"qid"), 2 * k)
       val hitsAdc = shl.filter($"rn" <= k).select($"qid", $"node")
@@ -2779,9 +2543,9 @@ object SimilarityQueries {
           ($"nhit_adc".cast("double") / (16 * k)).as("recall_adc"),
           ($"nhit".cast("double") / (16 * k)).as("recall_at_k"))
     }
-    graft.similarity.KnnGraph.beamTrace(
-      graft.similarity.KnnGraph.ringEntries(vecs, qv),
-      graft.similarity.KnnGraph.expandEdges(und),
+    KnnGraph.beamTrace(
+      KnnGraph.ringEntries(vecs, qv),
+      KnnGraph.expandEdges(und),
       // the round's ranking reads 4-byte codes, never vectors
       adcTop(_, k).select($"qid", $"node"),
       beamRounds)
@@ -2871,10 +2635,10 @@ object SimilarityQueries {
     val vecs = emb.select($"vec_id", toDouble($"embedding").as("v")).cache()
     val lbl = emb.select($"vec_id".as("node"), $"label")
     val graph = nnDescentBuild(vecs, dir, k, buildRounds).last
-    val und = graft.similarity.KnnGraph.undirected(graph).localCheckpoint(true)
+    val und = KnnGraph.undirected(graph).localCheckpoint(true)
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
     val tgt = qv.select($"qid", pmod($"qid", lit(nLabels.toLong)).as("tl"))
-    val bf = graft.similarity.KnnGraph.exactTruth(qv, vecs, k).cache()
+    val bf = KnnGraph.exactTruth(qv, vecs, k).cache()
     // filtered truth: the label-pruned exact scan (at scale, a
     // label-bucketed layout turns this into a partition-pruned read)
     val fbf = broadcast(qv.join(tgt, Seq("qid")).select($"qid", $"v".as("qv"), $"tl"))
@@ -2886,7 +2650,7 @@ object SimilarityQueries {
       .select($"qid", $"node")
       .cache()
     def fsummary(r: Int, pool: org.apache.spark.sql.DataFrame) = {
-      val ans = graft.similarity.KnnGraph.rankPool(vecs, qv, pool, k)
+      val ans = KnnGraph.rankPool(vecs, qv, pool, k)
       val hits = ans.join(bf, Seq("qid", "node"), "left_semi")
         .agg(count(lit(1)).as("nhit"))
       val fp = pool.filter($"node" =!= $"qid")
@@ -2894,7 +2658,7 @@ object SimilarityQueries {
         .join(broadcast(tgt), Seq("qid"))
         .filter($"label" === $"tl")
         .select($"qid", $"node")
-      val fans = graft.similarity.KnnGraph.scoreKeep(fp, qv, vecs, k)
+      val fans = KnnGraph.scoreKeep(fp, qv, vecs, k)
       val fhits = fans.join(fbf, Seq("qid", "node"), "left_semi")
         .agg(count(lit(1)).as("fhit"))
       pool.agg(count(lit(1)).as("pool_nodes"))
@@ -2910,7 +2674,7 @@ object SimilarityQueries {
       .reduce(_ unionByName _).orderBy($"round")
   }
 
-  /** DuckDB CTEs replaying [[graft.similarity.KnnGraph.robustPrune]]'s
+  /** DuckDB CTEs replaying [[KnnGraph.robustPrune]]'s
     * greedy over candidate CTE `cand(src, nbr, cos)`: `r` unrolled
     * rounds of [top-1 remaining per src by (cos DESC, nbr)] →
     * [discard remaining candidates the pick α-covers], ending in
@@ -3017,7 +2781,7 @@ object SimilarityQueries {
     // candidate stage (each node's 24 best scored 2-hop candidates —
     // Vamana's search-list bound L) ∪ the ring init's spread edges, so
     // the pool is wide AND long while staying L·n rows at any scale
-    val cand = graft.similarity.KnnGraph.scoredCandidates(vecs, plain)
+    val cand = KnnGraph.scoredCandidates(vecs, plain)
       .withColumn("rn", row_number().over(
         Window.partitionBy($"src").orderBy($"cos".desc, $"nbr")))
       .filter($"rn" <= 24).drop("rn")
@@ -3027,12 +2791,12 @@ object SimilarityQueries {
       .robustPrune(vecs, cand, degree, alpha)
       .select($"src", $"nbr").localCheckpoint(true)
     val qv = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    val bf = graft.similarity.KnnGraph.exactTruth(qv, vecs, k).cache()
+    val bf = KnnGraph.exactTruth(qv, vecs, k).cache()
     def closure(g: org.apache.spark.sql.DataFrame) =
-      graft.similarity.KnnGraph.undirected(g).localCheckpoint(true)
+      KnnGraph.undirected(g).localCheckpoint(true)
     def recallRows(pools: Seq[(Int, org.apache.spark.sql.DataFrame)]) =
       pools.map { case (r, pool) =>
-        val ans = graft.similarity.KnnGraph.rankPool(vecs, qv, pool, k)
+        val ans = KnnGraph.rankPool(vecs, qv, pool, k)
         val hits = ans.join(bf, Seq("qid", "node"), "left_semi")
           .agg(count(lit(1)).as("nhit"))
         pool.agg(count(lit(1)).as("pool_nodes"))
@@ -3113,7 +2877,7 @@ object SimilarityQueries {
   /** LOCALITY-BUCKETED graph storage measured — the I/O-layout
     * counterpart of sq26's edge-selection result: the same undirected
     * adjacency stored two ways, hash (`src % N`, the default layout)
-    * vs CLUSTERED ([[graft.similarity.KnnGraph.writeStoreClustered]] —
+    * vs CLUSTERED ([[KnnGraph.writeStoreClustered]] —
     * partition by the source vector's nearest coarse centroid, each
     * edge carrying its neighbor's bucket so the walk always knows
     * where to read next — no node→bucket dictionary, no extra round
@@ -3139,7 +2903,6 @@ object SimilarityQueries {
     * directory regardless of how many nodes it holds. */
   val sq27ClusteredGraphStore: QueryDef = rowsOnly("sq27_clustered_graph_store") { (spark, dir) =>
     import spark.implicits._
-    import graft.similarity.{KnnGraph, Pq}
     val k = 8; val buildRounds = 4; val beamRounds = 4; val cells = 16
     val vecs = Tables.embeddings(spark, dir)
       .select($"vec_id", toDouble($"embedding").as("v")).cache()
@@ -3218,12 +2981,12 @@ object SimilarityQueries {
     * Vamana deployment shape end-to-end:
     *
     *   1. build depth chosen BY POLICY, not by hand (r15 —
-    *      [[graft.similarity.KnnGraph.buildToServedRecall]]: build in
+    *      [[KnnGraph.buildToServedRecall]]: build in
     *      steps, prune each step, serve a held-out probe set over the
     *      pruned edges, stop when recall plateaus — the depth knob was
     *      n-dependent, 0.117→0.016 at a fixed depth across 2k→200k),
     *      the prune α-robust over SEARCH-BASED candidates
-    *      (r14 — [[graft.similarity.KnnGraph.searchCandidates]],
+    *      (r14 — [[KnnGraph.searchCandidates]],
     *      DiskANN's visited-set rule: the pool carries the approach
     *      paths, L-bounded by construction; durable prune with
     *      `_SUCCESS` resume) written through the CLUSTERED layout
@@ -3235,14 +2998,14 @@ object SimilarityQueries {
     *      — wide vector rows and narrow code rows get separate counts
     *      at the same byte budget, the r13-measured constraint);
     *   3. served through the fully store-resident WARM QUANTIZED head
-    *      ([[graft.similarity.KnnGraph.serveFromStoresPq]] on the
+    *      ([[KnnGraph.serveFromStoresPq]] on the
     *      clustered store — stored entries, clustered expansion, ADC ranking, one
     *      exact re-rank), recall + per-query latency in-row;
     *   4. then insert → erase → RE-PRUNE → re-serve → ROLLBACK on the
     *      same artifact: streamed clustered insert WITH code append
     *      (sq23's rung), clustered erase reaching vectors + codes +
     *      entries (wq08's contract), one search-candidate re-prune
-    *      ([[graft.similarity.KnnGraph.repruneStored]] — the pruned
+    *      ([[KnnGraph.repruneStored]] — the pruned
     *      serving store's maintenance rung, r14)
     *      published as a v2 store and PROMOTED through
     *      [[graft.ml.IndexLifecycle]] (every serve resolves the PINNED
@@ -3262,7 +3025,6 @@ object SimilarityQueries {
     * insert/erase rewrites, corpus-size-free serving. */
   val sq28ComposedGraphStore: QueryDef = rowsOnly("sq28_composed_graph_store") { (spark, dir) =>
     import spark.implicits._
-    import graft.similarity.{KnnGraph, Pq}
     val k = 8; val beamRounds = 4
     val degree = 8; val alpha = 1.25
     val cells = 16; val m = 8; val sub = 8

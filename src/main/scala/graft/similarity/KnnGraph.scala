@@ -1,6 +1,8 @@
 package graft.similarity
 
+import graft.operators.TopKPerGroup
 import graft.similarity.VectorOps.cosine
+import graft.util.SparkOrdering
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -352,14 +354,11 @@ object KnnGraph {
     // their candidates differ from ring-start prunes.
     val pruneDirTag = policyPruneTag(entriesFor.isDefined, entriesTag,
       degree, alpha, candBeamRounds)
-    val dbg = sys.env.contains("GRAFT_POLICY_DEBUG")
     // corpus count once for every depth's slice derivation — a ladder
     // would otherwise pay one count() job per evaluation (r15 advice)
     val nCorpus = vecs.count()
     while (d <= maxRounds && stale < 2) {
-      val t0 = System.nanoTime()
       rounds = buildDurable(vecs, k, d, workDir)
-      val t1 = System.nanoTime()
       val last = rounds.last
       val pruned = robustPrune(vecs,
           searchCandidates(vecs, last, k, candBeamRounds,
@@ -368,9 +367,7 @@ object KnnGraph {
             corpusCount = nCorpus),
           degree, alpha, Some(s"$workDir/$pruneDirTag$d"))
         .select($"src", $"nbr").localCheckpoint(true)
-      val t2 = System.nanoTime()
       val recall = servedRecall(pruned)
-      if (dbg) System.err.println(f"policy eval d=$d: build ${(t1 - t0) / 1e9}%.1f s, cand+prune ${(t2 - t1) / 1e9}%.1f s, serve ${(System.nanoTime() - t2) / 1e9}%.1f s, recall $recall%.3f")
       trace += d -> recall
       prunedAt(d) = pruned
       if (trace.size == 1 || recall >= best + eps) stale = 0 else stale += 1
@@ -714,7 +711,8 @@ object KnnGraph {
     * dominates its old one elementwise — per-node neighbor quality is
     * monotone non-decreasing (KnnGraphRefineSpec pins it).
     *
-    * The keep runs as [[TopKDedup]] — one mergeable aggregation with
+    * The keep runs as [[TopKPerGroup.TopK]] with `distinct` — one
+    * mergeable aggregation, ordered by [[SparkOrdering.bestFirst]], with
     * MAP-SIDE partial top-k (guide §2.3 "aggregate before you
     * shuffle") replacing the former candidate-wide `.distinct()` + a
     * `row_number` window (r17 verdict ask #1): the window shuffled and
@@ -732,7 +730,7 @@ object KnnGraph {
   private def tighten(vecs: DataFrame, e: DataFrame, k: Int): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val agg = new TopKDedup(k)
+    val agg = new TopKPerGroup.TopK(k, distinct = true)
     scoreEdges(vecs, candidatePairsDup(e))
       .select($"src".as[Long],
         struct($"nbr", $"cos").as[(Long, Double)])
@@ -742,32 +740,6 @@ object KnnGraph {
       .flatMap { case (src, top) =>
         top.iterator.map { case (nbr, cos) => (src, nbr, cos) } }
       .toDF("src", "nbr", "cos")
-  }
-
-  /** Dedup-aware mergeable top-k: k-bounded buffers of DISTINCT
-    * neighbors ordered by [[bestFirst]] (cos DESC under
-    * [[nanSafeCompare]], then nbr ASC) — exactly the `row_number` window
-    * ordering [[tighten]] replaces.
-    * Requires (and the tighten pipeline guarantees) that every
-    * occurrence of an id within a group carries the same cos. */
-  private final class TopKDedup(k: Int) extends
-      org.apache.spark.sql.expressions.Aggregator[
-        (Long, Double), Seq[(Long, Double)], Seq[(Long, Double)]] {
-    private def trim(s: Seq[(Long, Double)]): Seq[(Long, Double)] =
-      s.distinctBy(_._1).sorted(bestFirst).take(k)
-    override def zero: Seq[(Long, Double)] = Seq.empty
-    override def reduce(b: Seq[(Long, Double)],
-        a: (Long, Double)): Seq[(Long, Double)] =
-      if (b.exists(_._1 == a._1)) b
-      else if (b.size < k || bestFirst.lt(a, b.last)) trim(b :+ a)
-      else b
-    override def merge(x: Seq[(Long, Double)],
-        y: Seq[(Long, Double)]): Seq[(Long, Double)] = trim(x ++ y)
-    override def finish(r: Seq[(Long, Double)]): Seq[(Long, Double)] = r
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Seq[(Long, Double)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Seq[(Long, Double)]] =
-      bufferEncoder
   }
 
   /** One round's candidate PAIR MULTISET — each node's 2-hop
@@ -1074,7 +1046,7 @@ object KnnGraph {
     if (nScope == 0) {
       // nothing to repair: v2 links every partition of v1 verbatim
       linkStorePartitions(spark, graphPath, outPath, Set.empty)
-      writeBucketMeta(spark, outPath, cents.length)
+      writeBucketMeta(outPath, cents.length, stored)
       copySidecar(hfs, graphPath, outPath, "_graft_centroids")
       copySidecar(hfs, graphPath, outPath, "_graft_entries")
       return 0L
@@ -1130,7 +1102,7 @@ object KnnGraph {
     // touched partition dirs do not exist yet in the new version
     keepRows.union(newRows)
       .write.mode("append").partitionBy("bucket").parquet(outPath)
-    writeBucketMeta(spark, outPath, cents.length)
+    writeBucketMeta(outPath, cents.length, stored)
     copySidecar(hfs, graphPath, outPath, "_graft_centroids")
     // entries splice at the same granularity: cells outside the repair
     // scope keep their v1 rows (erase already dropped victim rows;
@@ -1443,32 +1415,13 @@ object KnnGraph {
     }
   }
 
-  /** Spark SQL's double comparison, replayed driver-side —
-    * `nanSafeCompareDoubles`: NaN is GREATEST (and equal to itself),
-    * and -0.0 == 0.0. Java's `Double.compare` agrees on NaN but orders
-    * -0.0 < 0.0, and Java's primitive `<=` makes EVERY NaN comparison
-    * false — both diverge from the relational operators the local
-    * replays below stand in for (r17 advice: a zero vector's NaN
-    * cosine then survived the cover test it should fail, and ±0.0
-    * ties broke by sign instead of falling through to the id
-    * tie-break). Every local twin of a Spark sort or BinaryComparison
-    * must route through THIS. */
-  private[graft] def nanSafeCompare(x: Double, y: Double): Int = {
-    val xN = java.lang.Double.isNaN(x)
-    val yN = java.lang.Double.isNaN(y)
-    if ((xN && yN) || (x == y)) 0
-    else if (xN) 1
-    else if (yN) -1
-    else if (x > y) 1 else -1
-  }
-
   /** The one-pass grouped greedy both [[robustPrune]] paths run: shuffle
     * the vector-attached candidate rows once by src, then replay
     * Vamana's sequential pick-and-cover locally per node. Sort order
-    * ([[bestFirst]]: cos DESC, then nbr ASC, under [[nanSafeCompare]] —
-    * NaN greatest, -0.0 == 0.0, Spark's own double ordering) and the α-cover
+    * ([[SparkOrdering.bestFirst]]: cos DESC, then nbr ASC, NaN greatest,
+    * -0.0 == 0.0, Spark's own double ordering) and the α-cover
     * arithmetic ([[cosineLocal]], the native expression's bit-exact
-    * twin, compared with [[nanSafeCompare]] like Spark's `<=`) are
+    * twin, compared with [[SparkOrdering.compare]] like Spark's `<=`) are
     * EXACTLY the relational rounds' — GraphPruneSpec pins edge-set
     * equality against the driver-side reference replay, including the
     * zero-vector (NaN cosine) and ±0.0-score cases. */
@@ -1482,7 +1435,7 @@ object KnnGraph {
       .flatMapGroups { (src, it) =>
         val sorted = it.map { case (_, nbr, cos, cv) =>
           (nbr, cos, cv.toArray) }.toArray
-          .sortBy { case (nbr, cos, _) => (nbr, cos) }(bestFirst)
+          .sortBy { case (nbr, cos, _) => (nbr, cos) }(SparkOrdering.bestFirst)
         val kept = scala.collection.mutable.ArrayBuffer
           .empty[(Long, Double, Array[Double])]
         var i = 0
@@ -1492,10 +1445,10 @@ object KnnGraph {
           var j = 0
           while (j < kept.size && !covered) {
             // the pick covers c when α·(1−cos(pick, c)) ≤ (1−cos(src, c))
-            // under Spark's `<=` (nanSafeCompare): a NaN-scored candidate
+            // under Spark's `<=` (SparkOrdering.compare): a NaN-scored candidate
             // (zero vector — RHS NaN, the greatest value) is covered by
             // the FIRST pick, exactly as the relational filter pruned it
-            if (nanSafeCompare(
+            if (SparkOrdering.compare(
                 alpha * (1.0 - cosineLocal(kept(j)._3, cv)), 1.0 - cos) <= 0)
               covered = true
             j += 1
@@ -1525,13 +1478,33 @@ object KnnGraph {
     * the count must scale with n (buckets ≈ n / rows-per-file keeps a
     * pruned read proportional to its candidate set), so it cannot be
     * a constant. Stores written before the marker read as the old
-    * default. */
-  private def writeBucketMeta(spark: SparkSession, path: String,
-      n: Int): Unit = {
+    * default.
+    *
+    * The marker's second line records the store's schema as a parquet
+    * read infers it — the `written` frame's columns other than
+    * `bucket`, all nullable, then the int `bucket` partition column —
+    * so [[openStore]] pins a new version's relation without a
+    * footer-inference job (an append or erase never changes the
+    * schema). StampedCacheSpec checks it against inference for every
+    * writer. */
+  private def writeBucketMeta(path: String, n: Int,
+      written: DataFrame): Unit = {
+    import org.apache.spark.sql.types._
+    def asRead(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = asRead(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(asRead(a.elementType), containsNull = true)
+      case m: MapType => MapType(asRead(m.keyType), asRead(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+    val schema = StructType(written.schema.fields.filterNot(_.name == "bucket")
+      .map(f => f.copy(dataType = asRead(f.dataType), nullable = true)) :+
+      StructField("bucket", IntegerType))
     val p = new org.apache.hadoop.fs.Path(path, "_graft_buckets")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = p.getFileSystem(written.sparkSession.sparkContext.hadoopConfiguration)
     val out = f.create(p, true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
+    try out.write(s"$n\n${schema.json}".getBytes("UTF-8")) finally out.close()
   }
 
   /** THE driver-side bucket function — Math.floorMod, the arithmetic
@@ -1647,8 +1620,8 @@ object KnnGraph {
   private val ResidentBudget: Long = Runtime.getRuntime.maxMemory / 16
 
   /** One store VERSION's cached state: the bucket count read from the
-    * marker, the parquet schema inferred at most once, whether a
-    * coordinated request has served it yet, and the resident buckets —
+    * marker, the parquet schema (recorded, or inferred at most once),
+    * whether a coordinated request has served it yet, and the resident buckets —
     * vector rows or adjacency lists, whichever the store holds —
     * admitted while their on-disk bytes fit `budget`. A new stamp is a
     * new StoreMeta ([[storeMetaCache]] replaces the entry), so nothing
@@ -1695,19 +1668,25 @@ object KnnGraph {
   private val storeMetaCache = new graft.util.StampedCache[StoreMeta]
 
   /** Resolve a store: ONE listing; the schema and bucket count come
-    * from [[storeMetaCache]] on a stamp hit. Stores written before the
-    * marker read as [[NumBuckets]]. */
+    * from [[storeMetaCache]] on a stamp hit, and from the one marker
+    * read ([[writeBucketMeta]]) on a miss. Stores written before the
+    * marker read as [[NumBuckets]]; a marker without a recorded schema
+    * leaves it to inference. */
   def openStore(spark: SparkSession, path: String): Store = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val listing = fs.listStatus(p).toSeq
     val meta = storeMetaCache(path, graft.util.StampedCache.listingStamp(listing)) {
-      val nb = listing.find(_.getPath.getName == "_graft_buckets").fold(NumBuckets) { m =>
+      val marker = listing.find(_.getPath.getName == "_graft_buckets").map { m =>
         val in = fs.open(m.getPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.split("\n")
         finally in.close()
       }
-      new StoreMeta(nb, () => spark.read.parquet(path).schema)
+      val recorded = marker.flatMap(_.lift(1)).map(json =>
+        org.apache.spark.sql.types.DataType.fromJson(json)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+      new StoreMeta(marker.fold(NumBuckets)(_.head.trim.toInt),
+        () => recorded.getOrElse(spark.read.parquet(path).schema))
     }
     new Store(path, spark, meta)
   }
@@ -1732,7 +1711,7 @@ object KnnGraph {
     und
       .withColumn("bucket", pmod($"src", lit(nb.toLong)).cast("int"))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    writeBucketMeta(graph.sparkSession, path, nb)
+    writeBucketMeta(path, nb, und)
   }
 
   /** Erase victim NODES from the stored adjacency — the graph edition
@@ -1969,12 +1948,12 @@ object KnnGraph {
     import graph.sparkSession.implicits._
     val assign = vecs.select($"vec_id",
       clusterOf($"v", centroids).as("cb"))
-    undirected(graph)
+    val rows = undirected(graph)
       .join(assign.select($"vec_id".as("nbr"), $"cb".as("nbr_bucket")), Seq("nbr"))
       .join(assign.select($"vec_id".as("src"), $"cb".as("bucket")), Seq("src"))
       .select($"src", $"nbr", $"nbr_bucket", $"bucket")
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    writeBucketMeta(graph.sparkSession, path, centroids.length)
+    rows.write.mode("overwrite").partitionBy("bucket").parquet(path)
+    writeBucketMeta(path, centroids.length, rows)
     // underscore-prefixed dirs are invisible to the store's own scans
     centroids.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("cid", "centroid")
@@ -1985,10 +1964,8 @@ object KnnGraph {
     * twin of IVF's coarse assign (first-index-wins tie-break, the
     * arithmetic [[graft.similarity.Pq.ivfPqEncode]] uses). */
   def clusterOf(v: org.apache.spark.sql.Column,
-      centroids: Seq[Seq[Double]]): org.apache.spark.sql.Column = {
-    val d = transform(typedlit(centroids), Pq.sqd(v, _))
-    (array_position(d, array_min(d)) - 1).cast("int")
-  }
+      centroids: Seq[Seq[Double]]): org.apache.spark.sql.Column =
+    Pq.nearestCol(v, centroids)
 
   /** JVM-wide centroid sidecar cache ([[graft.util.StampedCache]]'s
     * rule, stamped by the sidecar's listing — every write mints fresh
@@ -2147,19 +2124,11 @@ object KnnGraph {
     * MEMBERS (ties → smallest id) — one corpus pass, n rows through
     * the per-cell window. Shared by the sidecar writer and
     * [[plannedEntries]] so that what a policy evaluates pre-store is
-    * BY CONSTRUCTION what the store will serve from. The distance
-    * array materializes ONCE: cid and dist both derive from it
-    * (rebuilding it per column would double the cells×dim arithmetic
-    * per row). */
+    * BY CONSTRUCTION what the store will serve from. */
   private def entryMembers(vecs: DataFrame, cents: Seq[Seq[Double]],
       per: Int): DataFrame = {
     import vecs.sparkSession.implicits._
-    val d = transform(typedlit(cents), Pq.sqd($"v", _))
-    vecs.select($"vec_id", $"v")
-      .withColumn("ds", d)
-      .withColumn("cid",
-        (array_position($"ds", array_min($"ds")) - 1).cast("int"))
-      .withColumn("dist", array_min($"ds")).drop("ds")
+    Pq.withNearest(vecs.select($"vec_id", $"v"), $"v", cents, "cid", Some("dist"))
       .withColumn("rn", row_number().over(
         Window.partitionBy($"cid").orderBy($"dist".asc, $"vec_id")))
       .filter($"rn" <= per)
@@ -2434,7 +2403,7 @@ object KnnGraph {
     frame
       .withColumn("bucket", pmod($"vec_id", lit(nb.toLong)).cast("int"))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    writeBucketMeta(vecs.sparkSession, path, nb)
+    writeBucketMeta(path, nb, frame)
     writeHashEntries(vecs, path, slots)
   }
 
@@ -2809,7 +2778,7 @@ object KnnGraph {
     codes
       .withColumn("bucket", pmod($"vec_id", lit(nb.toLong)).cast("int"))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    writeBucketMeta(codes.sparkSession, path, nb)
+    writeBucketMeta(path, nb, codes)
   }
 
   /** PQ-GUIDED stored serving — sq24's algorithm lifted onto the
@@ -2856,21 +2825,12 @@ object KnnGraph {
     val sub = cb.head.head.length
     val codes = openStore(spark, codesPath)
     val vec = openStore(spark, vecPath)
-    val qluts = (0 until m).foldLeft(queries.toDF()) { (df, mi) =>
-      df.withColumn(s"lut$mi", Pq.lutCol($"v", cb, sub, mi))
-    }.drop("v")
-    val adc = (0 until m).map(mi =>
-      element_at(col(s"lut$mi"), col(s"c$mi") + 1)).reduce(_ + _)
+    val qluts = queries.select($"qid", Pq.lutsCol($"v", cb, sub).as("luts"))
     // candidate columns ride through the keep unchanged — the clustered
     // walk needs each kept candidate's bucket (the edge that discovered
     // a node names where its adjacency lives)
-    def adcKeep(cand: DataFrame, keep: Int) = cand
-      .join(broadcast(qluts), Seq("qid"))
-      .join(fetch(codes, cand).withColumnRenamed("vec_id", "node"), Seq("node"))
-      .withColumn("adist", adc)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"adist".asc, $"node")))
-      .filter($"rn" <= keep).select(cand.columns.map(col): _*)
+    def adcKeep(cand: DataFrame, keep: Int) = Pq.adcKeep(cand, qluts,
+      fetch(codes, cand).withColumnRenamed("vec_id", "node"), m, keep).drop("rn")
     // `beamWidth` (DiskANN's L) widens the per-round ADC keep past k:
     // the pool a query can ever re-rank is ≈ entries + rounds·L rows,
     // so past the shortlist knob the WALK's coverage is the other
@@ -2961,20 +2921,10 @@ object KnnGraph {
     dot / math.sqrt(nx * ny)
   }
 
-  /** (node, cos) by cos DESC under [[nanSafeCompare]] (NaN greatest →
-    * first, -0.0 == 0.0), then node ASC — the `row_number` ordering
-    * both distributed loops use. */
-  private[graft] val bestFirst: Ordering[(Long, Double)] =
-    new Ordering[(Long, Double)] {
-      def compare(a: (Long, Double), b: (Long, Double)): Int = {
-        val c = nanSafeCompare(b._2, a._2)
-        if (c != 0) c else java.lang.Long.compare(a._1, b._1)
-      }
-    }
-
-  /** The k best candidates under [[bestFirst]]. */
+  /** The k best (node, cos) candidates under
+    * [[graft.util.SparkOrdering.bestFirst]]. */
   private[graft] def keepTopK(cands: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] =
-    cands.sorted(bestFirst).take(k)
+    cands.sorted(SparkOrdering.bestFirst).take(k)
 
   /** LOW-LATENCY serving head: the beam state (≤ |Q|·(1+rounds·k)
     * (node, cos) rows) lives on the COORDINATOR, and the stores answer
@@ -3028,7 +2978,7 @@ object KnnGraph {
       // default entries come from the store's own `_graft_entries`
       // sidecar (≤slots rows, erase-aware, every writeVectors store
       // carries one; loud error when absent): each query warm-starts at
-      // its best representative under [[bestFirst]] (cosine DESC, then
+      // its best representative under SparkOrdering.bestFirst (cosine DESC, then
       // node ASC) — the rule the streamed insert uses. The earlier
       // fallback synthesized floorMod(qid·37+1, n), which assumes DENSE
       // ids 0..n-1 — on a store with sparse or erased ids the
@@ -3039,7 +2989,7 @@ object KnnGraph {
       val reps = hashEntries(spark, vecPath)
       queries.map { case (qid, qvec) =>
         qid -> reps.map { case (node, cv) => node -> cosineLocal(qvec, cv) }
-          .min(bestFirst)._1
+          .min(SparkOrdering.bestFirst)._1
       }.toMap
     }
     coordinatedWalk(graph, vec, queries, k, beamRounds, entry)

@@ -1,5 +1,9 @@
 package graft.similarity
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
 /** Product-quantization codebook training — driver-side Lloyd's k-means
   * over a BOUNDED sample, the standard FAISS recipe: even for a 10^11-
   * vector corpus, PQ codebooks train on ~10^5 sampled vectors (here the
@@ -8,14 +12,39 @@ package graft.similarity
   * (8 fits × init + iterations); a seeded local loop is deterministic,
   * instant, and keeps the ENCODE and SEARCH paths pure codegen column
   * expressions over the codebook literal — no ML UDFs anywhere.
+  *
+  * This object is the ONE home of the quantization arithmetic, column
+  * and driver side: squared distance ([[sqd]] / [[sqdist]]), the
+  * first-index nearest-centroid argmin ([[nearestCol]], [[withNearest]]
+  * / [[nearest]]), the per-subspace encode fold, the query LUT fold
+  * ([[lutsCol]] / [[luts]]), the ADC sum ([[adcCol]]) and the ADC rank
+  * ([[adcTop]], [[adcKeep]]). PqKernelSpec pins column ≡ driver bit for
+  * bit and fails if another file under src/main writes the fold or the
+  * argmin out by hand.
   */
 object Pq {
 
-  private def sqdist(a: Array[Double], b: Array[Double]): Double = {
+  /** Driver-side squared distance: [[sqd]]'s left-associated fold,
+    * bit for bit. */
+  def sqdist(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0
     var i = 0
     while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
     s
+  }
+
+  /** Index of `p`'s nearest centroid, the first on a tie — the driver
+    * twin of [[nearestCol]]. */
+  def nearest(p: Array[Double], centroids: Array[Array[Double]]): Int = {
+    var best = 0
+    var bd = Double.MaxValue
+    var c = 0
+    while (c < centroids.length) {
+      val d = sqdist(p, centroids(c))
+      if (d < bd) { bd = d; best = c }
+      c += 1
+    }
+    best
   }
 
   /** Seeded Lloyd's iterations; empty clusters keep their centroid. */
@@ -31,14 +60,7 @@ object Pq {
       val sums = Array.fill(k)(new Array[Double](dim))
       val counts = new Array[Int](k)
       points.foreach { p =>
-        var best = 0
-        var bd = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          val d = sqdist(p, centroids(c))
-          if (d < bd) { bd = d; best = c }
-          c += 1
-        }
+        val best = nearest(p, centroids)
         counts(best) += 1
         var j = 0
         while (j < dim) { sums(best)(j) += p(j); j += 1 }
@@ -64,17 +86,47 @@ object Pq {
         .map(_.toSeq).toSeq
     }
 
-  import org.apache.spark.sql.{Column, DataFrame}
-  import org.apache.spark.sql.functions._
-
   /** Squared distance as the left-associated zip_with/aggregate fold —
     * the ONE definition of the arithmetic every DuckDB oracle replays
-    * with explicit j-ordered sums ([[lutCol]], [[ivfPqEncode]]'s coarse
-    * routing, and through lutCol every encode/LUT path; the stored
-    * layouts' cell routing, [[KnnGraph.clusterOf]]). Keep them in
-    * lockstep: a fold-order change here changes hashes everywhere. */
-  private[similarity] def sqd(a: Column, b: Column): Column =
+    * with explicit j-ordered sums. Its consumers, all through
+    * [[dists]]: [[nearestCol]] and [[withNearest]] (IVF coarse routing
+    * in [[ivfPqEncode]], the stored layouts' cell routing
+    * [[KnnGraph.clusterOf]] and entry pick), the per-subspace encode
+    * fold of [[pqEncode]] and [[ivfPqEncode]], and [[lutsCol]] (the
+    * query LUTs of sq09, sq10, sq17, sq24 and
+    * [[KnnGraph.serveFromStoresPq]]); directly, sq04/sq10's probe
+    * distance. [[sqdist]] is its driver twin (training,
+    * [[StoredIndex]]'s routing and LUTs). A fold-order change here
+    * changes hashes everywhere, and PqKernelSpec pins column ≡ driver. */
+  private[graft] def sqd(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
+
+  /** `v`'s squared distance to every centroid, as one array column. */
+  private def dists(v: Column, centroids: Seq[Seq[Double]]): Column =
+    transform(typedlit(centroids), c => sqd(v, c))
+
+  /** First-index argmin of a distance array: array_position finds the
+    * FIRST element equal to the minimum — the oracle's (d ASC, index
+    * ASC) rank, and [[nearest]]'s strict `<`. */
+  private def argmin(d: Column): Column =
+    (array_position(d, array_min(d)) - 1).cast("int")
+
+  /** Nearest-centroid index of `v` as one expression. Both argmin reads
+    * rebuild the distance array; [[withNearest]] builds it once. */
+  def nearestCol(v: Column, centroids: Seq[Seq[Double]]): Column =
+    argmin(dists(v, centroids))
+
+  /** `df` plus column `out`, [[nearestCol]] of `v` (and with `dist` set,
+    * that nearest distance). The distance array materializes ONCE in
+    * its own projection: inlining it into both argmin reads would double
+    * the centroids×dim arithmetic per row. */
+  private[graft] def withNearest(df: DataFrame, v: Column,
+      centroids: Seq[Seq[Double]], out: String,
+      dist: Option[String] = None): DataFrame = {
+    val d = s"${out}_dists"
+    val idx = df.withColumn(d, dists(v, centroids)).withColumn(out, argmin(col(d)))
+    dist.fold(idx)(n => idx.withColumn(n, array_min(col(d)))).drop(d)
+  }
 
   /** OPQ rotation for the RESIDUAL space (Ge et al. 2014 applied inside
     * IVF, the FAISS `OPQ..,IVF..,PQ..` chain): eigendecompose the
@@ -122,29 +174,63 @@ object Pq {
     }
 
   /** Per-subspace K-entry LUT column: squared distances of `v`'s
-    * `mi`-th subspace slice to every codebook entry, as the
-    * left-associated zip_with/aggregate fold (the arithmetic the
-    * DuckDB oracles replay with explicit j-ordered sums — keep them in
-    * lockstep). Shared by flat-PQ encode, query LUTs (sq24), and the
-    * stored-codes serving path. */
-  def lutCol(v: Column, cb: Seq[Seq[Seq[Double]]], sub: Int, mi: Int): Column =
-    transform(typedlit(cb(mi)), c => sqd(slice(v, mi * sub + 1, sub), c))
+    * `mi`-th subspace slice to every codebook entry. The encode fold
+    * runs it per subspace; [[lutsCol]] stacks it per query. */
+  private def lutCol(v: Column, cb: Seq[Seq[Seq[Double]]], sub: Int, mi: Int): Column =
+    dists(slice(v, mi * sub + 1, sub), cb(mi))
+
+  /** A query's LUTs as ONE array<array<double>> column, entry `mi` being
+    * [[lutCol]] of subspace `mi` — the one LUT representation every ADC
+    * path reads ([[adcCol]]), built here or driver-side by [[luts]]. */
+  def lutsCol(v: Column, cb: Seq[Seq[Seq[Double]]], sub: Int): Column =
+    array(cb.indices.map(lutCol(v, cb, sub, _)): _*)
+
+  /** Driver twin of [[lutsCol]], for LUTs built on the coordinator. */
+  def luts(v: Array[Double], cb: Seq[Seq[Seq[Double]]],
+      sub: Int): Seq[Seq[Double]] =
+    cb.indices.map { mi =>
+      val s = v.slice(mi * sub, (mi + 1) * sub)
+      cb(mi).map(e => sqdist(s, e.toArray))
+    }
+
+  /** The per-subspace encode fold: `c0..c{M-1}`, the index of each
+    * `sub`-dim slice of `v`'s nearest `cb` entry, first index on a tie. */
+  private def encode(df: DataFrame, v: Column, cb: Seq[Seq[Seq[Double]]],
+      sub: Int): DataFrame =
+    cb.indices.foldLeft(df)((acc, mi) =>
+      withNearest(acc, slice(v, mi * sub + 1, sub), cb(mi), s"c$mi"))
+
+  /** The ADC distance Σ_m luts[m][c_m] of a row carrying a [[lutsCol]]
+    * column and the codes `c0..c{m-1}`, summed left to right. */
+  def adcCol(luts: Column, m: Int): Column =
+    (0 until m).map(mi =>
+      element_at(element_at(luts, mi + 1), col(s"c$mi") + 1)).reduce(_ + _)
+
+  /** The ADC rank: each `qid`'s `depth` best rows of `pairs` (which
+    * carry `luts` and the candidate's `m` codes) by (ADC distance ASC,
+    * `id` ASC), numbered `rn`, the distance kept as `adc`. */
+  def adcTop(pairs: DataFrame, m: Int, id: String, depth: Int): DataFrame =
+    pairs.withColumn("adc", adcCol(col("luts"), m))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("adc").asc, col(id))))
+      .filter(col("rn") <= depth)
+
+  /** The graph walk's ADC keep (sq24's beam and
+    * [[KnnGraph.serveFromStoresPq]]): each query's `keep` best
+    * candidates of `cand` (qid, node, …) by [[adcTop]] over its query's
+    * `qluts` (qid, luts) and the node's `codes` (node, c0..). Returns
+    * cand's columns unchanged, plus `rn`. */
+  def adcKeep(cand: DataFrame, qluts: DataFrame, codes: DataFrame, m: Int,
+      keep: Int): DataFrame =
+    adcTop(cand.join(broadcast(qluts), Seq("qid")).join(codes, Seq("node")),
+      m, "node", keep).select((cand.columns :+ "rn").map(col): _*)
 
   /** Flat-PQ encode (no coarse stage): `vec_id` + one 4-bit code per
-    * subspace as columns `c0..c{M-1}` — argmin via
-    * array_position(d, array_min(d)), first-index-wins like the
+    * subspace as columns `c0..c{M-1}`, first-index-wins like the
     * oracle's (pd ASC, ki) rank. The per-candidate working set of
     * PQ-guided serving. */
-  def pqEncode(vecs: DataFrame, cb: Seq[Seq[Seq[Double]]], sub: Int): DataFrame = {
-    val m = cb.length
-    (0 until m).foldLeft(vecs.select(col("vec_id"), col("v"))) { (df, mi) =>
-        df.withColumn(s"d$mi", lutCol(col("v"), cb, sub, mi))
-          .withColumn(s"c$mi",
-            (array_position(col(s"d$mi"), array_min(col(s"d$mi"))) - 1).cast("int"))
-          .drop(s"d$mi")
-      }
-      .drop("v")
-  }
+  def pqEncode(vecs: DataFrame, cb: Seq[Seq[Seq[Double]]], sub: Int): DataFrame =
+    encode(vecs.select(col("vec_id"), col("v")), col("v"), cb, sub).drop("v")
 
   /** IVF-PQ encode as a pure COLUMN projection over frozen quantizers —
     * the shared arithmetic of the batch index build (sq10) and the
@@ -153,31 +239,16 @@ object Pq {
     * subtract that centroid (residual), then per subspace emit the
     * nearest `cb` codebook entry index → `c0..c{M-1}`. Everything is
     * array built-ins over codebook literals, fully codegen, no UDFs —
-    * and therefore stateless, so it runs unchanged on a stream. Each
-    * per-subspace distance array materializes once in its own
-    * projection (inlining it into both array_position and array_min
-    * would double the K×subdim arithmetic per row). */
+    * and therefore stateless, so it runs unchanged on a stream. */
   def ivfPqEncode(vecs: DataFrame, coarse: Seq[Seq[Double]],
       cb: Seq[Seq[Seq[Double]]], sub: Int,
       rot: Option[Seq[Seq[Double]]] = None): DataFrame = {
-    val m = cb.length
-    val coarseLit = typedlit(coarse)
-    def subDist(vCol: Column, mi: Int) = lutCol(vCol, cb, sub, mi)
-    val rawRes = zip_with(col("v"), element_at(coarseLit, col("list_id") + 1),
+    val rawRes = zip_with(col("v"), element_at(typedlit(coarse), col("list_id") + 1),
       (x, y) => x - y)
-    val assigned = vecs
-      .withColumn("cd", transform(coarseLit, c => sqd(col("v"), c)))
-      .withColumn("list_id", (array_position(col("cd"), array_min(col("cd"))) - 1).cast("int"))
-      .drop("cd")
-      // OPQ seam: rotate the residual BEFORE the subspace split — coarse
-      // routing stays on raw vectors, so scan fraction is untouched
+    // OPQ seam: rotate the residual BEFORE the subspace split — coarse
+    // routing stays on raw vectors, so scan fraction is untouched
+    val assigned = withNearest(vecs, col("v"), coarse, "list_id")
       .withColumn("res", rot.fold(rawRes)(r => rotateCol(rawRes, r)))
-    (0 until m).foldLeft(assigned) { (df, mi) =>
-        df.withColumn(s"d$mi", subDist(col("res"), mi))
-          .withColumn(s"c$mi",
-            (array_position(col(s"d$mi"), array_min(col(s"d$mi"))) - 1).cast("int"))
-          .drop(s"d$mi")
-      }
-      .drop("res")
+    encode(assigned, col("res"), cb, sub).drop("res")
   }
 }

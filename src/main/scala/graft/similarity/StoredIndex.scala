@@ -1,7 +1,6 @@
 package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Serving-side search over a STORED IVF-PQ codes table — the layout
@@ -22,15 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object StoredIndex {
 
-  private def sqdist(a: Array[Double], b: Seq[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-    s
-  }
-
   /** The request's nprobe nearest coarse cells (ties by list id). */
   def probeLists(qv: Array[Double], coarse: Seq[Seq[Double]], nprobe: Int): Seq[Int] =
-    coarse.indices.sortBy(l => (sqdist(qv, coarse(l)), l)).take(nprobe)
+    coarse.indices.sortBy(l => (Pq.sqdist(qv, coarse(l).toArray), l)).take(nprobe)
 
   /** Per-(request, probed list) ADC lookup tables from the QUERY residual
     * w.r.t. THAT list's centroid — the residual detail that distinguishes
@@ -42,50 +35,28 @@ object StoredIndex {
     val raw = Array.tabulate(qv.length)(i => qv(i) - c(i))
     // OPQ seam: the query residual rotates exactly like the stored codes'
     // residuals did at encode time (Pq.ivfPqEncode's rot parameter)
-    val res = rot.fold(raw)(r => graft.similarity.Pq.rotateVec(raw, r))
-    cb.indices.map { m =>
-      val rs = res.slice(m * sub, (m + 1) * sub)
-      cb(m).map(e => sqdist(rs, e))
-    }
+    Pq.luts(rot.fold(raw)(r => Pq.rotateVec(raw, r)), cb, sub)
   }
 
-  /** One serving request: partition-pruned scan of the stored codes →
-    * ADC against the broadcast LUTs → `depth`-deep shortlist
-    * (qid, cid). Exact rerank is the caller's step — it needs the raw
-    * vectors, which live outside the codes table. */
+  /** One serving request: [[serveBatch]] of one. */
   def serve(spark: SparkSession, codesDir: String, qid: Long,
       qv: Array[Double], coarse: Seq[Seq[Double]], cb: Seq[Seq[Seq[Double]]],
       sub: Int, nprobe: Int, depth: Int,
-      rot: Option[Seq[Seq[Double]]] = None): DataFrame = {
-    import spark.implicits._
-    val lists = probeLists(qv, coarse, nprobe)
-    val lutDf = lists.map(l => (qid, l, luts(qv, l, coarse, cb, sub, rot)))
-      .toDF("qid", "list_id", "luts")
-    // literal IN over the partition column → PartitionFilters: only the
-    // probed lists' directories are ever read; the schema-pinned read
-    // (KnnGraph.openStore) skips the per-request footer-inference job —
-    // a serving node knows its index's schema (r18, guide §1.5/§6)
-    val pruned = KnnGraph.openStore(spark, codesDir).rel
-      .filter($"list_id".isin(lists: _*))
-    val adc = cb.indices.map(mi =>
-      element_at(element_at($"luts", mi + 1), col(s"c$mi") + 1)).reduce(_ + _)
-    val w = Window.partitionBy($"qid").orderBy($"adc".asc, $"vec_id")
-    broadcast(lutDf).join(pruned, Seq("list_id"))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("adc", adc)
-      .withColumn("srank", row_number().over(w))
-      .filter($"srank" <= depth)
-      .select($"qid", $"vec_id".as("cid"))
-  }
+      rot: Option[Seq[Seq[Double]]] = None): DataFrame =
+    serveBatch(spark, codesDir, Seq(qid -> qv), coarse, cb, sub, nprobe,
+      depth, rot)
 
-  /** Batched serving — N requests in ONE job: the per-request [[serve]]
-    * shape pays a Spark job (scheduling + listing) per query, which
-    * dominates when requests are small; production ANN serving batches.
-    * All requests' LUT rows go into one broadcast frame keyed by
+  /** Batched serving — N requests in ONE job: partition-pruned scan of
+    * the stored codes → ADC against the broadcast LUTs → per request a
+    * `depth`-deep shortlist (qid, cid). Exact rerank is the caller's
+    * step — it needs the raw vectors, which live outside the codes
+    * table. A Spark job per query (scheduling + listing) dominates when
+    * requests are small, so production ANN serving batches: all
+    * requests' LUT rows go into one broadcast frame keyed by
     * (qid, list_id), the codes scan prunes to the UNION of probed lists
     * (still `Σ nprobe`-bounded, each request's ADC join still touches
     * only its own lists via the equi-join key), and one window ranks per
-    * qid. Same arithmetic as [[serve]] request for request. */
+    * qid. */
   def serveBatch(spark: SparkSession, codesDir: String,
       reqs: Seq[(Long, Array[Double])], coarse: Seq[Seq[Double]],
       cb: Seq[Seq[Seq[Double]]], sub: Int, nprobe: Int, depth: Int,
@@ -97,16 +68,14 @@ object StoredIndex {
     }
     val lutDf = lutRows.toDF("qid", "list_id", "luts")
     val allLists = lutRows.map(_._2).distinct.sorted
+    // literal IN over the partition column → PartitionFilters: only the
+    // probed lists' directories are ever read; the schema-pinned read
+    // (KnnGraph.openStore) skips the per-request footer-inference job —
+    // a serving node knows its index's schema (r18, guide §1.5/§6)
     val pruned = KnnGraph.openStore(spark, codesDir).rel
       .filter($"list_id".isin(allLists: _*))
-    val adc = cb.indices.map(mi =>
-      element_at(element_at($"luts", mi + 1), col(s"c$mi") + 1)).reduce(_ + _)
-    val w = Window.partitionBy($"qid").orderBy($"adc".asc, $"vec_id")
-    broadcast(lutDf).join(pruned, Seq("list_id"))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("adc", adc)
-      .withColumn("srank", row_number().over(w))
-      .filter($"srank" <= depth)
+    Pq.adcTop(broadcast(lutDf).join(pruned, Seq("list_id"))
+        .filter($"vec_id" =!= $"qid"), cb.length, "vec_id", depth)
       .select($"qid", $"vec_id".as("cid"))
   }
 

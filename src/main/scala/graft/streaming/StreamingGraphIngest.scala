@@ -15,12 +15,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * servable) as soon as the batch commits, and the search-side
   * partition pruning is untouched.
   *
-  * Contract: `corpus` must resolve vectors for every graph node and
-  * every arrival (in production it is a view over the corpus table the
-  * ingest also maintains — wq01's upsert). Entry points for the insert
-  * search come from the vector store's ≤slots-row `_graft_entries`
-  * sidecar (store-only arm) or one partition-pruned adjacency bucket
-  * (corpus arm) — bounded, index-sized metadata, never the corpus.
+  * Contract: the [[KnnGraph.writeVectors]] store at `vecPath` holds a
+  * vector for every graph node, and each batch appends its arrivals'
+  * vectors there. Entry points for the insert search come from that
+  * store's ≤slots-row `_graft_entries` sidecar — bounded, index-sized
+  * metadata, never the corpus.
   *
   * Why this shape survives 100 TB: an insert touches O(beam·k·steps)
   * vectors + ≤ beam buckets of the k·n edge list — corpus-size-free,
@@ -33,26 +32,24 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object StreamingGraphIngest {
 
   /** Start the insertion stream: (vec_id, v: array<double>) arrivals →
-    * mutual k-NN edges appended under `storePath`; when `vecPath` is
-    * set, the arrivals' vectors also append into the [[KnnGraph
-    * .writeVectors]] store, so store-only serving
-    * ([[KnnGraph.serveFromStores]]) can answer them with no corpus
-    * frame anywhere. When `codes` = (codesPath, codebook) is set, the
-    * arrivals' flat-PQ codes append into the [[KnnGraph.writeCodes]]
-    * sidecar too — required if the graph is served through the
-    * quantized head ([[KnnGraph.serveFromStoresPq]]), whose ADC rank
-    * inner-joins that store: without the append, inserted nodes would
-    * silently never be kept or answered by it. */
-  def start(newVecs: DataFrame, storePath: String, corpus: DataFrame,
+    * mutual k-NN edges appended under `storePath`, and the arrivals'
+    * vectors appended into the [[KnnGraph.writeVectors]] store at
+    * `vecPath`, so store-only serving ([[KnnGraph.serveFromStores]])
+    * can answer them with no corpus frame anywhere. When `codes` =
+    * (codesPath, codebook) is set, the arrivals' flat-PQ codes append
+    * into the [[KnnGraph.writeCodes]] sidecar too — required if the
+    * graph is served through the quantized head
+    * ([[KnnGraph.serveFromStoresPq]]), whose ADC rank inner-joins that
+    * store: without the append, inserted nodes would silently never be
+    * kept or answered by it. */
+  def start(newVecs: DataFrame, storePath: String, vecPath: String,
       k: Int, beamRounds: Int, checkpointDir: String,
       trigger: Option[Trigger] = None,
-      vecPath: Option[String] = None,
       codes: Option[(String, Seq[Seq[Seq[Double]]])] = None): StreamingQuery = {
     val writer = newVecs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        insertBatch(batch.toDF(), storePath, corpus, k, beamRounds, vecPath,
-          codes)
+        insertBatch(batch.toDF(), storePath, vecPath, k, beamRounds, codes)
       }
     trigger.fold(writer)(writer.trigger).start()
   }
@@ -62,63 +59,36 @@ object StreamingGraphIngest {
     * the pre-batch graph (they link to each other only via later
     * arrivals or the next rebuild), exactly like a bulk HNSW insert at
     * one sequence point. */
-  def insertBatch(batch: DataFrame, storePath: String, corpus: DataFrame,
-      k: Int, beamRounds: Int, vecPath: Option[String] = None,
+  def insertBatch(batch: DataFrame, storePath: String, vecPath: String,
+      k: Int, beamRounds: Int,
       codes: Option[(String, Seq[Seq[Seq[Double]]])] = None): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     if (batch.isEmpty) return
-    /** The first NON-EMPTY bucket of `path`, as its pruned frame —
-      * bucket dirs can drain (eraseStored removes them explicitly), so
-      * hard-wiring bucket 0 would silently lose arrivals. An empty
-      * store is a loud error, never a dropped batch. */
-    def sampleBucket(path: String): DataFrame = {
-      val store = KnnGraph.openStore(spark, path)
-      (0 until store.buckets).iterator
-        .map(b => store.rel.filter($"bucket" === b))
-        .find(!_.isEmpty)
-        .getOrElse(throw new IllegalStateException(
-          s"no entry candidates: every bucket of $path is empty"))
-    }
-    val nbrPairs: Seq[(Long, Long)] = vecPath match {
-      case Some(vp) =>
-        // STORE-ONLY insert: a micro-batch is coordinator-sized by the
-        // trigger contract, and an HNSW insert IS a coordinator-driven
-        // search — serve through the COORDINATED head (two pruned
-        // point-reads per beam round for the whole batch), warm-started
-        // at each arrival's best node among the store's ENTRY
-        // REPRESENTATIVES ([[KnnGraph.writeHashEntries]] — the ≤slots-row
-        // sidecar every writeVectors store carries, erase-aware). The
-        // sidecar is the insert path's ONLY driver-resident state
-        // besides the batch itself: entry selection never collects a
-        // corpus-sized bucket — the clustered arm's zero-corpus-I/O
-        // entry contract, on the hash layout.
-        val arrivals = batch.select($"vec_id", $"v")
-          .as[(Long, Seq[Double])].collect()
-          .map { case (id, v) => id -> v.toArray }.toSeq
-        // a store written before the sidecar existed (or populated by
-        // raw bucket appends) backfills it here, ONCE — one
-        // executor-side pass, never a driver collect; a
-        // present-but-drained sidecar still fails loudly inside
-        // serveCoordinated's entry resolution (that state is an erasure
-        // decision, not a missing artifact). Entry selection is the
-        // coordinated head's own default: best sidecar representative
-        // per arrival by (cosine, -node).
-        KnnGraph.ensureHashEntries(spark, vp)
-        KnnGraph.serveCoordinated(spark, storePath, vp, arrivals, k,
-          beamRounds)
-      case None =>
-        // no vector store: the distributed loop scores against the
-        // corpus frame, entering from one pruned adjacency bucket
-        val entryCands = corpus.join(
-          sampleBucket(storePath).select($"src".as("vec_id")).distinct(),
-          Seq("vec_id"), "left_semi")
-        val queries = batch.select($"vec_id".as("qid"), $"v")
-        KnnGraph.serveStored(spark, storePath, corpus, queries, k,
-          beamRounds,
-          Some(KnnGraph.sampledEntries(entryCands, queries, stride = 1)))
-          .as[(Long, Long)].collect().toSeq
-    }
+    // STORE-ONLY insert: a micro-batch is coordinator-sized by the
+    // trigger contract, and an HNSW insert IS a coordinator-driven
+    // search — serve through the COORDINATED head (two pruned
+    // point-reads per beam round for the whole batch), warm-started
+    // at each arrival's best node among the store's ENTRY
+    // REPRESENTATIVES ([[KnnGraph.writeHashEntries]] — the ≤slots-row
+    // sidecar every writeVectors store carries, erase-aware). The
+    // sidecar is the insert path's ONLY driver-resident state
+    // besides the batch itself: entry selection never collects a
+    // corpus-sized bucket.
+    val arrivals = batch.select($"vec_id", $"v")
+      .as[(Long, Seq[Double])].collect()
+      .map { case (id, v) => id -> v.toArray }.toSeq
+    // a store written before the sidecar existed (or populated by
+    // raw bucket appends) backfills it here, ONCE — one
+    // executor-side pass, never a driver collect; a
+    // present-but-drained sidecar still fails loudly inside
+    // serveCoordinated's entry resolution (that state is an erasure
+    // decision, not a missing artifact). Entry selection is the
+    // coordinated head's own default: best sidecar representative
+    // per arrival by (cosine, -node).
+    KnnGraph.ensureHashEntries(spark, vecPath)
+    val nbrPairs = KnnGraph.serveCoordinated(spark, storePath, vecPath,
+      arrivals, k, beamRounds)
     // publish AFTER the searches, EDGES FIRST: a crash between the two
     // appends then leaves edges pointing at a vector-less node — which
     // every reader already treats as absent (scoring inner-joins the
@@ -132,7 +102,7 @@ object StreamingGraphIngest {
     // bucket count (a modulus mismatch would silently mis-prune).
     appendHashed(nbrPairs.toDF("src", "nbr")
       .union(nbrPairs.map(_.swap).toDF("src", "nbr")), "src", storePath)
-    vecPath.foreach(appendHashed(batch.select($"vec_id", $"v"), "vec_id", _))
+    appendHashed(batch.select($"vec_id", $"v"), "vec_id", vecPath)
     // the PQ codes sidecar appends LAST: a crash window leaves a node
     // with a vector but no code — invisible to the quantized head's
     // ADC rank (recall-only degradation the next refine/rebuild

@@ -1,9 +1,10 @@
 package graft.similarity
 
 import graft.TestSpark
+import graft.util.SparkOrdering
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[KnnGraph.bestFirst]] — the driver-side twin of Spark's
+/** [[SparkOrdering.bestFirst]] — the driver-side twin of Spark's
   * `ORDER BY cos DESC, node ASC` that [[KnnGraph.serveCoordinated]]'s
   * beam ([[KnnGraph.keepTopK]]) and default entry pick (`min`) use.
   * Java's `Double.compare` orders -0.0 below 0.0; Spark SQL treats them
@@ -25,9 +26,9 @@ class BestFirstOrderSpec extends AnyFunSuite {
   }
 
   test("the entry pick breaks a ±0.0 tie by node, not by the sign") {
-    assert(Seq((7L, 0.0), (3L, -0.0)).min(KnnGraph.bestFirst)._1 == 3L)
-    assert(Seq((3L, -0.0), (7L, 0.0)).min(KnnGraph.bestFirst)._1 == 3L)
-    assert(scored.min(KnnGraph.bestFirst)._1 == 2L)
-    assert(scored.filterNot(_._2.isNaN).min(KnnGraph.bestFirst)._1 == 6L)
+    assert(Seq((7L, 0.0), (3L, -0.0)).min(SparkOrdering.bestFirst)._1 == 3L)
+    assert(Seq((3L, -0.0), (7L, 0.0)).min(SparkOrdering.bestFirst)._1 == 3L)
+    assert(scored.min(SparkOrdering.bestFirst)._1 == 2L)
+    assert(scored.filterNot(_._2.isNaN).min(SparkOrdering.bestFirst)._1 == 6L)
   }
 }

@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.TestSpark
+import graft.util.SparkOrdering
 import graft.similarity.VectorOps.cosine
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -101,7 +102,7 @@ class GraphPruneSpec extends AnyFunSuite {
     val pruned = edges(KnnGraph.robustPrune(vecs, cand, R, Alpha))
     val vLocal = vecs.as[(Long, Seq[Double])].collect()
       .map { case (id, v) => id -> v.toArray }.toMap
-    // the reference replay compares with nanSafeCompare — Spark SQL's
+    // the reference replay compares with SparkOrdering.compare — Spark SQL's
     // double semantics (NaN greatest, -0.0 == 0.0), i.e. the ordering
     // and `<=` the former relational rounds (and the DuckDB oracle's
     // SQL replay) use — NOT Java's primitive comparisons (r17 advice)
@@ -110,7 +111,7 @@ class GraphPruneSpec extends AnyFunSuite {
       .groupBy(_._1).toSeq.flatMap { case (src, rows) =>
         var remaining = rows.map { case (_, nbr, cos) => (nbr, cos) }
           .sortWith { case ((na, ca), (nb, cb)) =>
-            val c = KnnGraph.nanSafeCompare(cb, ca)
+            val c = SparkOrdering.compare(cb, ca)
             c < 0 || (c == 0 && na < nb)
           }.toList
         val kept = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -118,7 +119,7 @@ class GraphPruneSpec extends AnyFunSuite {
           val (pick, _) = remaining.head
           kept += pick
           remaining = remaining.tail.filterNot { case (c, cos) =>
-            KnnGraph.nanSafeCompare(
+            SparkOrdering.compare(
               Alpha * (1.0 - KnnGraph.cosineLocal(vLocal(pick), vLocal(c))),
               1.0 - cos) <= 0
           }

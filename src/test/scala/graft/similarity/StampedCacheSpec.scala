@@ -156,8 +156,9 @@ class StampedCacheSpec extends AnyFunSuite {
     val victims = warm(root).map(_._2).distinct.take(2)
     KnnGraph.eraseStored(spark, s"$root/g", victims, vecPath = Some(s"$root/vec"))
     val (after, jobs) = jobsOf(serve(root))
-    // new versions: the cold point reads, after each store's schema inference
-    assert(jobs >= 1 + 2 * Rounds, "the erased stores were not served as new versions")
+    // new versions: exactly the cold point reads — each store's schema
+    // comes from its marker, not from an inference job
+    assert(jobs == 1 + 2 * Rounds, "the erased stores were not served as new versions")
     assert(after.nonEmpty && after.forall { case (_, n) => !victims.contains(n) },
       s"a victim of $victims answered")
     assert(after == coldServe(root))
@@ -183,10 +184,37 @@ class StampedCacheSpec extends AnyFunSuite {
     warm(root)
     val fresh = vec(20).map(_ + 0.0004)
     StreamingGraphIngest.insertBatch(Seq((64L, fresh.toSeq)).toDF("vec_id", "v"),
-      s"$root/g", vecs(), K, Rounds, vecPath = Some(s"$root/vec"))
+      s"$root/g", s"$root/vec", K, Rounds)
     val found = KnnGraph.serveCoordinated(spark, s"$root/g", s"$root/vec",
       Seq(2000L -> fresh), K, Rounds, entries = Some(Map(2000L -> 16L)))
     assert(found.map(_._2).contains(64L), s"the inserted node was not found: $found")
+  }
+
+  test("recorded schema: every store writer records what inference reads") {
+    import spark.implicits._
+    val root = tmp("graft-stamp-recorded")
+    val ring = (0 until 64).map(i => (i.toLong, ((i + 1) % 64).toLong)).toDF("src", "nbr")
+    val cents = Seq(Seq.fill(4)(0.0), Seq.fill(4)(1.0))
+    KnnGraph.writeStore(ring, s"$root/hash", 4)
+    KnnGraph.writeVectors(vecs(), s"$root/vec", 4)
+    KnnGraph.writeCodes(Pq.pqEncode(vecs(), Pq.trainSubspaces(
+      vecs().as[(Long, Seq[Double])].collect().map(_._2.toArray).toIndexedSeq,
+      2, 2, 4), 2), s"$root/codes", 4)
+    writeClustered(s"$root/clus", cents)
+    KnnGraph.writeEntries(vecs(), s"$root/clus", perCell = 2)
+    // the incremental reprune's two writers: hard links only (no churn)
+    // and the repaired-cell append
+    KnnGraph.repruneStoredIncremental(spark, s"$root/clus", s"$root/vec",
+      s"$root/linked", 4, 1.2, K, 2, Seq.empty, Seq.empty, None)
+    KnnGraph.repruneStoredIncremental(spark, s"$root/clus", s"$root/vec",
+      s"$root/repaired", 4, 1.2, K, 2, Seq(3L, 40L), Seq.empty, None)
+    for (store <- Seq("hash", "vec", "codes", "clus", "linked", "repaired")) {
+      val p = s"$root/$store"
+      val (recorded, jobs) = jobsOf(KnnGraph.openStore(spark, p).rel.schema)
+      assert(jobs == 0, s"$store: the schema was inferred, not read from the marker")
+      assert(recorded == spark.read.parquet(p).schema,
+        s"$store: recorded ${recorded.treeString} != inferred")
+    }
   }
 
   /** The largest bucket's on-disk bytes (checksum side files aside). */

@@ -142,9 +142,8 @@ class StoredPqServeSpec extends AnyFunSuite {
     // an insert with the codes option appends the arrival's code row
     // into its arithmetic bucket — the PQ head's serving contract
     graft.streaming.StreamingGraphIngest.insertBatch(
-      Seq((newId, newVec)).toDF("vec_id", "v"), s"$root/g", vecs, K,
-      beamRounds = 3, vecPath = Some(s"$root/vec"),
-      codes = Some((s"$root/codes", cb)))
+      Seq((newId, newVec)).toDF("vec_id", "v"), s"$root/g", s"$root/vec", K,
+      beamRounds = 3, codes = Some((s"$root/codes", cb)))
     val codeRow = spark.read.parquet(s"$root/codes")
       .filter($"vec_id" === newId)
     assert(codeRow.count() == 1, "insert must append exactly one code row")

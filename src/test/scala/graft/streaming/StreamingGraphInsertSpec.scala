@@ -36,9 +36,8 @@ class StreamingGraphInsertSpec extends AnyFunSuite {
     val newVecs = all.filter($"vec_id".isin(newIds: _*))
       .as[(Long, Seq[Double])].collect().toMap
     val q = StreamingGraphIngest.start(
-      stream.toDS().toDF("vec_id", "v"), s"$root/v1", all, K,
-      beamRounds = 3, checkpointDir = s"$root/ckpt",
-      vecPath = Some(s"$root/vec"))
+      stream.toDS().toDF("vec_id", "v"), s"$root/v1", s"$root/vec", K,
+      beamRounds = 3, checkpointDir = s"$root/ckpt")
     try {
       stream.addData(newIds.take(2).map(id => (id, newVecs(id))))
       q.processAllAvailable()
@@ -153,8 +152,8 @@ class StreamingGraphInsertSpec extends AnyFunSuite {
     val arrival = vecs.orderBy($"vec_id".desc).limit(1)
       .select(($"vec_id" + 1000L).as("vec_id"), $"v")
     val newId = arrival.select($"vec_id").as[Long].head()
-    StreamingGraphIngest.insertBatch(arrival, s"$root/g", vecs, K,
-      beamRounds = 3, vecPath = Some(s"$root/vec"))
+    StreamingGraphIngest.insertBatch(arrival, s"$root/g", s"$root/vec", K,
+      beamRounds = 3)
     assert(spark.read.parquet(s"$root/g").filter($"src" === newId).count() == K)
 
     // erasing a victim that IS an entry representative drops it from
@@ -174,8 +173,8 @@ class StreamingGraphInsertSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(s"$root/vec/_graft_entries")
     val boom = intercept[IllegalArgumentException](
       StreamingGraphIngest.insertBatch(arrival
-        .select(($"vec_id" + 1L).as("vec_id"), $"v"), s"$root/g", vecs, K,
-        beamRounds = 3, vecPath = Some(s"$root/vec")))
+        .select(($"vec_id" + 1L).as("vec_id"), $"v"), s"$root/g", s"$root/vec", K,
+        beamRounds = 3))
     assert(boom.getMessage.contains("writeHashEntries"))
     vecs.unpersist()
   }
