@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *
   * What is hashed and why: the assigned CLUSTER (argmin of squared L2
   * in scaled space, first-index tie-break — the arithmetic
-  * [[graft.similarity.KnnGraph.clusterOf]] and Spark's own
+  * [[graft.similarity.Pq.nearestCol]] and Spark's own
   * KMeansModel.predict use) and the squared distance to that centroid.
   * Every operation is exactly-rounded IEEE (subtract, divide, multiply,
   * left-associated adds, compares) — no transcendental anywhere, so

@@ -26,16 +26,19 @@ object TopKPerGroup {
   /** K-bounded buffer of (id, score) pairs in
     * [[graft.util.SparkOrdering.bestFirst]] order — score DESC under
     * Spark's double ordering (NaN first, -0.0 tied with 0.0), then id
-    * ASC — exactly the `row_number` window it replaces. With `distinct`
-    * it keeps each id once; that requires every occurrence of an id
-    * within a group to carry the same score. */
-  final class TopK(k: Int, distinct: Boolean = false)
+    * ASC — exactly the `row_number` window it replaces. Each id is kept
+    * once, so every occurrence of an id within a group must carry the
+    * same score: then the result is the top-k of the group's distinct
+    * ids (an id in it is beaten by < k distinct ids in the group, hence
+    * in every partial buffer). Input with one row per (group, id) meets
+    * this trivially. */
+  final class TopK(k: Int)
       extends Aggregator[(Long, Double), Seq[(Long, Double)], Seq[(Long, Double)]] {
     private def trim(s: Seq[(Long, Double)]): Seq[(Long, Double)] =
-      (if (distinct) s.distinctBy(_._1) else s).sorted(bestFirst).take(k)
+      s.distinctBy(_._1).sorted(bestFirst).take(k)
     override def zero: Seq[(Long, Double)] = Seq.empty
     override def reduce(b: Seq[(Long, Double)], a: (Long, Double)): Seq[(Long, Double)] =
-      if (distinct && b.exists(_._1 == a._1)) b
+      if (b.exists(_._1 == a._1)) b
       else if (b.size < k || bestFirst.lt(a, b.last)) trim(b :+ a)
       else b
     override def merge(x: Seq[(Long, Double)], y: Seq[(Long, Double)]): Seq[(Long, Double)] =

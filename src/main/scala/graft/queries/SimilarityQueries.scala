@@ -2935,7 +2935,7 @@ object SimilarityQueries {
         .join(trace(r - 1)._2, Seq("qid", "node"), "left_anti")
         .join(vecs.select($"vec_id".as("node"), $"v"), Seq("node"))
         .withColumn("bh", pmod($"node", lit(nbHash.toLong)).cast("int"))
-        .withColumn("bc", KnnGraph.clusterOf($"v", cents))
+        .withColumn("bc", Pq.nearestCol($"v", cents))
         .localCheckpoint(true)
       val n = frontier.select($"node").distinct().count()
       // batch-union footprints (what one driver-batched scan prunes to)

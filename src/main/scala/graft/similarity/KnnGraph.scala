@@ -711,7 +711,7 @@ object KnnGraph {
     * dominates its old one elementwise — per-node neighbor quality is
     * monotone non-decreasing (KnnGraphRefineSpec pins it).
     *
-    * The keep runs as [[TopKPerGroup.TopK]] with `distinct` — one
+    * The keep runs as [[TopKPerGroup.TopK]] — one
     * mergeable aggregation, ordered by [[SparkOrdering.bestFirst]], with
     * MAP-SIDE partial top-k (guide §2.3 "aggregate before you
     * shuffle") replacing the former candidate-wide `.distinct()` + a
@@ -730,7 +730,7 @@ object KnnGraph {
   private def tighten(vecs: DataFrame, e: DataFrame, k: Int): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val agg = new TopKPerGroup.TopK(k, distinct = true)
+    val agg = new TopKPerGroup.TopK(k)
     scoreEdges(vecs, candidatePairsDup(e))
       .select($"src".as[Long],
         struct($"nbr", $"cos").as[(Long, Double)])
@@ -947,7 +947,7 @@ object KnnGraph {
     *
     *   S = members of churn-touched cells (arrival cells read from the
     *       STORE's `bucket` partition column — the assignment already
-    *       exists as the layout, so no corpus-wide `clusterOf`
+    *       exists as the layout, so no corpus-wide `Pq.nearestCol`
     *       recompute (r16 verdict #3); erased victims' cells via
     *       `extraCells` — a victim has no rows left to read)
     *     ∪ the 1-hop graph fringe of the churned ids still in the
@@ -995,7 +995,7 @@ object KnnGraph {
     val nChurn = churnB.count()
     // cells touched by churn, READ FROM THE STORE's bucket partition
     // column (the writer routed every node's own edges there by
-    // centroid — recomputing clusterOf over the full vector store was
+    // centroid — recomputing Pq.nearestCol over the full vector store was
     // the r16 verdict-#3 corpus-shaped stage). Erased victims' cells
     // arrive via extraCells (recorded by the maintainer at erase time,
     // when the rows still existed); a churned id with a vector but no
@@ -1013,7 +1013,7 @@ object KnnGraph {
     val unwired = (if (nChurn > 0)
         vecs.join(churnB, Seq("vec_id"), "left_semi")
           .join(stored.select($"src".as("vec_id")), Seq("vec_id"), "left_anti")
-          .select($"vec_id", clusterOf($"v", cents).as("c"))
+          .select($"vec_id", Pq.nearestCol($"v", cents).as("c"))
       else spark.emptyDataset[(Long, Int)].toDF("vec_id", "c"))
       .localCheckpoint(true)
     val unwiredCells = unwired.select($"c").distinct().as[Int].collect().toSeq
@@ -1075,7 +1075,7 @@ object KnnGraph {
       .join(needed, Seq("vec_id"), "left_semi").distinct()
     val assignMissing = vecs.join(needed, Seq("vec_id"), "left_semi")
       .join(assignStored.select($"vec_id"), Seq("vec_id"), "left_anti")
-      .select($"vec_id", clusterOf($"v", cents).as("c"))
+      .select($"vec_id", Pq.nearestCol($"v", cents).as("c"))
     val assign = assignStored.union(assignMissing).localCheckpoint(true)
     val newRows = sym
       .join(assign.select($"vec_id".as("nbr"), $"c".as("nbr_bucket")), Seq("nbr"))
@@ -1486,7 +1486,11 @@ object KnnGraph {
     * so [[openStore]] pins a new version's relation without a
     * footer-inference job (an append or erase never changes the
     * schema). StampedCacheSpec checks it against inference for every
-    * writer. */
+    * writer. The format change is one-way: this build reads a marker
+    * with or without the schema line, but a build that parses the
+    * marker as a single integer fails on one written here, so a store
+    * version (a kept rollback version too) cannot be handed back to
+    * such a build. */
   private def writeBucketMeta(path: String, n: Int,
       written: DataFrame): Unit = {
     import org.apache.spark.sql.types._
@@ -1935,7 +1939,7 @@ object KnnGraph {
     * node→bucket dictionary and no extra round trip — only the ENTRY
     * nodes need their bucket computed, and entries always come with
     * their vectors (centroid assign is one broadcast argmin,
-    * [[clusterOf]]). Centroids persist in a `_graft_centroids` sidecar
+    * [[Pq.nearestCol]]). Centroids persist in a `_graft_centroids` sidecar
     * next to the bucket-count marker; answers are provably identical
     * to the hash store's ([[StoredGraphSpec]]) — the layout changes
     * WHERE edges live, never which edges exist.
@@ -1947,7 +1951,7 @@ object KnnGraph {
       centroids: Seq[Seq[Double]]): Unit = {
     import graph.sparkSession.implicits._
     val assign = vecs.select($"vec_id",
-      clusterOf($"v", centroids).as("cb"))
+      Pq.nearestCol($"v", centroids).as("cb"))
     val rows = undirected(graph)
       .join(assign.select($"vec_id".as("nbr"), $"cb".as("nbr_bucket")), Seq("nbr"))
       .join(assign.select($"vec_id".as("src"), $"cb".as("bucket")), Seq("src"))
@@ -1959,13 +1963,6 @@ object KnnGraph {
       .toDF("cid", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_graft_centroids")
   }
-
-  /** Nearest-centroid id of vector column `v` — the storage-routing
-    * twin of IVF's coarse assign (first-index-wins tie-break, the
-    * arithmetic [[graft.similarity.Pq.ivfPqEncode]] uses). */
-  def clusterOf(v: org.apache.spark.sql.Column,
-      centroids: Seq[Seq[Double]]): org.apache.spark.sql.Column =
-    Pq.nearestCol(v, centroids)
 
   /** JVM-wide centroid sidecar cache ([[graft.util.StampedCache]]'s
     * rule, stamped by the sidecar's listing — every write mints fresh
@@ -1996,7 +1993,7 @@ object KnnGraph {
     * neighbors re-linked pairwise, untouched buckets byte-identical)
     * on the [[writeStoreClustered]] layout. The carried buckets make
     * the erase request-sized WITHOUT arithmetic routing: the victims'
-    * own buckets come from [[clusterOf]] over their vectors (read from
+    * own buckets come from [[Pq.nearestCol]] over their vectors (read from
     * the vector store BEFORE it is erased — pass the same `vecPath`
     * the serving loop uses), and every dangling edge's location is
     * named by the victim's own rows (`nbr` + `nbr_bucket` — the
@@ -2024,7 +2021,7 @@ object KnnGraph {
         "clustered erase routes by vector; erase the graph before the " +
         "vector store (or re-insert the vectors first)")
     val vicBuckets = vicFrame
-      .select(clusterOf($"v", cents).as("b")).distinct()
+      .select(Pq.nearestCol($"v", cents).as("b")).distinct()
       .as[Int].collect().toSeq
     val victimSet = victims.toSet
     // the victims' own rows: one pruned read; each row carries the
@@ -2170,8 +2167,14 @@ object KnnGraph {
   /** THE entry rule [[plannedEntries]] and [[storedEntries]] share:
     * route each query to its `probes` nearest centroids AMONG THE
     * `present` CELLS (an empty cell has no member to enter at; ties →
-    * smaller index, [[clusterOf]]'s rule at P=1) and enter at every
-    * `members` row (cid, node, carried columns) of those cells. */
+    * smaller index, [[Pq.nearestCol]]'s rule at P=1; [[Pq.nearestCols]]
+    * deeper) and enter at every `members` row (cid, node, carried
+    * columns) of those cells. Why P > 1: on corpora whose neighborhoods
+    * are noise-like (the r17 family-free battery), a query's true
+    * neighbors spread over several near-tied cells, and a single-cell
+    * start caps recall no matter how wide the beam is — entry diversity
+    * is the lever orthogonal to L and R, at P× the sidecar rows per
+    * query and ≤ P first-round buckets. */
   private def enterCells(queries: DataFrame, present: Seq[Int],
       cents: Seq[Seq[Double]], members: DataFrame, probes: Int): DataFrame = {
     import queries.sparkSession.implicits._
@@ -2179,14 +2182,14 @@ object KnnGraph {
     val out = ("qid" +: members.columns.filterNot(_ == "cid")).map(col)
     if (probes <= 1)
       queries
-        .select($"qid", clusterOf($"v", presentCents).as("pidx"))
+        .select($"qid", Pq.nearestCol($"v", presentCents).as("pidx"))
         .withColumn("cid", element_at(typedlit(present), $"pidx" + 1))
         .join(broadcast(members), Seq("cid"))
         .select(out: _*)
     else
       queries
         .select($"qid",
-          posexplode(nearestCells($"v", presentCents, probes)))
+          posexplode(Pq.nearestCols($"v", presentCents, probes)))
         .withColumn("cid", element_at(typedlit(present), $"col" + 1))
         .join(broadcast(members), Seq("cid"))
         .select(out: _*)
@@ -2222,7 +2225,7 @@ object KnnGraph {
     // an empty sidecar (every cell entry erased before a writeEntries
     // refresh) must be a loud error: silently returning an empty entry
     // frame would answer every query with zero rows, and an empty
-    // `present` would make clusterOf yield a null pidx downstream
+    // `present` would make Pq.nearestCol yield a null pidx downstream
     require(present.nonEmpty,
       s"$path/_graft_entries is empty — rerun writeEntries before serving")
     enterCells(queries, present, cents, entries, probes)
@@ -2251,28 +2254,6 @@ object KnnGraph {
     require(listing.isDefined, s"$path has no _graft_entries sidecar — $hint")
     cache(dir.toString, graft.util.StampedCache.listingStamp(listing.get))(
       read(spark.read.parquet(dir.toString)))
-  }
-
-  /** IVF-style MULTI-PROBE routing: the indices (into `centroids`) of
-    * the `probes` nearest centroids, ascending by distance (ties →
-    * smaller index, matching [[clusterOf]]'s array_position rule at
-    * P=1). One distance array per row — the same arithmetic
-    * [[clusterOf]] evaluates, sliced deeper instead of recomputed.
-    * Why it exists: on corpora whose neighborhoods are noise-like
-    * (the r17 family-free battery), a query's true neighbors spread
-    * over several near-tied cells, and a single-cell entry start
-    * caps recall no matter how wide the walk's beam is — entry
-    * DIVERSITY is the lever orthogonal to L and R. Cost model: P×
-    * the sidecar rows per query and ≤P first-round buckets — still
-    * nothing corpus-sized. */
-  def nearestCells(v: org.apache.spark.sql.Column,
-      centroids: Seq[Seq[Double]], probes: Int): org.apache.spark.sql.Column = {
-    val d = transform(typedlit(centroids), Pq.sqd(v, _))
-    // rank by (distance, index): zip each distance with its index,
-    // sort the struct array (distance first), take the top-P indices
-    val idx = transform(d, (dist, i) => struct(dist.as("d"), i.as("i")))
-    slice(transform(array_sort(idx), s => s.getField("i")), 1,
-      math.min(probes, centroids.length))
   }
 
   /** The undirected closure of an edge frame: (src, nbr) both ways,
@@ -2552,7 +2533,7 @@ object KnnGraph {
     * beam round's cluster-bucket reads) row-group-sized at any corpus
     * size, clamped to [minCells, maxCells] (tiny fixtures need a floor
     * for the layout to mean anything; the cap bounds the broadcast
-    * centroid list, the codebook-training cost, and [[clusterOf]]'s
+    * centroid list, the codebook-training cost, and [[Pq.nearestCol]]'s
     * per-row argmin width). COVERAGE.md "Composed-store lifecycle at
     * 100×" records the composed store under this policy at x1 (44
     * cells) and x100 (256). */
@@ -2743,7 +2724,7 @@ object KnnGraph {
     * vectors, centroids, and entry points all come from the store.
     * Explicit entries are (qid, node) on a hash store; on a clustered
     * store they carry the node's vector `v` and are routed by
-    * [[clusterOf]] against the store's recorded centroids. `beamWidth`
+    * [[Pq.nearestCol]] against the store's recorded centroids. `beamWidth`
     * is DiskANN's search-list L applied to the EXACT walk — the
     * per-round keep that sets the pool's ceiling (the quantized head
     * has carried the same knob since r16). 0 = k, the historical
@@ -2893,7 +2874,7 @@ object KnnGraph {
       case (None, true) => storedEntries(spark, graphPath, queries, entryProbes)
       case (Some(e), false) => e
       case (Some(e), true) => e.select($"qid", $"node",
-        clusterOf($"v", centroidsOf(spark, graphPath)).as("node_bucket"))
+        Pq.nearestCol($"v", centroidsOf(spark, graphPath)).as("node_bucket"))
     }
     val pool = beamTrace(start, expand(graph, _),
       // checkpoint the candidate set ONCE: a keep evaluates its input

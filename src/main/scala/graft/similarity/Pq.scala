@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * This object is the ONE home of the quantization arithmetic, column
   * and driver side: squared distance ([[sqd]] / [[sqdist]]), the
   * first-index nearest-centroid argmin ([[nearestCol]], [[withNearest]]
-  * / [[nearest]]), the per-subspace encode fold, the query LUT fold
+  * / [[nearest]]) and its multi-probe depth ([[nearestCols]]), the
+  * per-subspace encode fold, the query LUT fold
   * ([[lutsCol]] / [[luts]]), the ADC sum ([[adcCol]]) and the ADC rank
   * ([[adcTop]], [[adcKeep]]). PqKernelSpec pins column ≡ driver bit for
   * bit and fails if another file under src/main writes the fold or the
@@ -89,9 +90,9 @@ object Pq {
   /** Squared distance as the left-associated zip_with/aggregate fold —
     * the ONE definition of the arithmetic every DuckDB oracle replays
     * with explicit j-ordered sums. Its consumers, all through
-    * [[dists]]: [[nearestCol]] and [[withNearest]] (IVF coarse routing
-    * in [[ivfPqEncode]], the stored layouts' cell routing
-    * [[KnnGraph.clusterOf]] and entry pick), the per-subspace encode
+    * [[dists]]: [[nearestCol]], [[nearestCols]] and [[withNearest]]
+    * (IVF coarse routing in [[ivfPqEncode]], the stored layouts' cell
+    * routing and entry pick in [[KnnGraph]]), the per-subspace encode
     * fold of [[pqEncode]] and [[ivfPqEncode]], and [[lutsCol]] (the
     * query LUTs of sq09, sq10, sq17, sq24 and
     * [[KnnGraph.serveFromStoresPq]]); directly, sq04/sq10's probe
@@ -115,6 +116,18 @@ object Pq {
     * rebuild the distance array; [[withNearest]] builds it once. */
   def nearestCol(v: Column, centroids: Seq[Seq[Double]]): Column =
     argmin(dists(v, centroids))
+
+  /** IVF-style multi-probe routing: the indices (into `centroids`) of
+    * `v`'s `probes` nearest centroids, ascending by (distance, index) —
+    * at `probes` = 1 exactly [[nearestCol]]'s pick, from the same one
+    * distance array sliced deeper. */
+  def nearestCols(v: Column, centroids: Seq[Seq[Double]], probes: Int): Column = {
+    // zip each distance with its index, sort the struct array (distance
+    // first), take the top-P indices
+    val idx = transform(dists(v, centroids), (d, i) => struct(d.as("d"), i.as("i")))
+    slice(transform(array_sort(idx), s => s.getField("i")), 1,
+      math.min(probes, centroids.length))
+  }
 
   /** `df` plus column `out`, [[nearestCol]] of `v` (and with `dist` set,
     * that nearest distance). The distance array materializes ONCE in

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.similarity.KnnGraph
+import graft.similarity.{KnnGraph, Pq}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -118,7 +118,7 @@ object StreamingGraphIngest {
   private def appendCodes(batch: DataFrame, codesPath: String,
       cb: Seq[Seq[Seq[Double]]]): Unit = {
     import batch.sparkSession.implicits._
-    appendHashed(graft.similarity.Pq
+    appendHashed(Pq
       .pqEncode(batch.select($"vec_id", $"v"), cb, cb.head.head.length),
       "vec_id", codesPath)
   }
@@ -139,7 +139,7 @@ object StreamingGraphIngest {
     * and append with CARRIED buckets — each new edge row records its
     * source's routing cell as the partition and its neighbor's cell in
     * `nbr_bucket`, so the walk's no-dictionary invariant survives
-    * ingestion. Arrival cells come from [[KnnGraph.clusterOf]] over
+    * ingestion. Arrival cells come from [[Pq.nearestCol]] over
     * the batch's own vectors; neighbor cells from one bounded
     * (|batch|·k) point-fetch of the vector store. Edges publish before
     * vectors — the same crash-window ordering as the hash path (a
@@ -161,11 +161,11 @@ object StreamingGraphIngest {
         vecPath, queries, k, beamRounds)
       .as[(Long, Long)].collect()
     val newCell = batch
-      .select($"vec_id", KnnGraph.clusterOf($"v", cents).as("c"))
+      .select($"vec_id", Pq.nearestCol($"v", cents).as("c"))
       .as[(Long, Int)].collect().toMap
     val nbrCell = KnnGraph.fetch(KnnGraph.openStore(spark, vecPath),
         found.map(_._2).distinct.toSeq.toDF("node"))
-      .select($"vec_id", KnnGraph.clusterOf($"v", cents).as("c"))
+      .select($"vec_id", Pq.nearestCol($"v", cents).as("c"))
       .as[(Long, Int)].collect().toMap
     val rows = found.flatMap { case (newId, nbr) =>
       Seq((newId, nbr, nbrCell(nbr), newCell(newId)),

@@ -97,7 +97,7 @@ class KnnGraphBuildSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    // the r18 keep (TopKPerGroup.TopK with distinct — map-side-partial, dedup-in-buffer)
+    // the r18 keep (TopKPerGroup.TopK — map-side-partial, dedup-in-buffer)
     // must reproduce the former shape EXACTLY: distinct over the
     // candidate pairs, exact-cosine score, row_number over
     // (cos DESC, nbr ASC), keep k — per round, (src, nbr, cos) with

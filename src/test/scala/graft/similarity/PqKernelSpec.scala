@@ -14,8 +14,8 @@ import scala.jdk.CollectionConverters._
   * FIRST index among equal minima, and the ADC terms summed left to
   * right. Generated codebooks carry duplicate and tied entries and ±0.0
   * components, the inputs where an argmin or a fold order shows. A
-  * source check keeps every other file from writing the fold or the
-  * argmin out by hand. */
+  * source check keeps every other file from writing the fold, the
+  * argmin or a per-centroid distance array out by hand. */
 class PqKernelSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -131,11 +131,14 @@ class PqKernelSpec extends AnyFunSuite {
     assert(Files.isDirectory(root), s"run from the project root (cwd ${Paths.get("").toAbsolutePath})")
     val fold = "\\(\\s*(\\w+)\\s*-\\s*(\\w+)\\s*\\)\\s*\\*\\s*\\(\\s*\\1\\s*-\\s*\\2\\s*\\)".r
     val argminRe = "(?s)array_position\\s*\\(.{0,80}?array_min\\s*\\(".r
+    // a per-centroid distance array: transform over a literal whose
+    // lambda calls sqd (Pq.dists is its one home)
+    val distsRe = "(?s)transform\\s*\\(\\s*typedlit\\s*\\(.{0,80}?sqd\\s*\\(".r
     val copies = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => root.relativize(p).toString -> Files.readString(p))
       .filter { case (name, src) => name != "graft/similarity/Pq.scala" &&
-        (fold.findFirstIn(src).isDefined || argminRe.findFirstIn(src).isDefined) }
+        Seq(fold, argminRe, distsRe).exists(_.findFirstIn(src).isDefined) }
       .map(_._1).toSeq
     assert(copies.isEmpty, s"quantization arithmetic copied outside Pq.scala: $copies")
   }

@@ -99,7 +99,7 @@ class RepruneSpec extends AnyFunSuite {
     graft.streaming.StreamingGraphIngest.insertClusteredBatch(
       arrivals, s"$root/g", s"$root/vec", K, beamRounds = 3)
     val vicCells = arrivals.filter($"vec_id" === 5001L)
-      .select(KnnGraph.clusterOf($"v", cents).as("c"))
+      .select(Pq.nearestCol($"v", cents).as("c"))
       .as[Int].collect().toSeq
     KnnGraph.eraseStoredClustered(spark, s"$root/g", Seq(5001L),
       vecPath = s"$root/vec", eraseVectors = true)

@@ -41,7 +41,7 @@ class StoredClusteredSpec extends AnyFunSuite {
     assert(ec == eh, "clustered layout changed the edge set")
     // and every edge's nbr_bucket is the neighbor's own routing bucket
     val assignments = vecs.select($"vec_id",
-        KnnGraph.clusterOf($"v", cents).as("cb"))
+        Pq.nearestCol($"v", cents).as("cb"))
       .as[(Long, Int)].collect().toMap
     val wrong = spark.read.parquet(s"$root/clus")
       .select($"nbr", $"nbr_bucket").as[(Long, Int)].collect()
@@ -206,14 +206,14 @@ class StoredClusteredSpec extends AnyFunSuite {
     KnnGraph.writeEntries(vecs, s"$root/clus")
     KnnGraph.writeVectors(vecs, s"$root/vec")
     val queries = vecs.filter($"vec_id" < 16).select($"vec_id".as("qid"), $"v")
-    // routing parity: nearestCells' top-1 IS clusterOf's pick on every
+    // routing parity: nearestCols' top-1 IS nearestCol's pick on every
     // corpus row (same distance arithmetic, same tie rule)
     val parity = vecs.select(
-        KnnGraph.clusterOf($"v", cents).as("one"),
+        Pq.nearestCol($"v", cents).as("one"),
         org.apache.spark.sql.functions.element_at(
-          KnnGraph.nearestCells($"v", cents, 1), 1).as("top"))
+          Pq.nearestCols($"v", cents, 1), 1).as("top"))
       .filter($"one" =!= $"top").count()
-    assert(parity == 0, s"nearestCells top-1 diverged from clusterOf on $parity rows")
+    assert(parity == 0, s"nearestCols top-1 diverged from nearestCol on $parity rows")
     // P=1 goes through the historical single-cell path bit-exactly
     def entriesAt(p: Int) = KnnGraph.storedEntries(spark, s"$root/clus",
         queries, probes = p)
@@ -299,7 +299,7 @@ class StoredClusteredSpec extends AnyFunSuite {
     val target = spark.read.parquet(s"$root/clus")
       .filter($"src" === entryNode)
       .join(vecs.select($"vec_id".as("nbr"), $"v"), Seq("nbr"))
-      .withColumn("cid", KnnGraph.clusterOf($"v", cents))
+      .withColumn("cid", Pq.nearestCol($"v", cents))
       .filter($"cid" === sidecar.head._1)
       .orderBy($"nbr").select($"nbr", $"v").as[(Long, Seq[Double])]
       .head()
@@ -369,7 +369,7 @@ class StoredClusteredSpec extends AnyFunSuite {
       .select($"nbr", $"nbr_bucket", $"bucket").as[(Long, Int, Int)].collect()
     assert(out.length == K, s"inserted node has ${out.length} != $K out-edges")
     val assign = all.select($"vec_id",
-        KnnGraph.clusterOf($"v", cents).as("c"))
+        Pq.nearestCol($"v", cents).as("c"))
       .as[(Long, Int)].collect().toMap
     out.foreach { case (nbr, nb, b) =>
       assert(b == assign(newId), "new edge routed outside its own cell")
