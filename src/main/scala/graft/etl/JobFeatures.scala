@@ -1,5 +1,7 @@
 package graft.etl
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -15,6 +17,17 @@ import org.apache.spark.sql.functions._
   * projection; explode is Spark's Generator (no UDTF). The per-skill
   * aggregate is a hash aggregate with map-side partials — the shape that
   * survives 100 TB (skill cardinality is small; no skew concern).
+  *
+  * One projection per builder: each builder adds its columns with ONE
+  * `withColumns` (a column read by a later one is inlined, not
+  * referenced by name), so its analyzed plan gains one Project. Dataset
+  * construction analyses eagerly, so a chain of `withColumn` calls would
+  * re-analyse the growing plan once per call, a cost paid on every
+  * dashboard interaction that builds a one-row scoring query. The
+  * optimizer collapses such a chain into the same single Project, so the
+  * rule changes analysis cost only, not optimized plans or results.
+  * `withColumns` keeps `withColumn`'s column order and its
+  * replace-in-place for an existing name.
   */
 object JobFeatures {
 
@@ -25,30 +38,30 @@ object JobFeatures {
   /** Labels + sanity filter (train_random_forest.py:36-52,142-147):
     * salary_final/exp_final coalesce chains, salary ∈ (0,200], exp ∈ [0,30]. */
   def withLabels(df: DataFrame): DataFrame =
-    df.withColumn("salary_final",
-        coalesce(col("salary_avg"), (col("salary_min") + col("salary_max")) / 2, lit(0.0)))
-      .withColumn("exp_final",
-        coalesce(col("exp_avg_year"), col("exp_min_year"), lit(0.0)))
+    df.withColumns(ListMap(
+        "salary_final" ->
+          coalesce(col("salary_avg"), (col("salary_min") + col("salary_max")) / 2, lit(0.0)),
+        "exp_final" -> coalesce(col("exp_avg_year"), col("exp_min_year"), lit(0.0))))
       .filter(col("salary_final") > 0 && col("salary_final") <= 200 &&
         col("exp_final") >= 0 && col("exp_final") <= 30)
 
   /** The 15 reference flag columns (city / industry / position level). */
-  def withFlags(df: DataFrame): DataFrame = df
-    .withColumn("is_hcm", flag(col("city"), "hồ chí minh|hcm"))
-    .withColumn("is_hanoi", flag(col("city"), "hà nội|ha noi|hanoi"))
-    .withColumn("is_danang", flag(col("city"), "đà nẵng|da nang"))
-    .withColumn("is_it", flag(col("job_fields"), "it|phần mềm|developer|lập trình|data|ai|software"))
-    .withColumn("is_sales", flag(col("job_fields"), "bán hàng|kinh doanh|sales|tiếp thị|marketing"))
-    .withColumn("is_finance", flag(col("job_fields"), "tài chính|ngân hàng|kế toán|finance|banking"))
-    .withColumn("is_education", flag(col("job_fields"), "giáo dục|đào tạo|giáo viên|education"))
-    .withColumn("is_engineering", flag(col("job_fields"), "kỹ thuật|cơ khí|điện|xây dựng|engineer"))
-    .withColumn("is_intern", flag(col("position_level"), "thực tập|intern|internship"))
-    .withColumn("is_fresher", flag(col("position_level"), "fresher|mới ra trường|sinh viên mới"))
-    .withColumn("is_junior", flag(col("position_level"), "junior"))
-    .withColumn("is_staff", flag(col("position_level"), "nhân viên|chuyên viên|staff|employee"))
-    .withColumn("is_senior", flag(col("position_level"), "senior|chuyên gia|chuyên viên cao cấp"))
-    .withColumn("is_team_lead", flag(col("position_level"), "trưởng nhóm|team lead|leader|tech lead"))
-    .withColumn("is_manager", flag(col("position_level"), "trưởng phòng|quản lý|giám đốc|manager|head|director"))
+  def withFlags(df: DataFrame): DataFrame = df.withColumns(ListMap(
+    "is_hcm" -> flag(col("city"), "hồ chí minh|hcm"),
+    "is_hanoi" -> flag(col("city"), "hà nội|ha noi|hanoi"),
+    "is_danang" -> flag(col("city"), "đà nẵng|da nang"),
+    "is_it" -> flag(col("job_fields"), "it|phần mềm|developer|lập trình|data|ai|software"),
+    "is_sales" -> flag(col("job_fields"), "bán hàng|kinh doanh|sales|tiếp thị|marketing"),
+    "is_finance" -> flag(col("job_fields"), "tài chính|ngân hàng|kế toán|finance|banking"),
+    "is_education" -> flag(col("job_fields"), "giáo dục|đào tạo|giáo viên|education"),
+    "is_engineering" -> flag(col("job_fields"), "kỹ thuật|cơ khí|điện|xây dựng|engineer"),
+    "is_intern" -> flag(col("position_level"), "thực tập|intern|internship"),
+    "is_fresher" -> flag(col("position_level"), "fresher|mới ra trường|sinh viên mới"),
+    "is_junior" -> flag(col("position_level"), "junior"),
+    "is_staff" -> flag(col("position_level"), "nhân viên|chuyên viên|staff|employee"),
+    "is_senior" -> flag(col("position_level"), "senior|chuyên gia|chuyên viên cao cấp"),
+    "is_team_lead" -> flag(col("position_level"), "trưởng nhóm|team lead|leader|tech lead"),
+    "is_manager" -> flag(col("position_level"), "trưởng phòng|quản lý|giám đốc|manager|head|director")))
 
   /** Explode comma-separated skills → one row per (job, skill), cleaned
     * (train_gbt.py:59-67): lowercase, split, trim, drop empties and
@@ -64,6 +77,9 @@ object JobFeatures {
     * shuffle-order independent and oracle-portable. */
   def skillHotScores(exploded: DataFrame, minJobs: Int = 10): DataFrame = {
     import graft.util.Num._
+    val salaryNorm = col("avg_salary") / 100.0
+    val demandNorm = least(col("job_count") / 100.0, lit(1.0))
+    val expNorm = col("avg_exp") / 10.0
     exploded
       .withColumn("is_big_city", flag(col("city"), "hồ chí minh|hà nội|hcm|ha noi"))
       .groupBy(col("skill"))
@@ -73,11 +89,11 @@ object JobFeatures {
         davg(col("exp_avg_year")).as("avg_exp"),
         davg(col("is_big_city")).as("big_city_ratio"))
       .filter(col("job_count") >= minJobs)
-      .withColumn("salary_norm", col("avg_salary") / 100.0)
-      .withColumn("demand_norm", least(col("job_count") / 100.0, lit(1.0)))
-      .withColumn("exp_norm", col("avg_exp") / 10.0)
-      .withColumn("skill_hot_score",
-        col("salary_norm") * 0.4 + col("demand_norm") * 0.3
-          - col("exp_norm") * 0.2 + col("big_city_ratio") * 0.1)
+      .withColumns(ListMap(
+        "salary_norm" -> salaryNorm,
+        "demand_norm" -> demandNorm,
+        "exp_norm" -> expNorm,
+        "skill_hot_score" -> (salaryNorm * 0.4 + demandNorm * 0.3
+          - expNorm * 0.2 + col("big_city_ratio") * 0.1)))
   }
 }

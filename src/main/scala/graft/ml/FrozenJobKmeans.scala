@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.similarity.Pq
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -32,7 +33,7 @@ import org.apache.spark.sql.functions._
   * identically in Scala and DuckDB.
   *
   * 100 TB: pure per-row projection — 16 scale ops, 5×16 multiply-adds,
-  * 10 compares; no shuffle, no model object in the hot path. */
+  * one argmin over 5; no shuffle, no model object in the hot path. */
 object FrozenJobKmeans {
 
   // frozen from Pipelines.kmeans(k=5, seed=42) fit on
@@ -64,13 +65,14 @@ object FrozenJobKmeans {
   def scaledSql(i: Int, raw: String): String =
     s"(($raw - ${means(i)}) / ${stds(i)})"
 
-  /** Squared L2 to centroid `c` over the scaled features `sf` —
-    * per-term (sf−coord)·(sf−coord), summed LEFT-ASSOCIATED in
-    * published feature order (both engines' + is left-associative). */
+  /** Squared L2 to centroid `c` over the scaled features `sf`:
+    * [[Pq.sqd]] of the feature array against the centroid literal, its
+    * per-term (sf−coord)·(sf−coord) summed LEFT-ASSOCIATED in published
+    * feature order from 0.0 — bit for bit [[distSql]]'s `t0 + t1 + …`,
+    * since every term is ≥ +0.0 or NaN and so `0.0 + t0 == t0`. A null
+    * feature nulls the sum in both. */
   def distCol(c: Int, sf: Int => Column): Column =
-    featureNames.indices.map { i =>
-      (sf(i) - lit(centroids(c)(i))) * (sf(i) - lit(centroids(c)(i)))
-    }.reduce(_ + _)
+    Pq.sqd(array(featureNames.indices.map(sf): _*), typedlit(centroids(c)))
 
   def distSql(c: Int, sf: Int => String): String =
     featureNames.indices.map { i =>
@@ -78,13 +80,17 @@ object FrozenJobKmeans {
     }.mkString(" + ")
 
   /** First-index-wins argmin over the k distances — Spark's
-    * KMeansModel.predict tie-break, written as the same comparison
-    * cascade in both engines. */
+    * KMeansModel.predict tie-break. Spark takes [[Pq]]'s argmin over
+    * `array(d(0..k-1))`, so each distance is written once; DuckDB keeps
+    * [[clusterSql]]'s cascade "first c with d(c) <= every later d(j),
+    * else k-1". They agree: both engines order doubles with NaN greatest
+    * and NaN = NaN (distances are never −0.0), and under a total order
+    * the first c that is <= every later distance is the first index of
+    * the minimum. The k distances read the same features, so they are
+    * all null or none: then array_min is null and the coalesce answers
+    * k-1, as the cascade does when no comparison holds. */
   def clusterCol(d: Int => Column): Column =
-    (0 until k - 1).foldRight(lit(k - 1)) { (c, els) =>
-      when((c + 1 until k).map(j => d(c) <= d(j)).reduce(_ && _), lit(c))
-        .otherwise(els)
-    }
+    coalesce(Pq.argmin(array((0 until k).map(d): _*)), lit(k - 1))
 
   def clusterSql(d: Int => String): String = {
     val whens = (0 until k - 1).map { c =>

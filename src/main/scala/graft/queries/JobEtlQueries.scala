@@ -3,6 +3,7 @@ package graft.queries
 import graft.QueryDef
 import graft.QueryDef.{rowsOnly, sqlChecked}
 import graft.etl.{JobEtl, JobFeatures, JobsFixture, SalaryParser}
+import graft.similarity.Pq
 import graft.util.Num._
 import org.apache.spark.sql.functions._
 
@@ -213,8 +214,10 @@ object JobEtlQueries {
 
   /** First-min-wins argmin as a CASE chain: WHEN i fires iff d_i <= every
     * LATER distance — reaches exactly the first index attaining the global
-    * min, identically in Spark and DuckDB (same IEEE arithmetic, same
-    * comparison order). */
+    * min. The Spark side is [[Pq.nearestCol]], the same first-index argmin
+    * over the same IEEE terms: its fold starts from 0.0, and 0.0 + t0 ==
+    * t0 for a square t0; both engines order NaN greatest; both features
+    * are coalesced non-null. */
   private def sqlClusterCase: String = {
     val d = clusterCentroids.map { case (s, e) =>
       s"((salary_final - $s)*(salary_final - $s) + (exp_final - $e)*(exp_final - $e))" }
@@ -259,14 +262,8 @@ object JobEtlQueries {
     val postings = JobFeatures.withLabels(cleanJobs(spark, dir))
       .select($"job_id", $"salary_final", $"exp_final")
       .cache()
-    val d = clusterCentroids.map { case (s, e) =>
-      ($"salary_final" - s) * ($"salary_final" - s) +
-        ($"exp_final" - e) * ($"exp_final" - e) }
-    val cluster = (0 until d.length - 1).foldRight(lit(clusterCentroids.length - 1)) {
-      (i, els) =>
-        when((i + 1 until d.length).map(j => d(i) <= d(j)).reduce(_ && _), lit(i))
-          .otherwise(els)
-    }
+    val cluster = Pq.nearestCol(array($"salary_final", $"exp_final"),
+      clusterCentroids.map { case (s, e) => Seq(s, e) })
     // the assignment table (job_clusters) as its own frame, then the
     // dashboard's id-equi-join back onto the postings
     val assignments = postings.select($"job_id", cluster.as("cluster"))

@@ -92,13 +92,15 @@ object Pq {
     * with explicit j-ordered sums. Its consumers, all through
     * [[dists]]: [[nearestCol]], [[nearestCols]] and [[withNearest]]
     * (IVF coarse routing in [[ivfPqEncode]], the stored layouts' cell
-    * routing and entry pick in [[KnnGraph]]), the per-subspace encode
-    * fold of [[pqEncode]] and [[ivfPqEncode]], and [[lutsCol]] (the
-    * query LUTs of sq09, sq10, sq17, sq24 and
-    * [[KnnGraph.serveFromStoresPq]]); directly, sq04/sq10's probe
-    * distance. [[sqdist]] is its driver twin (training,
-    * [[StoredIndex]]'s routing and LUTs). A fold-order change here
-    * changes hashes everywhere, and PqKernelSpec pins column ≡ driver. */
+    * routing and entry pick in [[KnnGraph]], jq08's salary/experience
+    * tiers), the per-subspace encode fold of [[pqEncode]] and
+    * [[ivfPqEncode]], and [[lutsCol]] (the query LUTs of sq09, sq10,
+    * sq17, sq24 and [[KnnGraph.serveFromStoresPq]]); directly,
+    * sq04/sq10's probe distance and
+    * [[graft.ml.FrozenJobKmeans.distCol]]. [[sqdist]] is its driver
+    * twin (training, [[StoredIndex]]'s routing and LUTs). A fold-order
+    * change here changes hashes everywhere, and PqKernelSpec pins
+    * column ≡ driver. */
   private[graft] def sqd(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
 
@@ -108,8 +110,9 @@ object Pq {
 
   /** First-index argmin of a distance array: array_position finds the
     * FIRST element equal to the minimum — the oracle's (d ASC, index
-    * ASC) rank, and [[nearest]]'s strict `<`. */
-  private def argmin(d: Column): Column =
+    * ASC) rank, and [[nearest]]'s strict `<`. Null when every element
+    * is null. [[graft.ml.FrozenJobKmeans.clusterCol]] reads it directly. */
+  private[graft] def argmin(d: Column): Column =
     (array_position(d, array_min(d)) - 1).cast("int")
 
   /** Nearest-centroid index of `v` as one expression. Both argmin reads

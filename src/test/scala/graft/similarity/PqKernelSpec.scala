@@ -14,8 +14,9 @@ import scala.jdk.CollectionConverters._
   * FIRST index among equal minima, and the ADC terms summed left to
   * right. Generated codebooks carry duplicate and tied entries and ±0.0
   * components, the inputs where an argmin or a fold order shows. A
-  * source check keeps every other file from writing the fold, the
-  * argmin or a per-centroid distance array out by hand. */
+  * source check keeps every other file from writing the fold (over
+  * identifiers or calls), the argmin, a per-index `<=` argmin cascade
+  * or a per-centroid distance array out by hand. */
 class PqKernelSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -126,19 +127,48 @@ class PqKernelSpec extends AnyFunSuite {
     })
   }
 
+  /** An operand of a hand-written fold: an identifier, optionally
+    * called, `sf(i)` or `lit(centroids(c)(i))`. Dotted SQL names
+    * (`el.xq`) and `${…}` interpolations do not match, so the oracles'
+    * SQL folds stay allowed, and neither do `$"col"` element columns
+    * summed by a grouped aggregate (sq04b's long-format integer Lloyd
+    * rounds), which hold no array to fold. */
+  private val operand = "\\w+(?:\\((?:[^()]|\\([^()]*\\))*\\))*"
+  private val fold = s"\\(\\s*($operand)\\s*-\\s*($operand)\\s*\\)\\s*\\*\\s*\\(\\s*\\1\\s*-\\s*\\2\\s*\\)".r
+  private val argminRe = "(?s)array_position\\s*\\(.{0,80}?array_min\\s*\\(".r
+  /** A per-index `<=` argmin cascade: `when(… d(c) <= d(j) …)`. */
+  private val cascadeRe = "(?s)when\\s*\\(.{0,120}?\\b(\\w+)\\((\\w+)\\)\\s*<=\\s*\\1\\(\\w+\\)".r
+  // a per-centroid distance array: transform over a literal whose
+  // lambda calls sqd (Pq.dists is its one home)
+  private val distsRe = "(?s)transform\\s*\\(\\s*typedlit\\s*\\(.{0,80}?sqd\\s*\\(".r
+
+  private def handWritten(src: String): Boolean =
+    Seq(fold, argminRe, cascadeRe, distsRe).exists(_.findFirstIn(src).isDefined)
+
+  test("the source patterns flag hand-written copies and pass the oracles' forms") {
+    val copies = Seq(
+      // a k-means distance over call operands and its comparison cascade
+      "(sf(i) - lit(centroids(c)(i))) * (sf(i) - lit(centroids(c)(i)))",
+      "when((c + 1 until k).map(j => d(c) <= d(j)).reduce(_ && _), lit(c))",
+      "aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)",
+      "(array_position(d, array_min(d)) - 1)",
+      "transform(typedlit(centroids), c => sqd(v, c))")
+    copies.foreach(c => assert(handWritten(c), s"not flagged: $c"))
+    val allowed = Seq(
+      "s\"(${sf(i)} - ${centroids(c)(i)}) * (${sf(i)} - ${centroids(c)(i)})\"",
+      "s\"WHEN ${(i + 1 until d.length).map(j => s\"${d(i)} <= ${d(j)}\")}\"",
+      "SUM((el.xq - c.c) * (el.xq - c.c)) AS dist",
+      """sum(($"xq" - $"c") * ($"xq" - $"c")).as("dist")""")
+    allowed.foreach(c => assert(!handWritten(c), s"flagged: $c"))
+  }
+
   test("the fold and the argmin are written only in Pq.scala") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root (cwd ${Paths.get("").toAbsolutePath})")
-    val fold = "\\(\\s*(\\w+)\\s*-\\s*(\\w+)\\s*\\)\\s*\\*\\s*\\(\\s*\\1\\s*-\\s*\\2\\s*\\)".r
-    val argminRe = "(?s)array_position\\s*\\(.{0,80}?array_min\\s*\\(".r
-    // a per-centroid distance array: transform over a literal whose
-    // lambda calls sqd (Pq.dists is its one home)
-    val distsRe = "(?s)transform\\s*\\(\\s*typedlit\\s*\\(.{0,80}?sqd\\s*\\(".r
     val copies = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => root.relativize(p).toString -> Files.readString(p))
-      .filter { case (name, src) => name != "graft/similarity/Pq.scala" &&
-        Seq(fold, argminRe, distsRe).exists(_.findFirstIn(src).isDefined) }
+      .filter { case (name, src) => name != "graft/similarity/Pq.scala" && handWritten(src) }
       .map(_._1).toSeq
     assert(copies.isEmpty, s"quantization arithmetic copied outside Pq.scala: $copies")
   }
