@@ -31,10 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object JobFeatures {
 
-  /** 1.0/0.0 regex flag (train_random_forest.py idiom). */
-  def flag(c: Column, pattern: String): Column =
-    when(lower(c).rlike(pattern), 1.0).otherwise(0.0)
-
   /** Labels + sanity filter (train_random_forest.py:36-52,142-147):
     * salary_final/exp_final coalesce chains, salary ∈ (0,200], exp ∈ [0,30]. */
   def withLabels(df: DataFrame): DataFrame =
@@ -45,23 +41,46 @@ object JobFeatures {
       .filter(col("salary_final") > 0 && col("salary_final") <= 200 &&
         col("exp_final") >= 0 && col("exp_final") <= 30)
 
-  /** The 15 reference flag columns (city / industry / position level). */
-  def withFlags(df: DataFrame): DataFrame = df.withColumns(ListMap(
-    "is_hcm" -> flag(col("city"), "hồ chí minh|hcm"),
-    "is_hanoi" -> flag(col("city"), "hà nội|ha noi|hanoi"),
-    "is_danang" -> flag(col("city"), "đà nẵng|da nang"),
-    "is_it" -> flag(col("job_fields"), "it|phần mềm|developer|lập trình|data|ai|software"),
-    "is_sales" -> flag(col("job_fields"), "bán hàng|kinh doanh|sales|tiếp thị|marketing"),
-    "is_finance" -> flag(col("job_fields"), "tài chính|ngân hàng|kế toán|finance|banking"),
-    "is_education" -> flag(col("job_fields"), "giáo dục|đào tạo|giáo viên|education"),
-    "is_engineering" -> flag(col("job_fields"), "kỹ thuật|cơ khí|điện|xây dựng|engineer"),
-    "is_intern" -> flag(col("position_level"), "thực tập|intern|internship"),
-    "is_fresher" -> flag(col("position_level"), "fresher|mới ra trường|sinh viên mới"),
-    "is_junior" -> flag(col("position_level"), "junior"),
-    "is_staff" -> flag(col("position_level"), "nhân viên|chuyên viên|staff|employee"),
-    "is_senior" -> flag(col("position_level"), "senior|chuyên gia|chuyên viên cao cấp"),
-    "is_team_lead" -> flag(col("position_level"), "trưởng nhóm|team lead|leader|tech lead"),
-    "is_manager" -> flag(col("position_level"), "trưởng phòng|quản lý|giám đốc|manager|head|director")))
+  /** A 1.0/0.0 regex flag over the lowercased `source` column
+    * (train_random_forest.py idiom). */
+  final case class Flag(name: String, source: String, pattern: String)
+
+  /** The 15 reference flags (train_random_forest.py:56-136): city,
+    * industry and position level. The one table behind [[withFlags]],
+    * the models' feature lists and the DuckDB oracles' flag SQL. */
+  val flags: Seq[Flag] = Seq(
+    Flag("is_hcm", "city", "hồ chí minh|hcm"),
+    Flag("is_hanoi", "city", "hà nội|ha noi|hanoi"),
+    Flag("is_danang", "city", "đà nẵng|da nang"),
+    Flag("is_it", "job_fields", "it|phần mềm|developer|lập trình|data|ai|software"),
+    Flag("is_sales", "job_fields", "bán hàng|kinh doanh|sales|tiếp thị|marketing"),
+    Flag("is_finance", "job_fields", "tài chính|ngân hàng|kế toán|finance|banking"),
+    Flag("is_education", "job_fields", "giáo dục|đào tạo|giáo viên|education"),
+    Flag("is_engineering", "job_fields", "kỹ thuật|cơ khí|điện|xây dựng|engineer"),
+    Flag("is_intern", "position_level", "thực tập|intern|internship"),
+    Flag("is_fresher", "position_level", "fresher|mới ra trường|sinh viên mới"),
+    Flag("is_junior", "position_level", "junior"),
+    Flag("is_staff", "position_level", "nhân viên|chuyên viên|staff|employee"),
+    Flag("is_senior", "position_level", "senior|chuyên gia|chuyên viên cao cấp"),
+    Flag("is_team_lead", "position_level", "trưởng nhóm|team lead|leader|tech lead"),
+    Flag("is_manager", "position_level", "trưởng phòng|quản lý|giám đốc|manager|head|director"))
+
+  /** The per-skill big-city share's flag (train_gbt.py:80-88). */
+  val bigCity: Flag = Flag("is_big_city", "city", "hồ chí minh|hà nội|hcm|ha noi")
+
+  def flagCol(f: Flag): Column =
+    when(lower(col(f.source)).rlike(f.pattern), 1.0).otherwise(0.0)
+
+  /** [[flagCol]] as DuckDB SQL over `JobsFixture.duckParsedSql`'s `etl`,
+    * the ETL twin that names the cleaned city `city_clean`. */
+  def flagSql(f: Flag): String = {
+    val src = if (f.source == "city") "city_clean" else f.source
+    s"CASE WHEN regexp_matches(lower($src), '${f.pattern}') THEN 1.0 ELSE 0.0 END"
+  }
+
+  /** The 15 reference flag columns, in [[flags]] order. */
+  def withFlags(df: DataFrame): DataFrame =
+    df.withColumns(ListMap(flags.map(f => f.name -> flagCol(f)): _*))
 
   /** Explode comma-separated skills → one row per (job, skill), cleaned
     * (train_gbt.py:59-67): lowercase, split, trim, drop empties and
@@ -81,7 +100,7 @@ object JobFeatures {
     val demandNorm = least(col("job_count") / 100.0, lit(1.0))
     val expNorm = col("avg_exp") / 10.0
     exploded
-      .withColumn("is_big_city", flag(col("city"), "hồ chí minh|hà nội|hcm|ha noi"))
+      .withColumn(bigCity.name, flagCol(bigCity))
       .groupBy(col("skill"))
       .agg(
         count(lit(1)).as("job_count"),

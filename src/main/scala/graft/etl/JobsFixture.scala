@@ -192,4 +192,19 @@ object JobsFixture {
       |       ELSE coalesce(exp_min_year, 0.0) END AS exp_avg_year,
       |  CASE WHEN city = '' OR city IS NULL THEN 'Unknown' ELSE city END AS city_clean
       |  FROM parsed)""".stripMargin
+
+  /** The label rule over [[duckParsedSql]]'s `etl` — the DuckDB twin of
+    * [[JobFeatures.withLabels]]: `labeled` adds the salary_final /
+    * exp_final coalesce chains, `postings` keeps the rows that pass the
+    * sanity filter. Splice after [[duckParsedSql]]. */
+  val duckLabeledSql: String =
+    """labeled AS (
+      |  SELECT *,
+      |    coalesce(salary_avg, (salary_min + salary_max) / 2, 0.0) AS salary_final,
+      |    coalesce(exp_avg_year, exp_min_year, 0.0) AS exp_final
+      |  FROM etl),
+      |postings AS (
+      |  SELECT * FROM labeled
+      |  WHERE salary_final > 0 AND salary_final <= 200
+      |    AND exp_final >= 0 AND exp_final <= 30)""".stripMargin
 }

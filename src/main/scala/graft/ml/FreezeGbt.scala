@@ -1,6 +1,5 @@
 package graft.ml
 
-import org.apache.spark.ml.tree.{ContinuousSplit, InternalNode, LeafNode, Node}
 import org.apache.spark.sql.functions._
 
 /** One-off trainer behind [[FrozenSkillGbt]]'s constants (mq17): fits
@@ -14,13 +13,13 @@ import org.apache.spark.sql.functions._
   * AVERAGE the GBT serves a boosting-WEIGHTED sum, so the weights are
   * part of the published model.
   *
-  * Before printing, the replay column (the exact arithmetic
-  * [[FrozenSkillGbt.scoreCol]] will serve) is validated against
-  * `model.transform`'s prediction on every training row. NOT bitwise:
-  * spark.ml's GBT predict is `blas.dot(treePredictions, treeWeights)`
-  * and the netlib dot may VECTORIZE the reduction (measured: 7 of 10
-  * rows differ in the last ulps vs a sequential fold), so the gate is
-  * a 1e-12 relative bound — the replay's own determinism (Spark side ≡
+  * Before printing, [[TreeKernel.replayGate]] checks the replay column
+  * (the exact arithmetic [[FrozenSkillGbt.scoreCol]] will serve)
+  * against `model.transform`'s prediction on every training row. NOT
+  * bitwise: spark.ml's GBT predict is `blas.dot(treePredictions,
+  * treeWeights)` and the netlib dot may VECTORIZE the reduction
+  * (measured: 7 of 10 rows differ in the last ulps vs a sequential
+  * fold), so the gate is a 1e-12 relative bound — the replay's own determinism (Spark side ≡
   * DuckDB side) is what mq17 hash-checks, and THAT is exact because
   * both sides spell out the same left-associated sum. Re-run to
   * re-freeze:
@@ -28,16 +27,6 @@ import org.apache.spark.sql.functions._
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 sbt "runMain graft.ml.FreezeGbt"
   */
 object FreezeGbt {
-
-  private def render(n: Node): String = n match {
-    case l: LeafNode => s"L(${l.prediction})"
-    case i: InternalNode => i.split match {
-      case c: ContinuousSplit =>
-        s"S(${c.featureIndex}, ${c.threshold}, ${render(i.leftChild)}, ${render(i.rightChild)})"
-      case other => throw new IllegalStateException(
-        s"unexpected split type ${other.getClass} — all 4 features are continuous")
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -56,38 +45,20 @@ object FreezeGbt {
       .setLabelCol("skill_hot_score").setFeaturesCol("features")
       .setMaxIter(50).setMaxDepth(5).setSeed(42)
       .fit(assembled)
-    // replay-vs-transform validation over every training row (see the
-    // scaladoc: blas.dot may vectorize, so within-1e-12-relative, not
-    // bitwise — the Spark↔DuckDB replay itself IS bitwise)
-    val replayed = gbt.transform(assembled).withColumn("replay",
-      FrozenSkillGbt.scoreColOf(
-        gbt.trees.map(t => toFrozen(t.rootNode)).toSeq,
-        gbt.treeWeights.toSeq,
-        i => col(featCols(i))))
-    val maxRel = replayed.agg(max(abs(col("replay") - col("prediction")) /
-        greatest(abs(col("prediction")), lit(1e-300)))).head().getDouble(0)
-    println(s"// replay vs model.transform: max relative diff $maxRel")
-    require(maxRel < 1e-12,
-      s"replay diverged from model.transform: max relative diff $maxRel")
+    // within-1e-12-relative, not bitwise (see the scaladoc); the
+    // Spark↔DuckDB replay itself IS bitwise
+    val trained = gbt.trees.map(t => TreeKernel.fromSpark(t.rootNode)).toSeq
+    TreeKernel.replayGate(gbt.transform(assembled),
+      FrozenSkillGbt.scoreCol(i => col(featCols(i)), trained, gbt.treeWeights.toSeq),
+      relTol = 1e-12)
     println(s"// frozen from GBTRegressor(maxIter=50, maxDepth=5, seed=42) " +
       s"fit on $dir (${skills.count()} skill rows), features = " +
       featCols.mkString("(", ", ", ")"))
     println(s"// treeWeights: Seq(${gbt.treeWeights.mkString(", ")})")
-    gbt.trees.zipWithIndex.foreach { case (t, i) =>
+    trained.zipWithIndex.foreach { case (t, i) =>
       println(s"// tree $i")
-      println(render(t.rootNode) + ",")
+      println(TreeKernel.render(t) + ",")
     }
     spark.stop()
-  }
-
-  /** spark.ml node → the frozen ADT (used by the validation pass). */
-  def toFrozen(n: Node): FrozenSkillGbt.Node = n match {
-    case l: LeafNode => FrozenSkillGbt.L(l.prediction)
-    case i: InternalNode => i.split match {
-      case c: ContinuousSplit => FrozenSkillGbt.S(c.featureIndex,
-        c.threshold, toFrozen(i.leftChild), toFrozen(i.rightChild))
-      case other => throw new IllegalStateException(
-        s"unexpected split type ${other.getClass}")
-    }
   }
 }

@@ -1,27 +1,22 @@
 package graft.ml
 
-import org.apache.spark.ml.tree.{ContinuousSplit, InternalNode, LeafNode, Node}
-
 /** One-off trainer behind [[FrozenSalaryRf]]'s constants (mq13): fits
   * the reference-shaped salary forest (train_random_forest.py features,
   * a deliberately SMALL serving model — 3 trees, depth 3, seed 42 — the
   * "publish a trained model's parameters" move of jq08's centroids) on
   * the sf0.01 featurized postings and prints each tree as the Scala
-  * literal to paste into FrozenSalaryRf. Re-run to re-freeze:
+  * literal to paste into FrozenSalaryRf.
+  *
+  * Before printing, [[TreeKernel.replayGate]] checks the serving
+  * arithmetic ([[FrozenSalaryRf.rawCol]] over the just-trained trees)
+  * against `model.transform`'s prediction on every training row, and
+  * exactly: spark.ml's forest `predict` is a sequential sum divided by
+  * numTrees, which is the kernel's left-associated sum. Re-run to
+  * re-freeze:
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 sbt "runMain graft.ml.FreezeRf"
   */
 object FreezeRf {
-
-  private def render(n: Node): String = n match {
-    case l: LeafNode => s"L(${l.prediction})"
-    case i: InternalNode => i.split match {
-      case c: ContinuousSplit =>
-        s"S(${c.featureIndex}, ${c.threshold}, ${render(i.leftChild)}, ${render(i.rightChild)})"
-      case other => throw new IllegalStateException(
-        s"unexpected split type ${other.getClass} — all 16 features are continuous")
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -42,12 +37,15 @@ object FreezeRf {
       .setLabelCol("salary_final").setFeaturesCol("features")
       .setNumTrees(3).setMaxDepth(3).setSeed(42)
       .fit(assembled)
+    val trained = rf.trees.map(t => TreeKernel.fromSpark(t.rootNode)).toSeq
+    TreeKernel.replayGate(rf.transform(assembled),
+      FrozenSalaryRf.rawCol(i => col(featCols(i)), trained), relTol = 0.0)
     println(s"// frozen from RandomForestRegressor(numTrees=3, maxDepth=3, " +
       s"seed=42) fit on $dir (${feats.count()} rows), features = " +
       featCols.mkString("(", ", ", ")"))
-    rf.trees.zipWithIndex.foreach { case (t, i) =>
+    trained.zipWithIndex.foreach { case (t, i) =>
       println(s"// tree $i (weight ${rf.treeWeights(i)})")
-      println(render(t.rootNode) + ",")
+      println(TreeKernel.render(t) + ",")
     }
     spark.stop()
   }

@@ -19,13 +19,14 @@ import org.apache.spark.sql.functions._
   * (numTrees=3, maxDepth=3, seed=42), raw features (tree splits are
   * scale-invariant; no scaler stage), fit on the sf0.01 featurized
   * postings (12857 rows). Thresholds/leaves are Double.toString
-  * round-trip literals, identical when re-parsed by Scala and DuckDB. */
+  * round-trip literals, identical when re-parsed by Scala and DuckDB.
+  *
+  * The tree walk, the ensemble sum and the SQL literal rule are
+  * [[TreeKernel]]'s; this object holds the model's data (trees, tiers)
+  * and its composition: the forest average, the tier clamp and the IT
+  * bonus. */
 object FrozenSalaryRf {
-
-  sealed trait Node
-  final case class L(v: Double) extends Node
-  /** spark.ml ContinuousSplit semantics: feature(f) <= t → lo, else hi. */
-  final case class S(f: Int, t: Double, lo: Node, hi: Node) extends Node
+  import TreeKernel._
 
   /** The model's feature signature — index i of every split's `f`
     * (train_random_forest.py:150-170's 16-feature shape). */
@@ -34,8 +35,8 @@ object FrozenSalaryRf {
     "is_engineering", "is_intern", "is_fresher", "is_junior", "is_staff",
     "is_senior", "is_team_lead", "is_manager")
 
-  /** Frozen trees — [[FreezeRf]]'s output (fit on the sf0.01
-    * featurized postings, 12857 rows), pasted verbatim. */
+  /** Frozen trees — the literals [[FreezeRf]] prints (fit on the
+    * sf0.01 featurized postings, 12857 rows). */
   val trees: Seq[Node] = Seq(
     // tree 0
     S(15, 0.5, S(11, 0.5, S(10, 0.5, L(24.5711453408571), L(19.312146892655367)), S(7, 0.5, L(60.94918224299065), L(65.8029197080292))), S(7, 0.5, S(3, 0.5, L(23.412617839013777), L(28.36)), S(1, 0.5, L(24.166666666666668), L(27.705882352941178)))),
@@ -57,35 +58,15 @@ object FrozenSalaryRf {
     ("is_team_lead", 25.0, 60.0),
     ("is_manager", 35.0, 100.0))
 
-  private def treeCol(n: Node, feat: Int => Column): Column = n match {
-    case L(v) => lit(v)
-    case S(f, t, lo, hi) =>
-      when(feat(f) <= lit(t), treeCol(lo, feat)).otherwise(treeCol(hi, feat))
-  }
-
-  /** Literals through CAST('…' AS DOUBLE) — DuckDB types bare numeric
-    * literals DECIMAL and its DECIMAL→DOUBLE conversion can land 1 ulp
-    * off strtod (measured on mq17's leaves, same pattern); the string
-    * cast round-trips Double.toString bit-exactly, making the replay's
-    * bit-identity claim true rather than merely below the gate's
-    * 9-significant-digit render. */
-  private def sqlD(v: Double): String = s"CAST('$v' AS DOUBLE)"
-
-  private def treeSql(n: Node, feat: Int => String): String = n match {
-    case L(v) => sqlD(v)
-    case S(f, t, lo, hi) =>
-      s"CASE WHEN ${feat(f)} <= ${sqlD(t)} THEN ${treeSql(lo, feat)} " +
-        s"ELSE ${treeSql(hi, feat)} END"
-  }
-
   /** Raw forest prediction: the tree average, left-associated in tree
-    * order — identical in both engines. */
-  def rawCol(feat: Int => Column): Column =
-    trees.map(treeCol(_, feat)).reduce(_ + _) / lit(trees.length.toDouble)
+    * order — identical in both engines and bit-identical to spark.ml's
+    * `predict`. `ts` defaults to the published forest; [[FreezeRf]]
+    * passes the just-trained one. */
+  def rawCol(feat: Int => Column, ts: Seq[Node] = trees): Column =
+    sumCol(ts.map(treeCol(_, feat))) / lit(ts.length.toDouble)
 
-  def rawSql(feat: Int => String): String =
-    "(" + trees.map(treeSql(_, feat)).mkString(" + ") +
-      s") / ${trees.length}.0"
+  def rawSql(feat: Int => String, ts: Seq[Node] = trees): String =
+    sumSql(ts.map(treeSql(_, feat))) + s" / ${ts.length}.0"
 
   private def tierCol(pick: ((String, Double, Double)) => Double,
       flag: String => Column, default: Double): Column =

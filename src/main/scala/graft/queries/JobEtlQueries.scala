@@ -86,27 +86,10 @@ object JobEtlQueries {
     * (train_random_forest.py:36-147), aggregated to per-flag totals. */
   val jq04FlagFeatures: QueryDef = sqlChecked(
     "jq04_flag_features", {
-      val flags = Seq(
-        "is_hcm" -> ("city_clean", "hồ chí minh|hcm"),
-        "is_hanoi" -> ("city_clean", "hà nội|ha noi|hanoi"),
-        "is_danang" -> ("city_clean", "đà nẵng|da nang"),
-        "is_it" -> ("job_fields", "it|phần mềm|developer|lập trình|data|ai|software"),
-        "is_sales" -> ("job_fields", "bán hàng|kinh doanh|sales|tiếp thị|marketing"),
-        "is_finance" -> ("job_fields", "tài chính|ngân hàng|kế toán|finance|banking"),
-        "is_education" -> ("job_fields", "giáo dục|đào tạo|giáo viên|education"),
-        "is_engineering" -> ("job_fields", "kỹ thuật|cơ khí|điện|xây dựng|engineer"),
-        "is_intern" -> ("position_level", "thực tập|intern|internship"),
-        "is_fresher" -> ("position_level", "fresher|mới ra trường|sinh viên mới"),
-        "is_junior" -> ("position_level", "junior"),
-        "is_staff" -> ("position_level", "nhân viên|chuyên viên|staff|employee"),
-        "is_senior" -> ("position_level", "senior|chuyên gia|chuyên viên cao cấp"),
-        "is_team_lead" -> ("position_level", "trưởng nhóm|team lead|leader|tech lead"),
-        "is_manager" -> ("position_level", "trưởng phòng|quản lý|giám đốc|manager|head|director"))
       // CAST(... AS DOUBLE): DuckDB types the 1.0 literal as DECIMAL, so its
       // SUM would come back DECIMAL while Spark's flag sum is DOUBLE.
-      val sumExprs = flags.map { case (name, (src, pat)) =>
-        s"  CAST(SUM(CASE WHEN regexp_matches(lower($src), '$pat') THEN 1.0 ELSE 0.0 END) AS DOUBLE) AS $name"
-      }.mkString(",\n")
+      val sumExprs = JobFeatures.flags.map(f =>
+        s"  CAST(SUM(${JobFeatures.flagSql(f)}) AS DOUBLE) AS ${f.name}").mkString(",\n")
       s"""WITH $W,
          |labeled AS (
          |  SELECT *,
@@ -121,11 +104,8 @@ object JobEtlQueries {
     }) { (spark, dir) =>
     import spark.implicits._
     val df = JobFeatures.withFlags(JobFeatures.withLabels(cleanJobs(spark, dir)))
-    val flagCols = Seq("is_hcm", "is_hanoi", "is_danang", "is_it", "is_sales",
-      "is_finance", "is_education", "is_engineering", "is_intern", "is_fresher",
-      "is_junior", "is_staff", "is_senior", "is_team_lead", "is_manager")
     df.agg(count(lit(1)).as("n_jobs"),
-      flagCols.map(c => sum(col(c)).as(c)): _*)
+      JobFeatures.flags.map(f => sum(col(f.name)).as(f.name)): _*)
   }
 
   /** F11 split + F12 explode + F13 trim + F14 length filter + A2/A9
@@ -158,7 +138,7 @@ object JobEtlQueries {
     s"""sk0 AS (SELECT unnest(string_split(lower(skills), ',')) AS skill0,
        |          salary_avg, exp_avg_year, city_clean FROM etl),
        |sk AS (SELECT trim(skill0) AS skill, salary_avg, exp_avg_year,
-       |         CASE WHEN regexp_matches(lower(city_clean), 'hồ chí minh|hà nội|hcm|ha noi') THEN 1.0 ELSE 0.0 END AS is_big_city
+       |         ${JobFeatures.flagSql(JobFeatures.bigCity)} AS ${JobFeatures.bigCity.name}
        |       FROM sk0 WHERE trim(skill0) <> '' AND length(trim(skill0)) > 1),
        |agg AS (
        |  SELECT skill, COUNT(*) AS job_count,

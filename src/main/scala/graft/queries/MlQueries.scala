@@ -21,12 +21,16 @@ import org.apache.spark.sql.functions._
   */
 object MlQueries {
 
-  private val flagCols = Array("is_hcm", "is_hanoi", "is_danang", "is_it",
-    "is_sales", "is_finance", "is_education", "is_engineering", "is_intern",
-    "is_fresher", "is_junior", "is_staff", "is_senior", "is_team_lead",
-    "is_manager")
   /** 16 features: exp + 15 flags (train_random_forest.py:150-170 shape). */
-  val jobFeatureCols: Array[String] = "exp_final" +: flagCols
+  val jobFeatureCols: Array[String] =
+    ("exp_final" +: JobFeatures.flags.map(_.name)).toArray
+
+  /** The oracles' flag columns over `postings`, one per line: every
+    * [[JobFeatures.flags]] entry a frozen model's `features` reads, in
+    * table order. */
+  private def flagsSql(features: Seq[String]): String =
+    JobFeatures.flags.filter(f => features.contains(f.name)).map(f =>
+      s"    CAST(${JobFeatures.flagSql(f)} AS DOUBLE) AS ${f.name}").mkString(",\n")
 
   def featurizedJobs(spark: SparkSession, dir: String): DataFrame =
     JobFeatures.withFlags(JobFeatures.withLabels(
@@ -350,8 +354,9 @@ object MlQueries {
     * the persisted model → assemble the 16 features → predict → clamp
     * to the position tier → IT bonus) with the trained forest's trees
     * frozen as published constants ([[graft.ml.FrozenSalaryRf]],
-    * provenance in [[graft.ml.FreezeRf]]) — jq08's frozen-centroid
-    * move applied to the RF. mq03/mq05 stay rows-only because TRAINING
+    * provenance in [[graft.ml.FreezeRf]], tree walk and SQL twin in
+    * [[graft.ml.TreeKernel]]) — jq08's frozen-centroid move applied
+    * to the RF. mq03/mq05 stay rows-only because TRAINING
     * outcomes aren't SQL-expressible; INFERENCE over published
     * parameters is exactly specified IEEE arithmetic, so the oracle
     * replays every tree walk, the forest average, the tier clamp, and
@@ -362,43 +367,14 @@ object MlQueries {
     * (the registry's load happens once at plan build, as constants). */
   val mq13FrozenRfInference: QueryDef = QueryDef.sqlChecked(
     "mq13_frozen_rf_inference", {
-      val flags = Seq(
-        "is_hcm" -> ("city_clean", "hồ chí minh|hcm"),
-        "is_hanoi" -> ("city_clean", "hà nội|ha noi|hanoi"),
-        "is_danang" -> ("city_clean", "đà nẵng|da nang"),
-        "is_it" -> ("job_fields", "it|phần mềm|developer|lập trình|data|ai|software"),
-        "is_sales" -> ("job_fields", "bán hàng|kinh doanh|sales|tiếp thị|marketing"),
-        "is_finance" -> ("job_fields", "tài chính|ngân hàng|kế toán|finance|banking"),
-        "is_education" -> ("job_fields", "giáo dục|đào tạo|giáo viên|education"),
-        "is_engineering" -> ("job_fields", "kỹ thuật|cơ khí|điện|xây dựng|engineer"),
-        "is_intern" -> ("position_level", "thực tập|intern|internship"),
-        "is_fresher" -> ("position_level", "fresher|mới ra trường|sinh viên mới"),
-        "is_junior" -> ("position_level", "junior"),
-        "is_staff" -> ("position_level", "nhân viên|chuyên viên|staff|employee"),
-        "is_senior" -> ("position_level", "senior|chuyên gia|chuyên viên cao cấp"),
-        "is_team_lead" -> ("position_level", "trưởng nhóm|team lead|leader|tech lead"),
-        "is_manager" -> ("position_level", "trưởng phòng|quản lý|giám đốc|manager|head|director"))
-      val flagExprs = flags.map { case (nm, (src, pat)) =>
-        s"    CAST(CASE WHEN regexp_matches(lower($src), '$pat') THEN 1.0 ELSE 0.0 END AS DOUBLE) AS $nm"
-      }.mkString(",\n")
-      val featIdx: Int => String =
-        i => graft.ml.FrozenSalaryRf.featureNames(i)
-      s"""WITH ${graft.etl.JobsFixture.duckParsedSql},
-         |labeled AS (
-         |  SELECT *,
-         |    coalesce(salary_avg, (salary_min + salary_max) / 2, 0.0) AS salary_final,
-         |    coalesce(exp_avg_year, exp_min_year, 0.0) AS exp_final
-         |  FROM etl),
-         |postings AS (
-         |  SELECT * FROM labeled
-         |  WHERE salary_final > 0 AND salary_final <= 200
-         |    AND exp_final >= 0 AND exp_final <= 30),
+      s"""WITH ${JobsFixture.duckParsedSql},
+         |${JobsFixture.duckLabeledSql},
          |feats AS (
          |  SELECT job_id, exp_final,
-         |$flagExprs
+         |${flagsSql(graft.ml.FrozenSalaryRf.featureNames)}
          |  FROM postings)
          |SELECT job_id,
-         |  ${graft.ml.FrozenSalaryRf.predictionSql(featIdx, nm => nm)} AS pred_salary
+         |  ${graft.ml.FrozenSalaryRf.predictionSql(graft.ml.FrozenSalaryRf.featureNames, nm => nm)} AS pred_salary
          |FROM feats""".stripMargin
     }) { (spark, dir) =>
     import spark.implicits._
@@ -430,16 +406,8 @@ object MlQueries {
       import graft.ml.FrozenAttractivenessLr
       val margin = FrozenAttractivenessLr.marginSql(
         "salary_final", "exp_final", "city_clean", "position_level")
-      s"""WITH ${graft.etl.JobsFixture.duckParsedSql},
-         |labeled AS (
-         |  SELECT *,
-         |    coalesce(salary_avg, (salary_min + salary_max) / 2, 0.0) AS salary_final,
-         |    coalesce(exp_avg_year, exp_min_year, 0.0) AS exp_final
-         |  FROM etl),
-         |postings AS (
-         |  SELECT * FROM labeled
-         |  WHERE salary_final > 0 AND salary_final <= 200
-         |    AND exp_final >= 0 AND exp_final <= 30)
+      s"""WITH ${JobsFixture.duckParsedSql},
+         |${JobsFixture.duckLabeledSql}
          |SELECT job_id,
          |  $margin AS margin,
          |  ${FrozenAttractivenessLr.classSql(margin)} AS is_hot_pred
@@ -472,46 +440,17 @@ object MlQueries {
   val mq15FrozenKmeansAssign: QueryDef = QueryDef.sqlChecked(
     "mq15_frozen_kmeans_assign", {
       import graft.ml.FrozenJobKmeans
-      // the same flag derivations mq13's oracle replays (one source of
-      // truth for the regex table would be nicer, but mq13 documents
-      // why the SQL is inlined: the oracle must be self-contained)
-      val flags = Seq(
-        "is_hcm" -> ("city_clean", "hồ chí minh|hcm"),
-        "is_hanoi" -> ("city_clean", "hà nội|ha noi|hanoi"),
-        "is_danang" -> ("city_clean", "đà nẵng|da nang"),
-        "is_it" -> ("job_fields", "it|phần mềm|developer|lập trình|data|ai|software"),
-        "is_sales" -> ("job_fields", "bán hàng|kinh doanh|sales|tiếp thị|marketing"),
-        "is_finance" -> ("job_fields", "tài chính|ngân hàng|kế toán|finance|banking"),
-        "is_education" -> ("job_fields", "giáo dục|đào tạo|giáo viên|education"),
-        "is_engineering" -> ("job_fields", "kỹ thuật|cơ khí|điện|xây dựng|engineer"),
-        "is_intern" -> ("position_level", "thực tập|intern|internship"),
-        "is_fresher" -> ("position_level", "fresher|mới ra trường|sinh viên mới"),
-        "is_junior" -> ("position_level", "junior"),
-        "is_senior" -> ("position_level", "senior|chuyên gia|chuyên viên cao cấp"),
-        "is_team_lead" -> ("position_level", "trưởng nhóm|team lead|leader|tech lead"),
-        "is_manager" -> ("position_level", "trưởng phòng|quản lý|giám đốc|manager|head|director"))
-      val flagExprs = flags.map { case (nm, (src, pat)) =>
-        s"    CAST(CASE WHEN regexp_matches(lower($src), '$pat') THEN 1.0 ELSE 0.0 END AS DOUBLE) AS $nm"
-      }.mkString(",\n")
       val scaledExprs = FrozenJobKmeans.featureNames.indices.map(i =>
         s"    ${FrozenJobKmeans.scaledSql(i, FrozenJobKmeans.featureNames(i))} AS sf$i")
         .mkString(",\n")
       val distExprs = (0 until FrozenJobKmeans.k).map(c =>
         s"    ${FrozenJobKmeans.distSql(c, i => s"sf$i")} AS d$c")
         .mkString(",\n")
-      s"""WITH ${graft.etl.JobsFixture.duckParsedSql},
-         |labeled AS (
-         |  SELECT *,
-         |    coalesce(salary_avg, (salary_min + salary_max) / 2, 0.0) AS salary_final,
-         |    coalesce(exp_avg_year, exp_min_year, 0.0) AS exp_final
-         |  FROM etl),
-         |postings AS (
-         |  SELECT * FROM labeled
-         |  WHERE salary_final > 0 AND salary_final <= 200
-         |    AND exp_final >= 0 AND exp_final <= 30),
+      s"""WITH ${JobsFixture.duckParsedSql},
+         |${JobsFixture.duckLabeledSql},
          |feats AS (
          |  SELECT job_id, salary_final, exp_final,
-         |$flagExprs
+         |${flagsSql(FrozenJobKmeans.featureNames)}
          |  FROM postings),
          |scaled AS (
          |  SELECT job_id,
@@ -576,16 +515,8 @@ object MlQueries {
       import graft.ml.FrozenJobTfidf
       val text = "concat_ws(' ', job_title, job_fields, skills)"
       s"""${FrozenJobTfidf.murmurMacrosSql}
-         |WITH ${graft.etl.JobsFixture.duckParsedSql},
-         |labeled AS (
-         |  SELECT *,
-         |    coalesce(salary_avg, (salary_min + salary_max) / 2, 0.0) AS salary_final,
-         |    coalesce(exp_avg_year, exp_min_year, 0.0) AS exp_final
-         |  FROM etl),
-         |postings AS (
-         |  SELECT * FROM labeled
-         |  WHERE salary_final > 0 AND salary_final <= 200
-         |    AND exp_final >= 0 AND exp_final <= 30),
+         |WITH ${JobsFixture.duckParsedSql},
+         |${JobsFixture.duckLabeledSql},
          |docs AS MATERIALIZED (
          |  SELECT job_id,
          |  ${FrozenJobTfidf.cleanTokensSql(text)} AS ctoks
@@ -648,8 +579,9 @@ object MlQueries {
     * model, the hot-score gradient-boosted ensemble mq04 trains
     * (train_gbt.py:147-175; maxIter=50, maxDepth=5, seed=42) — with
     * the trained trees AND boosting weights frozen as published
-    * constants ([[graft.ml.FrozenSkillGbt]], provenance + exact
-    * replay-vs-transform validation in [[graft.ml.FreezeGbt]]). mq13's
+    * constants ([[graft.ml.FrozenSkillGbt]], provenance + the
+    * replay-vs-transform gate in [[graft.ml.FreezeGbt]], tree walk and
+    * SQL twin in [[graft.ml.TreeKernel]], shared with mq13). mq13's
     * forest AVERAGE becomes a boosting-WEIGHTED left-associated sum —
     * still pure comparisons and IEEE adds/multiplies, so the oracle
     * replays the whole ensemble as CASE arithmetic over the per-skill

@@ -1788,10 +1788,12 @@ object SimilarityQueries {
         i += 1
       }
     }
+    // davg: the self-join's shuffle order varies run to run, and a
+    // double avg would carry that order into the last bits
     pairs.agg(
       count(lit(1)).as("n_pairs"),
-      avg($"ac_raw").as("avg_abs_cos_raw"),
-      avg($"ac_white").as("avg_abs_cos_white"),
+      davg($"ac_raw").as("avg_abs_cos_raw"),
+      davg($"ac_white").as("avg_abs_cos_white"),
       round(lit(offdiagShare(cov)), 6).as("cov_offdiag_share_raw"),
       round(lit(offdiagShare(covW)), 6).as("cov_offdiag_share_white"))
   }

@@ -127,67 +127,19 @@ object KnnGraph {
     out.toSeq
   }
 
-  /** NN-Descent to CONVERGENCE — Dong et al. 2011's early-termination
-    * rule as a build policy: run tightening rounds until the fraction
-    * of per-node neighbor-list entries that CHANGED in the last round
-    * drops below `delta` (or `maxRounds` caps it), and return every
-    * round built. This is the r14 scale finding made callable: a FIXED
-    * round count is an n-dependent knob wearing a constant's clothes —
-    * rounds that saturate a 2k fixture leave a 200k corpus at a
-    * fraction of its reachable recall (COVERAGE.md "The deep arms":
-    * recall ~doubles per round at 200k, rounds 2/4/6 →
-    * 0.016/0.055/0.125), and NN-Descent's convergence horizon is
-    * ~log n on structure-free data. The change fraction is the paper's
-    * own monotone-progress measure; each check costs one index-sized
-    * anti-join + count between consecutive persisted rounds.
-    *
-    * Durability and determinism are [[buildDurable]]'s: rounds extend
-    * the same workDir one at a time with `_SUCCESS` resume, fractions
-    * recompute identically from persisted rounds, so a resumed run
-    * stops at the SAME round (KnnGraphBuildSpec). 100 TB: the stop rule
-    * replaces "guess a constant, over- or under-build by 4 doublings"
-    * with one bounded count per round — the round itself (a
-    * k²-candidate shuffle + index-sized write) dwarfs the check.
-    *
-    * CAVEAT (measured, COVERAGE.md "The converged arm"): this
-    * targets the kNN graph's OWN fixpoint — the right goal for the
-    * exact-graph consumers (refine seeds, dedup, sq22-style serving).
-    * The α-PRUNED serving artifact is different: at a fixed degree/L
-    * budget its recall peaked at depth ~6 and FELL by depth 12 on the
-    * 200k replica (0.125 → 0.070, exact-head confirmed), because a
-    * converged graph's 2-hop candidate pool is tight and local, and
-    * the prune then starves the long edges cold-entry beams need.
-    * Building the composed store deeper must pair with a wider
-    * candidate pool / degree (DiskANN generates prune candidates from
-    * BEAM SEARCHES for exactly this reason) — or stop on a
-    * served-recall plateau rather than graph convergence. */
-  def buildConverged(vecs: DataFrame, k: Int, maxRounds: Int,
-      delta: Double, workDir: String): Seq[DataFrame] = {
-    import vecs.sparkSession.implicits._
-    require(maxRounds >= 1, s"maxRounds must be ≥ 1, got $maxRounds")
-    require(delta > 0 && delta < 1, s"delta must be in (0,1), got $delta")
-    var rounds = buildDurable(vecs, k, 1, workDir)
-    var r = 1
-    var frac = 1.0
-    while (r < maxRounds && frac >= delta) {
-      r += 1
-      rounds = buildDurable(vecs, k, r, workDir)
-      // the paper's progress measure: entries of round r's lists that
-      // were not in round r-1's — one anti-join over two k·n frames
-      val changed = rounds(r).select($"src", $"nbr")
-        .join(rounds(r - 1).select($"src", $"nbr"),
-          Seq("src", "nbr"), "left_anti").count()
-      frac = changed.toDouble / rounds(r).count()
-    }
-    rounds
-  }
-
   /** BUILD-TO-SERVED-RECALL — the stop policy the COMPOSED serving
-    * store needs (r14's measured finding made callable, closing the
-    * [[buildConverged]] caveat): build depth is an n-dependent knob
-    * (recall ~doubles per NN-Descent round at 200k: 0.016/0.055/0.125
-    * at rounds 2/4/6), and the δ-stop targets the EXACT graph's
-    * fixpoint — the wrong objective for the α-pruned artifact. This
+    * store needs (r14's measured finding made callable): build depth is
+    * an n-dependent knob (recall ~doubles per NN-Descent round at 200k:
+    * 0.016/0.055/0.125 at rounds 2/4/6), and Dong et al.'s δ-stop (stop
+    * when the fraction of changed neighbor-list entries drops below δ)
+    * targets the EXACT graph's fixpoint — the wrong objective for the
+    * α-pruned artifact. Measured (COVERAGE.md "The converged arm"): at
+    * a fixed degree/L budget the pruned store's recall peaked at depth
+    * ~6 and FELL by depth 12 on the 200k replica (0.125 → 0.070, exact
+    * head confirmed), because a converged graph's 2-hop candidate pool
+    * is tight and local, and the prune then starves the long edges
+    * cold-entry beams need (DiskANN generates prune candidates from
+    * BEAM SEARCHES for exactly this reason). This
     * policy stops on the quantity a deployment actually ships: every
     * `step` build rounds it PRUNES the current graph (the real recipe —
     * [[searchCandidates]] pool, durable [[robustPrune]] at the serving

@@ -4,9 +4,9 @@ import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The served-recall stop policy (r14 verdict #1): build depth is an
-  * n-dependent knob ([[KnnGraph.buildConverged]]'s caveat — the δ-stop
-  * targets the EXACT graph's fixpoint, the wrong objective for the
-  * α-pruned serving artifact), so [[KnnGraph.buildToServedRecall]]
+  * n-dependent knob (a δ-stop on the changed-edge fraction targets the
+  * EXACT graph's fixpoint, the wrong objective for the α-pruned
+  * serving artifact), so [[KnnGraph.buildToServedRecall]]
   * stops on the quantity a deployment ships: recall of a held-out
   * probe set served over the PRUNED edges. These tests pin the
   * policy's contract — what it returns, that it is deterministic and

@@ -119,31 +119,4 @@ class KnnGraphBuildSpec extends AnyFunSuite {
     }
     vecs.unpersist()
   }
-
-  test("buildConverged stops when the changed-edge fraction flattens, identically across resume") {
-    import spark.implicits._
-    val vecs = corpus().filter($"vec_id" < 256).cache()
-    val wd = java.nio.file.Files.createTempDirectory("graft-knng-conv").toString
-    val delta = 0.05
-    val rounds = KnnGraph.buildConverged(vecs, K, maxRounds = 10, delta, wd)
-    val stopped = rounds.length - 1
-    assert(stopped < 10, s"fixture did not converge inside the cap")
-    assert(stopped >= 2, "convergence cannot be declared before one measured transition")
-    // the stopping transition is genuinely below delta — recomputed here
-    // from the persisted rounds (deterministic, so resume must agree)
-    def changedFrac(r: Int): Double =
-      rounds(r).select($"src", $"nbr")
-        .join(rounds(r - 1).select($"src", $"nbr"), Seq("src", "nbr"), "left_anti")
-        .count().toDouble / rounds(r).count()
-    assert(changedFrac(stopped) < delta)
-    assert(changedFrac(stopped - 1) >= delta,
-      "stopped a round later than the rule demands")
-    // a resumed run reloads the persisted rounds and stops at the SAME depth
-    val again = KnnGraph.buildConverged(vecs, K, maxRounds = 10, delta, wd)
-    assert(again.length == rounds.length)
-    // and the converged graph IS the fixed-depth build of that depth
-    val fixed = KnnGraph.buildDurable(vecs, K, stopped, wd).last
-    assert(edges(rounds.last) == edges(fixed))
-    vecs.unpersist()
-  }
 }
