@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.functions.StableUuid
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,6 +14,10 @@ import org.apache.spark.sql.functions._
   * than one branch is projected once as a column before the cascade, so
   * each regex runs once per row and the stage's generated methods stay
   * under HotSpot's 8,000-byte JIT limit (EtlCodegenSizeSpec guards it).
+  * Generated source must not change from batch to batch: no per-batch
+  * seed or literal goes into the code, or every streamed micro-batch
+  * misses Spark's codegen cache and is compiled again
+  * (StreamingCodegenReuseSpec guards it).
   */
 object JobEtl {
 
@@ -22,7 +27,17 @@ object JobEtl {
     * @param deterministicId when true, `id` is a content hash
     *   (sha2 of the natural key) instead of `uuid()` — golden tests and
     *   oracle checks need determinism; production streaming wants uuid()
-    *   (reference job_streaming.py:153).
+    *   (reference job_streaming.py:153), here [[StableUuid]], whose
+    *   per-batch seed stays out of the generated code.
+    *
+    * The null-title filter comes last, above the nondeterministic `id`
+    * projection, which the optimizer does not push a filter through.
+    * Placed first, it is pushed under a JSON parse such as
+    * `StreamingEtl.parseJson`'s and parses every line a second time
+    * (`from_json(value).job_title` in the filter, then `from_json(value)`
+    * in the projection); above the id it reads the parsed column. The
+    * deterministic plan has no such barrier, so there the filter is
+    * pushed down as before.
     */
   def transform(df: DataFrame, deterministicId: Boolean = false): DataFrame = {
     val clean = lower(col("salary"))
@@ -33,7 +48,6 @@ object JobEtl {
     // it into every branch of toMillions
     val (usd, rawMin, rawMax) = ("_etl_salary_usd", "_etl_salary_raw_min", "_etl_salary_raw_max")
     val withCols = df
-      .filter(col("job_title").isNotNull)
       .withColumn("event_time", to_timestamp(col("event_time")))
       .withColumns(Map(
         usd -> SalaryParser.isUsd(clean),
@@ -50,11 +64,11 @@ object JobEtl {
       .withColumn("city",
         when(col("city") === "" || col("city").isNull, lit("Unknown"))
           .otherwise(col("city")))
-    if (deterministicId)
-      withCols.withColumn("id",
+    val id =
+      if (deterministicId)
         sha2(concat_ws("", col("job_title"), col("city"), col("salary"),
-          col("experience"), col("event_time").cast("string")), 256))
-    else
-      withCols.withColumn("id", expr("uuid()"))
+          col("experience"), col("event_time").cast("string")), 256)
+      else StableUuid.uuid()
+    withCols.withColumn("id", id).filter(col("job_title").isNotNull)
   }
 }

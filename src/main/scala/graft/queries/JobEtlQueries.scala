@@ -91,16 +91,10 @@ object JobEtlQueries {
       val sumExprs = JobFeatures.flags.map(f =>
         s"  CAST(SUM(${JobFeatures.flagSql(f)}) AS DOUBLE) AS ${f.name}").mkString(",\n")
       s"""WITH $W,
-         |labeled AS (
-         |  SELECT *,
-         |    coalesce(salary_avg, (salary_min + salary_max) / 2, 0.0) AS salary_final,
-         |    coalesce(exp_avg_year, exp_min_year, 0.0) AS exp_final
-         |  FROM etl)
+         |${JobsFixture.duckLabeledSql}
          |SELECT COUNT(*) AS n_jobs,
          |$sumExprs
-         |FROM labeled
-         |WHERE salary_final > 0 AND salary_final <= 200
-         |  AND exp_final >= 0 AND exp_final <= 30""".stripMargin
+         |FROM postings""".stripMargin
     }) { (spark, dir) =>
     import spark.implicits._
     val df = JobFeatures.withFlags(JobFeatures.withLabels(cleanJobs(spark, dir)))
@@ -219,15 +213,7 @@ object JobEtlQueries {
   val jq08ClusterStats: QueryDef = sqlChecked(
     "jq08_cluster_stats",
     s"""WITH $W,
-       |labeled AS (
-       |  SELECT job_id,
-       |    coalesce(salary_avg, (salary_min + salary_max) / 2, 0.0) AS salary_final,
-       |    coalesce(exp_avg_year, exp_min_year, 0.0) AS exp_final
-       |  FROM etl),
-       |postings AS (
-       |  SELECT * FROM labeled
-       |  WHERE salary_final > 0 AND salary_final <= 200
-       |    AND exp_final >= 0 AND exp_final <= 30),
+       |${JobsFixture.duckLabeledSql},
        |clusters AS (SELECT job_id, $sqlClusterCase AS cluster FROM postings)
        |SELECT c.cluster, COUNT(*) AS n_jobs,
        |  ${sqlDavg("p.salary_final")} AS avg_salary,

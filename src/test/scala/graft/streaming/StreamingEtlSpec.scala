@@ -53,6 +53,28 @@ class StreamingEtlSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
+  test("ids are non-null random v4 uuids, distinct across micro-batches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[String]
+    val query = StreamingEtl.transform(stream.toDF())
+      .writeStream.format("memory").queryName("id_sink")
+      .outputMode("append").start()
+    try {
+      for (b <- 1 to 3) {
+        stream.addData((1 to 4).map(i => jsonLine(s"Dev $b-$i", "Huế", "10 triệu", "2 năm")))
+        query.processAllAvailable()
+      }
+      val ids = spark.table("id_sink").select("id").as[String].collect()
+      assert(ids.length == 12)
+      ids.foreach { id =>
+        assert(id != null && id.length == 36, id)
+        assert(java.util.UUID.fromString(id).version() == 4, id)
+      }
+      assert(ids.distinct.length == ids.length, "an id repeats across batches")
+    } finally query.stop()
+  }
+
   test("file source → checkpointed parquet append sink is exactly-once across restarts") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-stream").toString

@@ -2,8 +2,7 @@ package org.apache.spark
 
 /** Test shim: block until every listener event posted so far has been
   * delivered, so a listener's counts are exact when a call returns.
-  * The bus is private[spark]; this is the one test file in its
-  * namespace. */
+  * The bus is private[spark]. */
 object ListenerBusDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
